@@ -378,35 +378,37 @@ object IndexBuilder {
     require(metas.forall(m => m.k1 == base.k1 && m.b == base.b &&
       m.docsPerShard == base.docsPerShard),
       "all parts must share k1/b/docsPerShard")
+    // read first: a positional-ness mix fails before outDir is written
+    val postingsIn = IndexFiles.postings(spark, dirs)
+    val positional = IndexFiles.isPositional(postingsIn)
     val (k1, b) = (base.k1, base.b)
     val dps = base.docsPerShard
     val P = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val tombstoneDf = tombstonePath.map(p => Tombstones.read(spark, p).persist())
 
-    val docsAll = spark.read.parquet(dirs.map(d => s"$d/docs.parquet"): _*)
+    val docsAll = IndexFiles.docs(spark, dirs)
     val docsOut = tombstoneDf match {
       case Some(ts) => docsAll.join(ts.select("docId"), Seq("docId"), "left_anti")
       case None => docsAll
     }
-    docsOut.write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs.parquet")
-
     // corpus stats over the SURVIVORS (with deletes, the parts' meta sums
-    // overstate the corpus; one narrow agg over the written docs table)
-    val (numDocs, totalTokens) =
-      if (tombstoneDf.isEmpty) (metas.map(_.numDocs).sum, metas.map(_.totalTokens).sum)
-      else {
-        val r = spark.read.parquet(s"$outDir/docs.parquet")
-          .agg(count(lit(1)), sum($"dlen".cast("long"))).head()
-        // sum() over zero rows is NULL — guard before getLong
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
+    // overstate the corpus), observed on the docs write above the anti
+    // join's exchange (sum/max are NULL only when no doc survives, which
+    // the require below rejects)
+    val docStats = new org.apache.spark.sql.Observation("compactDocs")
+    docsOut
+      .observe(docStats, count(lit(1)).as("numDocs"),
+        sum($"dlen".cast("long")).as("totalTokens"), max($"docId").as("maxDocId"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs.parquet")
+    val numDocs = docStats.get("numDocs").asInstanceOf[Long]
     require(numDocs > 0, "all documents are deleted — compaction would " +
       "produce an empty index (avgdl undefined); drop the index instead " +
       "of compacting it")
+    val totalTokens = docStats.get("totalTokens").asInstanceOf[Long]
     val avgdl = totalTokens.toDouble / numDocs
 
     if (tombstoneDf.isEmpty) {
-      spark.read.parquet(dirs.map(d => s"$d/dlens.parquet"): _*).as[ShardLens]
+      IndexFiles.dlens(spark, dirs).as[ShardLens]
         .groupByKey(_.shard)
         .mapGroups((_, it) => graft.query.Searcher.mergeLens(it))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dlens.parquet")
@@ -414,9 +416,8 @@ object IndexBuilder {
       // rebuild dlens from the filtered docs table: deleted slots stay 0
       // (never dereferenced — the docs are gone from every posting run too).
       // Shard extents span the ORIGINAL docId range (ids are not renumbered).
-      val bound = spark.read.parquet(s"$outDir/docs.parquet")
-        .agg(max($"docId")).as[Long].head() + 1
-      spark.read.parquet(s"$outDir/docs.parquet")
+      val bound = docStats.get("maxDocId").asInstanceOf[Long] + 1
+      IndexFiles.docs(spark, Seq(outDir))
         .select($"docId", $"dlen", (($"docId" / dps).cast("int")).as("shard"))
         .as[(Long, Int, Int)]
         .groupByKey(_._3)
@@ -446,14 +447,9 @@ object IndexBuilder {
           }
     }
 
-    val mergedLens = spark.read.parquet(s"$outDir/dlens.parquet").as[ShardLens]
-    val partSchemas = dirs.map(d =>
-      spark.read.parquet(s"$d/postings.parquet").columns.contains("posBytes"))
-    require(partSchemas.distinct.size == 1,
-      "cannot compact a mix of positional and non-positional parts")
-    val positional = partSchemas.head
-    if (!positional) {
-      spark.read.parquet(dirs.map(d => s"$d/postings.parquet"): _*).as[PostingSeg]
+    val mergedLens = IndexFiles.dlens(spark, Seq(outDir)).as[ShardLens]
+    val merged: DataFrame = if (!positional) {
+      postingsIn.as[PostingSeg]
         .unionByName(exclusionSegs)
         .groupByKey(_.shard)
         .cogroup(mergedLens.groupByKey(_.shard)) { (shard, segIt, lenIt) =>
@@ -474,16 +470,13 @@ object IndexBuilder {
               }
             }
           }
-        }
-        .repartitionByRange(P, $"term", $"shard")
-        .sortWithinPartitions("term", "shard")
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/postings.parquet")
+        }.toDF()
     } else {
       // positional merge: per-doc position lists are self-contained, so
       // posBytes concatenates in the same first-docId order the doc/tf
       // arrays are merged in (deletes force a decode→filter→re-encode of
       // the position stream instead of the byte concat)
-      spark.read.parquet(dirs.map(d => s"$d/postings.parquet"): _*).as[PostingSegP]
+      postingsIn.as[PostingSegP]
         .unionByName(exclusionSegs
           .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
         .groupByKey(_.shard)
@@ -552,23 +545,26 @@ object IndexBuilder {
               }
             }
           }
-        }
-        .repartitionByRange(P, $"term", $"shard")
-        .sortWithinPartitions("term", "shard")
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/postings.parquet")
+        }.toDF()
     }
+    // numSegments is observed ABOVE the range exchange: the range
+    // partitioner's sampling pass re-executes the cogroup below it, which
+    // would double-count an observation (or accumulator) placed there
+    val segObs = new org.apache.spark.sql.Observation("compactSegments")
+    merged
+      .repartitionByRange(P, $"term", $"shard")
+      .sortWithinPartitions("term", "shard")
+      .observe(segObs, count(lit(1)).as("numSegments"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/postings.parquet")
+    val numSegments = segObs.get("numSegments").asInstanceOf[Long]
 
     val dictObs = new org.apache.spark.sql.Observation("compactDict")
-    spark.read.parquet(s"$outDir/postings.parquet")
+    IndexFiles.postings(spark, Seq(outDir))
       .groupBy("term").agg(sum($"n".cast("long")).as("df"), sum($"sumTf").as("cf"))
       .observe(dictObs, count(lit(1)).as("numTerms"))
       .as[TermStat]
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict.parquet")
     val numTerms = dictObs.get("numTerms").asInstanceOf[Long]
-
-    // a plain count, NOT an accumulator: the range partitioner's sampling
-    // pass re-executes the cogroup and would double-count
-    val numSegments = spark.read.parquet(s"$outDir/postings.parquet").count()
     tombstoneDf.foreach(_.unpersist())
     val meta = IndexMeta(numDocs, totalTokens, avgdl, k1, b, base.docsPerShard,
       numTerms, numSegments, base.fingerprint)

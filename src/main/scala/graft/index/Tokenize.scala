@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * identical (extracting token-character runs == splitting on non-token runs
   * and dropping empties), but the JDK's negated-character-class matcher
   * (Pattern$CharPredicate.negate) collapses under executor-thread
-  * concurrency on this JVM (~60× measured slowdown at 32 threads, see
-  * tools/Probe), while the positive class runs at full speed.
+  * concurrency on this JVM (~60× measured slowdown at 32 threads), while
+  * the positive class runs at full speed.
   *
   * The JVM-side twin (`tokenize`) goes further: for ASCII input (every byte
   * < 0x80) a hand-rolled run scanner produces exactly the regex's output with

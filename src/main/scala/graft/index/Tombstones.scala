@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Document deletion via tombstones — the missing lifecycle third of
@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * the delete keys (keys+ids through the exchange, never content); the
   * tombstone artifact is (docId, shard) rows, which query-time grouping
   * turns into one delta-compressed exclusion list per candidate shard.
+  * Every read goes through [[IndexFiles]] with the fixed schema, and the
+  * tombstone total `applyDeletes` returns is observed during the merged
+  * write itself — no Spark job re-reads what was just written.
   */
 object Tombstones {
 
@@ -25,13 +28,14 @@ object Tombstones {
     * view (base + deltas) and MERGE the resulting docIds into the tombstone
     * parquet at `tombstonePath` (created if absent; duplicate deletes are
     * idempotent). Written via temp + atomic swap so a crash mid-write can
-    * never leave a torn tombstone file. Returns the total tombstoned count.
+    * never leave a torn tombstone file. Returns the total tombstoned count,
+    * observed on the merged write (no re-count of the written file).
     */
   def applyDeletes(spark: SparkSession, keys: DataFrame,
                    indexDirs: Seq[String], tombstonePath: String): Long = {
     import spark.implicits._
     val dps = IndexBuilder.readMeta(indexDirs.head).docsPerShard
-    val docs = spark.read.parquet(indexDirs.map(d => s"$d/docs.parquet"): _*)
+    val docs = IndexFiles.docs(spark, indexDirs)
     val resolved = docs
       .join(keys.select("repo", "path", "commit"),
         Seq("repo", "path", "commit"), "left_semi")
@@ -40,23 +44,27 @@ object Tombstones {
     val dst = new Path(tombstonePath)
     val fs = dst.getFileSystem(conf)
     val merged = currentPath(fs, tombstonePath) match {
-      case Some(cur) => resolved.unionByName(
-        spark.read.parquet(cur.toString).select("docId", "shard")).distinct()
+      case Some(cur) =>
+        resolved.unionByName(IndexFiles.tombstones(spark, cur.toString)).distinct()
       case None => resolved.distinct()
     }
+    // the total is observed above the distinct's exchange, so it counts
+    // exactly the rows written
+    val total = new Observation("tombstoneTotal")
     // crash-safe swap: the previous generation is RENAMED ASIDE (never
     // deleted before the new one lands), so at every instant either the
     // new file or the .bak generation exists — a crash between steps can
     // lose at most the in-flight batch of deletes, never the history
     val tmp = new Path(tombstonePath + ".tmp")
     val bak = new Path(tombstonePath + ".bak")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    merged.observe(total, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(bak)) fs.delete(bak, true)
     if (fs.exists(dst))
       require(fs.rename(dst, bak), s"tombstone swap: $dst -> $bak failed")
     require(fs.rename(tmp, dst), s"tombstone swap: $tmp -> $dst failed")
     fs.delete(bak, true)
-    spark.read.parquet(tombstonePath).count()
+    total.get("n").asInstanceOf[Long]
   }
 
   /** The live tombstone generation: the main file, or the .bak generation
@@ -78,7 +86,7 @@ object Tombstones {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(tombstonePath).getFileSystem(conf)
     currentPath(fs, tombstonePath) match {
-      case Some(p) => spark.read.parquet(p.toString)
+      case Some(p) => IndexFiles.tombstones(spark, p.toString)
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Int)].toDF("docId", "shard")

@@ -751,8 +751,10 @@ object BoolQuery {
     * pointwise MAX equals `upperBound` for every leaf-ceiling assignment
     * (up to float reorder — callers inflate exactly as for [[boundWeights]]),
     * or None when the set would exceed [[MaxBoundForms]] (deep DisMax
-    * nesting) or the tree holds unexpanded multi-term leaves. A DisMax-free
-    * tree yields the singleton [[boundWeights]] form.
+    * nesting). An unexpanded multi-term leaf (Wild/Fuzzy) is not a None
+    * case: it throws IllegalStateException, like every evaluator —
+    * [[rewriteMultiTerm]] must run first. A DisMax-free tree yields the
+    * singleton [[boundWeights]] form.
     */
   def boundWeightsMax(q: BoolQ): Option[Vector[(Map[String, Double], Double)]] = {
     type Form = (Map[String, Double], Double)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 import graft._
-import graft.index.{Codec, IndexBuilder, IndexMeta, Tokenize}
+import graft.index.{Codec, IndexBuilder, IndexFiles, IndexMeta, Tokenize, Tombstones}
 
 /** Top-k conjunctive (AND) BM25 search over the compressed posting index.
   *
@@ -63,20 +63,14 @@ class Searcher(spark: SparkSession, indexDir: String,
   // stored blockMaxTfn is reusable as-is only when no deltas shift avgdl
   private val needReBound = deltaDirs.nonEmpty
 
-  // base and deltas must agree on positional-ness: a mixed-schema union read
-  // would either deserialize null posBytes (executor NPE in decodePositions)
-  // or mis-infer the schema, depending on which files win inference
-  if (deltaDirs.nonEmpty) {
-    val posByDir = allDirs.map(d =>
-      d -> spark.read.parquet(s"$d/postings.parquet").columns.contains("posBytes"))
-    require(posByDir.map(_._2).distinct.size == 1,
-      s"base and delta indexes disagree on positional-ness: $posByDir")
-  }
-  private val postings =
-    spark.read.parquet(allDirs.map(d => s"$d/postings.parquet"): _*)
-  private val dlens = spark.read.parquet(allDirs.map(d => s"$d/dlens.parquet"): _*)
-  private lazy val docs = spark.read.parquet(allDirs.map(d => s"$d/docs.parquet"): _*)
-  private lazy val dict = spark.read.parquet(allDirs.map(d => s"$d/dict.parquet"): _*)
+  // the index tables are read with their fixed schemas (IndexFiles), so
+  // opening a Searcher launches no Spark job, whatever the number of delta
+  // dirs; base and deltas must agree on positional-ness
+  private val postings = IndexFiles.postings(spark, allDirs)
+  private val positional = IndexFiles.isPositional(postings)
+  private val dlens = IndexFiles.dlens(spark, allDirs)
+  private lazy val docs = IndexFiles.docs(spark, allDirs)
+  private lazy val dict = IndexFiles.dict(spark, allDirs)
 
   /** Dictionary with df summed over base+deltas — the input every expansion
     * path (prefix/wildcard/regex/range/fuzzy/suggest) ranks on. With a
@@ -132,7 +126,9 @@ class Searcher(spark: SparkSession, indexDir: String,
     }
 
   /** Tombstoned (deleted) docs — parquet of (docId, shard) written by
-    * `Tombstones.applyDeletes`. Lucene deletion semantics: deleted docs are
+    * `Tombstones.applyDeletes`, read through `Tombstones.read` so a swap
+    * interrupted between its two renames serves the .bak generation.
+    * Lucene deletion semantics: deleted docs are
     * excluded from every query path, but df/avgdl remain those of the full
     * corpus until a compaction physically removes the docs and recomputes
     * statistics (exactly Lucene's docFreq-includes-deletes behavior).
@@ -141,7 +137,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * bounds (admissible — deletion only removes postings); compaction
     * restores the tight build-time bounds.
     */
-  private lazy val tombstoneDf = tombstones.map(p => spark.read.parquet(p))
+  private lazy val tombstoneDf = tombstones.map(Tombstones.read(spark, _))
 
   /** One exclusion segment per candidate shard, carrying the shard's sorted
     * deleted docIds through the cogroup under [[Searcher.DeletedTerm]].
@@ -471,7 +467,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val ex = exToks.head
     val tokenSeq = Tokenize.tokenize(phrase).toSeq
     if (tokenSeq.isEmpty) return spark.emptyDataset[Hit]
-    require(postings.columns.contains("posBytes"),
+    require(positional,
       "span-not search requires a positional index (IndexConfig(positions = true))")
     val terms = tokenSeq.distinct.sorted
     val info = lookupTerms((terms :+ ex).distinct)
@@ -514,7 +510,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val tokenSeq = Tokenize.tokenize(phrase).toSeq
     if (tokenSeq.isEmpty || maxEnd < tokenSeq.length)
       return spark.emptyDataset[Hit]
-    require(postings.columns.contains("posBytes"),
+    require(positional,
       "phrase search requires a positional index (IndexConfig(positions = true))")
     val terms = tokenSeq.distinct.sorted
     val info = lookupTerms(terms)
@@ -565,7 +561,7 @@ class Searcher(spark: SparkSession, indexDir: String,
       slots.map(_.flatMap(t => Tokenize.tokenize(t)).distinct.sorted)
     require(slots.nonEmpty && slotTerms.forall(_.nonEmpty),
       s"every multi-phrase slot needs at least one token: $slots")
-    require(postings.columns.contains("posBytes"),
+    require(positional,
       "multi-phrase search requires a positional index (IndexConfig(positions = true))")
     val allTerms = slotTerms.flatten.distinct.sorted
     val info = lookupTerms(allTerms)
@@ -658,7 +654,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val terms = seq.distinct.sorted
     if (terms.isEmpty || window < (if (ordered) seq.length else terms.length))
       return spark.emptyDataset[Hit]
-    require(postings.columns.contains("posBytes"),
+    require(positional,
       "proximity search requires a positional index (IndexConfig(positions = true))")
     val info = lookupTerms(terms)
     if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
@@ -841,7 +837,7 @@ class Searcher(spark: SparkSession, indexDir: String,
                                 required: Seq[String],
                                 idfByTerm: Map[String, Double],
                                 candShards: Seq[Int]): Dataset[Hit] = {
-    require(postings.columns.contains("posBytes"),
+    require(positional,
       "phrase leaves in a boolean query require a positional index " +
         "(IndexConfig(positions = true))")
     val segsC = postings.filter($"term".isin(live: _*) &&

@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft._
-import graft.index.{Codec, IndexBuilder, IndexConfig, Metrics, Tokenize}
+import graft.index.{Codec, IndexBuilder, IndexConfig, IndexFiles, Metrics, Tokenize}
 
 /** Incremental index ingest via Structured Streaming: new corpus files
   * arriving in a directory are indexed per micro-batch into self-contained
@@ -54,6 +54,11 @@ object IncrementalIndexer {
     * index). Micro-batches are small by construction, so batch-local
     * operations (a window for in-batch docIds, groupBy encode) are fine here
     * — the petabyte-scale path is the batch `IndexBuilder`.
+    *
+    * The commit counts of `meta.json` are observed during the writes that
+    * produce the tables (numDocs/totalTokens on the docs write, numSegments
+    * on the postings write, numTerms on the dict write), each above every
+    * exchange of its plan, so no job re-reads a table to count it.
     */
   def indexBatch(spark: SparkSession, batch: DataFrame, batchDir: String,
                  firstDocId: Long, cfg: IndexConfig): IndexMetaLike = {
@@ -68,11 +73,14 @@ object IncrementalIndexer {
       .withColumn("dlen", size(Tokenize.termsCol(col("content"))).cast("int"))
       .persist()
 
+    val docStats = new Observation("deltaDocs")
     withId.select("docId", "repo", "path", "commit", "lang", "dlen", "sha256")
+      .observe(docStats, count(lit(1)).as("numDocs"),
+        sum($"dlen".cast("long")).as("totalTokens"))
       .write.mode("overwrite").parquet(s"$batchDir/docs.parquet")
 
-    val numDocs = withId.count()
-    val totalTokens = withId.agg(sum($"dlen".cast("long"))).as[Long].head()
+    val numDocs = docStats.get("numDocs").asInstanceOf[Long]
+    val totalTokens = docStats.get("totalTokens").asInstanceOf[Long]
     val globalEnd = firstDocId + numDocs
 
     withId.select($"docId", $"dlen", (($"docId" / dps).cast("int")).as("shard"))
@@ -89,6 +97,7 @@ object IncrementalIndexer {
 
     val (k1, b) = (cfg.k1, cfg.b)
     val avgdl = totalTokens.toDouble / math.max(numDocs, 1)
+    val segStats = new Observation("deltaSegments")
     if (!cfg.positions) {
       withId
         .select($"docId", (($"docId" / dps).cast("int")).as("shard"), $"dlen",
@@ -105,6 +114,7 @@ object IncrementalIndexer {
           val la = rows.map(_._4)
           Codec.makeSeg(term, shard, da, fa, la, k1, b, avgdl)
         }
+        .observe(segStats, count(lit(1)).as("numSegments"))
         .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
     } else {
       // positional deltas: ordinals via posexplode, per-(term, doc) ascending
@@ -128,17 +138,20 @@ object IncrementalIndexer {
           Codec.makeSegP(term, shard, da, fa, la, k1, b, avgdl,
             Codec.encodePositions(ps))
         }
+        .observe(segStats, count(lit(1)).as("numSegments"))
         .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
     }
 
-    spark.read.parquet(s"$batchDir/postings.parquet")
+    val dictStats = new Observation("deltaDict")
+    IndexFiles.postings(spark, Seq(batchDir))
       .groupBy("term").agg(sum($"n".cast("long")).as("df"), sum($"sumTf").as("cf"))
+      .observe(dictStats, count(lit(1)).as("numTerms"))
       .as[TermStat]
       .write.mode("overwrite").parquet(s"$batchDir/dict.parquet")
     withId.unpersist()
 
-    val numTerms = spark.read.parquet(s"$batchDir/dict.parquet").count()
-    val numSegments = spark.read.parquet(s"$batchDir/postings.parquet").count()
+    val numTerms = dictStats.get("numTerms").asInstanceOf[Long]
+    val numSegments = segStats.get("numSegments").asInstanceOf[Long]
     val elapsedMs = (System.nanoTime() - t0) / 1000000
     Metrics.writeJson(s"$batchDir/manifests/batch.json",
       Seq(PartitionManifest("delta", 0, numDocs, totalTokens, 0, "", elapsedMs)))

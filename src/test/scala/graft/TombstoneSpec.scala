@@ -64,6 +64,28 @@ class TombstoneSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("a swap interrupted between its renames: queries serve the .bak generation") {
+    // the state a crash leaves after the live file was renamed aside and
+    // before the new generation landed: only `<path>.bak` exists
+    val path = s"${TestSpark.workDir}/tombstones_swap.parquet"
+    val keys = spark.read.parquet(s"$indexDir/docs.parquet")
+      .filter($"docId" % 5 === 0).select("repo", "path", "commit")
+    Tombstones.applyDeletes(spark, keys, Seq(indexDir), path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
+      new org.apache.hadoop.fs.Path(path + ".bak")))
+    val s = new Searcher(spark, indexDir, tombstones = Some(path))
+    val q = "import def"
+    val and = s.search(q, 10).collect().map(h => (h.docId, h.score))
+    assert(and.toSeq == oracleMinus(OracleBm25.topK(files, q, 10 + deletedIds.size), 10).toSeq)
+    val qOr = "import zzqx_nothing util_7"
+    val or = s.searchOr(qOr, 10).collect().map(h => (h.docId, h.score))
+    assert(or.toSeq ==
+      oracleMinus(OracleBm25.topKOr(files, qOr, 10 + deletedIds.size), 10).toSeq)
+    assert((and ++ or).forall(h => !deletedIds(h._1)))
+  }
+
   test("filtered (where) search excludes tombstoned docs") {
     val q = "import def"
     val pred = col("lang") === "scala"
