@@ -800,8 +800,9 @@ object Bench {
       qsecs("bm25_trange_p50") = pct(lat, 0.50)
     }
 
-    // collapse + field sort: the full-match-set plan shapes (scoredMatches
-    // fold → window; matchingDocs → TakeOrdered) (r5)
+    // collapse + field sort: the full-match-set plan shapes (scoredMatches'
+    // per-shard kernel stream → group aggregation → TakeOrdered;
+    // matchingDocs → TakeOrdered)
     {
       val cq = "import util_7"
       searcher.searchCollapse(cq, 10, "lang").collect()

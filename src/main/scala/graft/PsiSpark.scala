@@ -193,7 +193,7 @@ class IndexHandle(spark: SparkSession, val indexDir: String,
     * token is an open prefix, dictionary-expanded (df desc, cap) into the
     * final multi-phrase slot — the search-as-you-type shape.
     */
-  def queryPhrasePrefix(q: String, k: Int, maxExpand: Int = 64) =
+  def queryPhrasePrefix(q: String, k: Int, maxExpand: Int = Searcher.DefaultMaxExpand) =
     searcher.searchPhrasePrefix(q, k, maxExpand)
 
   /** Significant terms (Elasticsearch `significant_terms`, JLH heuristic):

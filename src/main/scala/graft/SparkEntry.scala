@@ -484,7 +484,7 @@ object SparkEntry {
     "q_bm25_collapse" -> ((s, dir) => {
       // field collapse (Lucene grouping / Solr collapse): best-scoring doc
       // per lang over the FULL match set, groups ranked by their best hit;
-      // scores from the distributed ascending-term fold (scoredMatches)
+      // scores from the AND kernel's per-shard stream (scoredMatches)
       CorpusFixture.ensure(s)
       new graft.query.Searcher(s, CorpusFixture.indexDir)
         .searchCollapse(Bm25Query, 10, "lang")

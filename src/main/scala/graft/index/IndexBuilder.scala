@@ -1261,10 +1261,12 @@ object IndexBuilder {
       // §2.3 "shuffle keys and metadata instead of payloads"). Hash
       // partition (the reference's hash-bucket spill,
       // psi/utils/hash_bucket_cache.cc:56-57) rather than range: a range
-      // partitioner would SAMPLE its child, re-running the tokenize pass;
-      // each output file is still (term, shard)-sorted, so parquet
-      // row-group pruning on `term IN (...)` stays tight — a term routes
-      // to exactly one file either way.
+      // partitioner would SAMPLE its child, re-running the tokenize pass.
+      // Hashing on (term, shard) spreads a term's segments over up to
+      // min(P, #shards) files. Each file is (term, shard)-sorted, so its
+      // row groups are term-ranged and `term IN (...)` skips row groups —
+      // but only in files large enough to hold several; a one-row-group
+      // file is read whole.
       if (!cfg.positions) {
         val sortedDrafts = withId
           .select($"docId", $"content")

@@ -28,7 +28,7 @@ import graft.index.{Codec, IndexBuilder, IndexFiles, IndexMeta, Tokenize, Tombst
 class Searcher(spark: SparkSession, indexDir: String,
                deltaDirs: Seq[String] = Nil,
                termCacheCap: Int = Searcher.DefaultTermCacheCap,
-               tombstones: Option[String] = None) {
+               tombstones: Option[String] = None) extends AutoCloseable {
   import spark.implicits._
 
   private val allDirs = indexDir +: deltaDirs
@@ -92,17 +92,41 @@ class Searcher(spark: SparkSession, indexDir: String,
     * the pruned dlens scan, the scale-safe plan. The threshold is derived
     * from DATA size, never core count; the index is immutable for the
     * lifetime of a Searcher (the same argument as the term-metadata LRU),
-    * so the cache can never serve stale lengths.
+    * so the cache can never serve stale lengths. [[close]] destroys the
+    * broadcast; `null` until the first query that needs it.
     */
   private val DlensCacheMaxBytes = 64L << 20
-  private lazy val dlensCacheBc
+  private var dlensCacheBc
+      : Option[org.apache.spark.broadcast.Broadcast[Map[Int, ShardLens]]] = null
+  private var closed = false
+
+  /** The norms broadcast, created on first use. Throws once [[close]] ran. */
+  private def dlensCache
       : Option[org.apache.spark.broadcast.Broadcast[Map[Int, ShardLens]]] =
-    if (meta.numDocs * 4L > DlensCacheMaxBytes) None
-    else {
-      val merged = dlens.as[ShardLens].collect().groupBy(_.shard)
-        .map { case (s, rs) => s -> Searcher.mergeLens(rs.iterator) }
-      Some(spark.sparkContext.broadcast(merged))
+    synchronized {
+      if (closed) throw new IllegalStateException(
+        s"Searcher over $indexDir is closed: its norms broadcast was destroyed")
+      if (dlensCacheBc == null) dlensCacheBc =
+        if (meta.numDocs * 4L > DlensCacheMaxBytes) None
+        else {
+          val merged = dlens.as[ShardLens].collect().groupBy(_.shard)
+            .map { case (s, rs) => s -> Searcher.mergeLens(rs.iterator) }
+          Some(spark.sparkContext.broadcast(merged))
+        }
+      dlensCacheBc
     }
+
+  /** Destroys the norms broadcast, if one was created, so a session that
+    * opens many Searchers does not keep their broadcast blocks. Idempotent.
+    * Every later query through the per-shard harness fails with an
+    * `IllegalStateException`.
+    */
+  override def close(): Unit = synchronized {
+    if (!closed) {
+      closed = true
+      if (dlensCacheBc != null) dlensCacheBc.foreach(_.destroy())
+    }
+  }
 
   /** Per-shard scoring harness shared by every query path: group the
     * fetched segments by shard and hand each shard's segments plus its
@@ -115,7 +139,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   private def cogroupLens[S, T: org.apache.spark.sql.Encoder](
       segs: Dataset[S], candShards: Seq[Int])(shardOf: S => Int)(
       f: (Int, Iterator[S], Iterator[ShardLens]) => Iterator[T]): Dataset[T] =
-    dlensCacheBc match {
+    dlensCache match {
       case Some(bc) =>
         segs.groupByKey(shardOf).flatMapGroups { (shard: Int, it: Iterator[S]) =>
           f(shard, it, bc.value.get(shard).iterator)
@@ -235,14 +259,26 @@ class Searcher(spark: SparkSession, indexDir: String,
     searchImpl(query, k, after)
   }
 
-  private def searchImpl(query: String, k: Int, after: Hit): Dataset[Hit] = {
+  private def searchImpl(query: String, k: Int, after: Hit): Dataset[Hit] =
+    shardHits(query, k, after).fold(spark.emptyDataset[Hit])(
+      _.orderBy($"score".desc, $"docId".asc).limit(k))
+
+  /** The conjunctive query's UNORDERED per-shard hit stream: each candidate
+    * shard emits its own top-k (after the cursor, when one is given) from
+    * [[Searcher.scoreShard]]; the caller orders and cuts. `None` when the
+    * query cannot match (no token, a term absent from the dictionary, no
+    * shard holding every term), decided on the driver with no Spark job.
+    * With `k = Int.MaxValue` the stream is the FULL match set with exact
+    * scores, at most `docsPerShard` rows per shard.
+    */
+  private def shardHits(query: String, k: Int, after: Hit): Option[Dataset[Hit]] = {
     val terms = Tokenize.tokenize(query).distinct.sorted
-    if (terms.isEmpty) return spark.emptyDataset[Hit]
+    if (terms.isEmpty) return None
     val info = lookupTerms(terms)
     // AND semantics: any term absent from the dictionary → empty result.
     // The analog of the reference's empty-party early exit
     // (psi/utils/bucket.cc:54-60).
-    if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
+    if (terms.exists(t => info(t).df == 0L)) return None
     val idfByTerm: Map[String, Double] =
       terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
 
@@ -250,11 +286,12 @@ class Searcher(spark: SparkSession, indexDir: String,
     // shard sets, computed driver-side with no Spark job
     val candShards: Array[Int] =
       terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
+    if (candShards.isEmpty) return None
 
-    // `term IN (...) AND shard IN (...)` both reach the parquet scan (row
-    // groups are (term, shard)-sorted by the publish stage), so only the
-    // query's posting segments in candidate shards are read.
+    // `term IN (...) AND shard IN (...)` both reach the parquet scan. Row
+    // groups within a postings file are term-ranged, so the scan skips row
+    // groups only once a file holds several; a file that is a single row
+    // group (small indexes) is read whole and filtered after the scan.
     val segsC = postings.filter($"term".isin(terms: _*) &&
       $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
       .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
@@ -265,7 +302,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val reB = needReBound
     val cursor = after
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    Some(cogroupLens(segsC, candShards.toSeq)(_.shard) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del)
@@ -277,8 +314,7 @@ class Searcher(spark: SparkSession, indexDir: String,
           Searcher.scoreShard(segsByTerm, lens, termsSorted, idfByTerm,
             k1, b, avgdl, k, accS, accP, pruning, deleted, reB, cursor)
         }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
+    })
   }
 
   /** Conjunctive top-k BM25 with NEGATED terms (`a AND b AND NOT c…`):
@@ -759,7 +795,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * [[expandFuzzy]]). None = the tree simplified to match-none (every
     * expansion came back empty where a match needed one).
     */
-  def rewriteBoolTree(tree: BoolQ, maxExpand: Int = 64): Option[BoolQ] =
+  def rewriteBoolTree(tree: BoolQ, maxExpand: Int = Searcher.DefaultMaxExpand): Option[BoolQ] =
     BoolQuery.rewriteMultiTerm(tree,
       p => expandWildcard(p, maxExpand),
       (t, e) => expandFuzzy(t, e, 0, maxExpand))
@@ -874,7 +910,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * query rewrite (Lucene's PrefixQuery → rewritten BooleanQuery), riding
     * the same WAND-pruned document-at-a-time kernel as `searchOr`.
     */
-  def searchPrefix(prefix: String, k: Int, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchPrefix(prefix: String, k: Int,
+                   maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandPrefix(prefix, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -896,7 +933,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * full scan of the (narrow, 3-column, distributed) dictionary — never
     * collected beyond the capped expansion.
     */
-  def searchRegex(pattern: String, k: Int, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchRegex(pattern: String, k: Int,
+                  maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandRegex(pattern, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -915,7 +953,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * rides the WAND-pruned OR kernel. A glob with no wildcard degenerates
     * to an exact-term query.
     */
-  def searchWildcard(glob: String, k: Int, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchWildcard(glob: String, k: Int,
+                     maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandWildcard(glob, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -925,7 +964,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * matches of the translated regex, ordered (df desc, term asc), capped
     * at `maxExpand`.
     */
-  def expandWildcard(glob: String, maxExpand: Int = 64): Seq[String] =
+  def expandWildcard(glob: String, maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] =
     expandRegex(Searcher.globToRegex(glob), maxExpand)
 
   /** Term range query (Lucene TermRangeQuery analog, the classic-parser
@@ -943,7 +982,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   def searchTermRange(lo: Option[String], hi: Option[String], k: Int,
                       includeLo: Boolean = true, includeHi: Boolean = true,
-                      maxExpand: Int = 64): Dataset[Hit] = {
+                      maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandTermRange(lo, hi, includeLo, includeHi, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -954,7 +993,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   def expandTermRange(lo: Option[String], hi: Option[String],
                       includeLo: Boolean = true, includeHi: Boolean = true,
-                      maxExpand: Int = 64): Seq[String] = {
+                      maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     require(lo.nonEmpty || hi.nonEmpty,
       "term range needs at least one bound (both open = match-all)")
     val l = lo.map(_.toLowerCase)
@@ -973,7 +1012,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   /** The dictionary expansion of a regex: full-term matches ordered by
     * (df desc, term asc), capped at `maxExpand`.
     */
-  def expandRegex(pattern: String, maxExpand: Int = 64): Seq[String] = {
+  def expandRegex(pattern: String, maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     java.util.regex.Pattern.compile(pattern) // fail fast on driver, not in tasks
     val lit = Searcher.literalPrefix(pattern)
     val base =
@@ -1003,8 +1042,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     * full scan of the narrow 3-column distributed dictionary — never
     * collected beyond the capped expansion.
     */
-  def searchFuzzy(term: String, k: Int, maxEdits: Int = 1,
-                  prefixLength: Int = 0, maxExpand: Int = 64): Dataset[Hit] = {
+  def searchFuzzy(term: String, k: Int, maxEdits: Int = 1, prefixLength: Int = 0,
+                  maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandFuzzy(term, maxEdits, prefixLength, maxExpand)
     if (expanded.isEmpty) spark.emptyDataset[Hit]
     else searchOrTerms(expanded.sorted, k)
@@ -1016,7 +1055,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * `maxExpand`.
     */
   def expandFuzzy(term: String, maxEdits: Int = 1, prefixLength: Int = 0,
-                  maxExpand: Int = 64): Seq[String] = {
+                  maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     val norm = Tokenize.tokenize(term)
     require(norm.length == 1,
       s"fuzzy query must normalize to one token, got ${norm.toSeq} from '$term'")
@@ -1101,7 +1140,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * through the tokenizer (so `UTIL_` and `util_` expand identically) and
     * must normalize to exactly one token.
     */
-  def expandPrefix(prefix: String, maxExpand: Int = 64): Seq[String] = {
+  def expandPrefix(prefix: String, maxExpand: Int = Searcher.DefaultMaxExpand): Seq[String] = {
     val norm = Tokenize.tokenize(prefix)
     require(norm.length == 1,
       s"prefix must normalize to one token, got ${norm.toSeq} from '$prefix'")
@@ -1444,66 +1483,13 @@ class Searcher(spark: SparkSession, indexDir: String,
   /** The FULL conjunctive match set WITH exact BM25 scores, as a
     * distributed DataFrame (docId, score) — the building block for
     * operations that rank or group over every match rather than a top-k
-    * (collapse/grouping, field sorting with scores). Scores are bit-exact
-    * against the top-k kernel: per-(doc, term) contributions use the same
-    * IEEE expression shape as [[explainHits]] (proven bit-identical to the
-    * kernel in SearcherSpec), and the per-doc sum is an ascending-term
-    * left fold (`aggregate` over a `sort_array`-ed struct array — the
-    * kernel's accumulation order), never a partition-order-dependent SUM.
-    *
-    * Plan shape: one predicate-pushed postings scan (`term IN` + shard
-    * intersection), codegen'd vbyte decode, one broadcast-friendly join of
-    * per-shard merged length rows, one hash aggregation per docId. No
-    * driver materialization at any size.
+    * (collapse/grouping). It is the AND query's own per-shard stream with
+    * an unbounded per-shard k: the same harness, norms, tombstone exclusion
+    * and [[Searcher.scoreShard]] kernel, so scores are the kernel's, and a
+    * task holds at most one shard's matches. No driver materialization.
     */
-  def scoredMatches(query: String): DataFrame = {
-    graft.functions.VByteFunctions.register(spark)
-    val empty = spark.range(0)
-      .select($"id".as("docId"), lit(0.0).as("score"))
-    val terms = Tokenize.tokenize(query).distinct.sorted
-    if (terms.isEmpty) return empty
-    val info = lookupTerms(terms)
-    if (terms.exists(t => info(t).df == 0L)) return empty
-    val candShards = terms.map(t => info(t).shards)
-      .reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return empty
-    val nTerms = terms.length
-    val dps = meta.docsPerShard
-    val termStats = broadcast(
-      terms.map(t => (t, idf(meta.numDocs, info(t).df))).toSeq
-        .toDF("term", "idf"))
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val contrib = postings
-      .filter($"term".isin(terms: _*) && $"shard".isin(candShards.toSeq: _*))
-      .select($"term", explode(arrays_zip(
-        expr("vbyte_decode_deltas(docBytes, n)").as("d"),
-        expr("vbyte_decode_ints(tfBytes, n)").as("f"))).as("p"))
-      .select($"term", $"p.d".as("docId"), $"p.f".as("tf"))
-      .join(termStats, "term")
-      .join(dlens.filter($"shard".isin(candShards.toSeq: _*)).as[ShardLens]
-          .groupByKey(_.shard).mapGroups((_, it) => Searcher.mergeLens(it))
-          .select($"shard", $"firstDocId", $"lens"),
-        ($"docId" / dps).cast("int") === $"shard")
-      .withColumn("dlen",
-        element_at($"lens", ($"docId" - $"firstDocId" + 1).cast("int")))
-      .withColumn("c",
-        ($"idf" * ($"tf".cast("double") * lit(k1 + 1.0))) /
-          ($"tf".cast("double") +
-            lit(k1) * (lit(1.0) - lit(b) +
-              lit(b) * ($"dlen".cast("double") / lit(avgdl)))))
-      .select($"docId", $"term", $"c")
-    val scored = contrib
-      .groupBy("docId")
-      .agg(count(lit(1)).as("nt"),
-        aggregate(sort_array(collect_list(struct($"term", $"c"))),
-          lit(0.0), (acc, x) => acc + x.getField("c")).as("score"))
-      .filter($"nt" === nTerms) // conjunctive: every term present
-      .select($"docId", $"score")
-    tombstoneDf match {
-      case Some(ts) => scored.join(ts.select("docId"), Seq("docId"), "left_anti")
-      case None => scored
-    }
-  }
+  def scoredMatches(query: String): DataFrame =
+    shardHits(query, Int.MaxValue, null).getOrElse(spark.emptyDataset[Hit]).toDF()
 
   /** Field-sorted results (Lucene `Sort(SortField)` analog): the top-k of
     * the FULL conjunctive match set ordered by a docs-table column instead
@@ -1525,14 +1511,14 @@ class Searcher(spark: SparkSession, indexDir: String,
   /** Field collapse / result grouping (Lucene grouping module, Solr
     * `collapse` analog): the single BEST-scoring document per value of a
     * docs-table column, ranked by that best score — `(<groupCol>, docId,
-    * score)`, top-k groups. Scores come from [[scoredMatches]] (bit-exact
-    * vs the kernel); the best-per-group pick is a HASH AGGREGATION (r6;
-    * the r5 plan was `row_number` over `Window.partitionBy(groupCol)`,
+    * score)`, top-k groups. Scores come from [[scoredMatches]], the AND
+    * kernel's per-shard stream. The best-per-group pick is one aggregation
+    * (r6; the r5 plan was `row_number` over `Window.partitionBy(groupCol)`,
     * which moves the ENTIRE match set into ≤ |groups| partitions and sorts
     * it — a skew scale-killer on a low-cardinality group column): `max` of
     * the struct (score, −docId) picks exactly the rank-1 row of
-    * (score desc, docId asc) per group, with map-side partial aggregation
-    * and no per-group sort, then a global TakeOrdered of k rows.
+    * (score desc, docId asc) per group, with map-side partial aggregation,
+    * then a global TakeOrdered of k rows.
     */
   def searchCollapse(query: String, k: Int, groupCol: String): DataFrame =
     scoredMatches(query)

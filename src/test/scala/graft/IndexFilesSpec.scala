@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.jobsOf
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.query.Searcher
@@ -40,40 +38,6 @@ class IndexFilesSpec extends AnyFunSuite {
     IncrementalIndexer.indexBatch(spark, slice(0L, 100L), dir, baseDocs,
       IndexConfig(docsPerShard = 256, positions = true))
     dir
-  }
-
-  /** Spark jobs launched by `f`: the jobs submitted between two sentinel
-    * jobs. Listener events arrive in order, so once the closing sentinel's
-    * start is seen, every job of `f` has been seen too.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val ids = ConcurrentHashMap.newKeySet[Int]()
-    val sentinels = new ConcurrentHashMap[String, Int]()
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        ids.add(e.jobId)
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith("jobs-of-sentinel-")).foreach { g =>
-            sentinels.put(g, e.jobId)
-            if (g.endsWith("close")) closed.countDown()
-          }
-      }
-    }
-    def sentinel(name: String): Unit = {
-      sc.setJobGroup(s"jobs-of-sentinel-$name", "job-count sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("open")
-      f
-      sentinel("close")
-      assert(closed.await(60, TimeUnit.SECONDS), "listener never saw the sentinel")
-      val (lo, hi) = (sentinels.get("jobs-of-sentinel-open"), sentinels.get("jobs-of-sentinel-close"))
-      ids.toArray.map(_.asInstanceOf[Int]).count(id => id > lo && id < hi)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("opening a Searcher costs no job per delta dir") {

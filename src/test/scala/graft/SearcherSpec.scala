@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.jobsOf
 import graft.corpus.CorpusGen
+import graft.index.{IndexBuilder, IndexConfig, Tombstones}
 import graft.oracle.OracleBm25
 import graft.query.Searcher
+import graft.streaming.IncrementalIndexer
 
 /** Query-path edge cases + OR-mode and batched search rank identity. */
 class SearcherSpec extends AnyFunSuite {
@@ -18,6 +22,33 @@ class SearcherSpec extends AnyFunSuite {
     OracleBm25.topKOr(files, q, k).collect().map(r => (r.getLong(0), r.getDouble(1)))
   private def got(ds: org.apache.spark.sql.Dataset[Hit]) =
     ds.collect().map(h => (h.docId, h.score))
+
+  /** The corpus joined to the built index's docIds: the scalable oracle's input. */
+  private lazy val withId = files.join(
+    spark.read.parquet(s"$indexDir/docs.parquet").select("docId", "repo", "path", "commit"),
+    Seq("repo", "path", "commit")).select("docId", "content")
+  /** Every (docId, score) of the AND query `q` by the oracle, in rank order. */
+  private def oracleAll(withId: DataFrame, q: String): Seq[(Long, Double)] =
+    OracleBm25.topKScalable(withId, q, Int.MaxValue).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  /** A (docId, score) frame in (score desc, docId asc) rank order. */
+  private def ranked(df: DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1)))
+      .sortBy { case (d, s) => (-s, d) }.toSeq
+  /** Collapse of a match list in rank order: each group's first hit, top k
+    * groups (`groupBy` keeps the order within a group).
+    */
+  private def oracleCollapse(ranked: Seq[(Long, Double)], groupOf: Long => String,
+                             k: Int): Seq[(String, Long, Double)] =
+    ranked.groupBy(h => groupOf(h._1)).toSeq
+      .map { case (g, hs) => (g, hs.head._1, hs.head._2) }
+      .sortBy { case (_, d, s) => (-s, d) }.take(k)
+  private def collapse(s: Searcher, q: String, k: Int): Seq[(String, Long, Double)] =
+    s.searchCollapse(q, k, "lang").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+  private def langOf(dir: String): Map[Long, String] =
+    spark.read.parquet(s"$dir/docs.parquet").select("docId", "lang")
+      .as[(Long, String)].collect().toMap
 
   test("OR-mode rank identity incl. a missing term") {
     for (q <- Seq("import zzqx_nothing", "import val def",
@@ -137,21 +168,19 @@ class SearcherSpec extends AnyFunSuite {
       got(searcher.search("util_7", 10)).toSeq)
   }
 
-  test("scoredMatches: full match set, scores bit-exact vs the top-k kernel") {
-    val q = "import util_7"
-    val sm = searcher.scoredMatches(q).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toMap
-    // the match SET is exactly matchingDocs
-    val md = searcher.matchingDocs(q).collect().map(_.getLong(0)).toSet
-    assert(sm.keySet == md && md.nonEmpty)
-    // every kernel hit's score is reproduced bit-exactly (ask for all)
-    val hits = searcher.search(q, md.size + 10).collect()
-    assert(hits.length == md.size)
-    hits.foreach(h => assert(sm(h.docId) == h.score,
-      s"doc ${h.docId}: ${sm(h.docId)} != ${h.score}"))
+  test("scoredMatches: full match set, rank identity and exact scores vs the oracle") {
+    for (q <- Seq("import util_7", "def import util_3")) {
+      val sm = ranked(searcher.scoredMatches(q))
+      val want = oracleAll(withId, q)
+      assert(sm == want && want.nonEmpty, s"query '$q'")
+      // the match SET is exactly matchingDocs
+      val md = searcher.matchingDocs(q).collect().map(_.getLong(0)).toSet
+      assert(sm.map(_._1).toSet == md, s"query '$q'")
+    }
     // dead term / empty query → empty, with the right schema
     assert(searcher.scoredMatches("import zzqx_nothing").isEmpty)
     assert(searcher.scoredMatches("").isEmpty)
+    assert(searcher.scoredMatches("").columns.toSeq == Seq("docId", "score"))
   }
 
   test("searchSortBy: field order with docId tiebreak, over the exact match set") {
@@ -178,23 +207,92 @@ class SearcherSpec extends AnyFunSuite {
 
   test("searchCollapse: best doc per group, groups ranked by their best hit") {
     val q = "import util_7"
-    val res = searcher.searchCollapse(q, 10, "lang").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    // independent derivation from the (already-verified) scored match set
-    val docs = spark.read.parquet(s"$indexDir/docs.parquet")
-    val best = searcher.scoredMatches(q).join(docs, "docId")
-      .select($"lang", $"docId", $"score").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).map { case (_, rows) =>
-        rows.minBy { case (_, d, s) => (-s, d) }
-      }.toSeq.sortBy { case (_, d, s) => (-s, d) }.take(10)
-    assert(res.toSeq == best && best.nonEmpty)
+    val res = collapse(searcher, q, 10)
+    val want = oracleCollapse(oracleAll(withId, q), langOf(indexDir), 10)
+    assert(res == want && want.nonEmpty)
     // one row per group
     assert(res.map(_._1).distinct.length == res.length)
-    // the collapsed winner is the kernel's own top hit for its group:
     // the global #1 hit leads the collapsed list
     val top = searcher.search(q, 1).collect().head
     assert(res.head._2 == top.docId && res.head._3 == top.score)
+  }
+
+  test("searchCollapse on a tombstoned index: a deleted group winner yields to the next survivor") {
+    val q = "import util_7"
+    val all = oracleAll(withId, q)
+    val lang = langOf(indexDir)
+    // delete the winner of every group that has a runner-up
+    val victims = oracleCollapse(all, lang, Int.MaxValue)
+      .filter { case (g, _, _) => all.count(h => lang(h._1) == g) > 1 }.map(_._2)
+    assert(victims.nonEmpty, "fixture has no group with two matches")
+    val path = s"${TestSpark.workDir}/collapse_tombstones.parquet"
+    val keys = spark.read.parquet(s"$indexDir/docs.parquet")
+      .filter($"docId".isin(victims: _*)).select("repo", "path", "commit")
+    assert(Tombstones.applyDeletes(spark, keys, Seq(indexDir), path) == victims.size)
+    val s = new Searcher(spark, indexDir, tombstones = Some(path))
+    // Lucene delete semantics: statistics stay full-corpus, so survivors
+    // keep their scores and only the deleted docs leave the ranking
+    val survivors = all.filterNot(h => victims.contains(h._1))
+    assert(ranked(s.scoredMatches(q)) == survivors)
+    val res = collapse(s, q, 10)
+    assert(res == oracleCollapse(survivors, lang, 10))
+    victims.foreach { v =>
+      assert(res.exists { case (g, d, _) => g == lang(v) && d != v },
+        s"group ${lang(v)} lost its runner-up with winner $v")
+    }
+    s.close()
+  }
+
+  test("searchCollapse and scoredMatches over base + delta match the union-corpus oracle") {
+    val baseDocs = IndexBuilder.readMeta(indexDir).numDocs
+    val slice = CorpusGen.generate(spark, TestSpark.corpusCfg.copy(numDocs = 150L,
+      idOffset = TestSpark.corpusCfg.numDocs + 1000L)).toDF()
+    val deltaDir = s"${TestSpark.workDir}/collapse_deltas/batch_0"
+    IncrementalIndexer.indexBatch(spark, slice, deltaDir, baseDocs,
+      IndexConfig(docsPerShard = 256))
+    val s = new Searcher(spark, indexDir, Seq(deltaDir))
+    val unionWithId = withId.unionByName(slice.join(
+      spark.read.parquet(s"$deltaDir/docs.parquet").select("docId", "repo", "path", "commit"),
+      Seq("repo", "path", "commit")).select("docId", "content"))
+    val q = "import util_7"
+    val all = oracleAll(unionWithId, q)
+    assert(all.exists(_._1 >= baseDocs), "no delta doc matches the query")
+    assert(ranked(s.scoredMatches(q)) == all)
+    assert(collapse(s, q, 10) ==
+      oracleCollapse(all, langOf(indexDir) ++ langOf(deltaDir), 10))
+    s.close()
+  }
+
+  test("collapse over already-looked-up terms launches at most 4 Spark jobs") {
+    val s = new Searcher(spark, indexDir)
+    val q = "import util_7"
+    // the first call looks the terms up and broadcasts the norms
+    val first = collapse(s, q, 10)
+    val n = jobsOf(assert(collapse(s, q, 10) == first))
+    assert(n <= 4, s"collapse launched $n jobs")
+    s.close()
+  }
+
+  test("close destroys the norms broadcast; later queries fail with IllegalStateException") {
+    val s = new Searcher(spark, indexDir)
+    val q = "import val"
+    val before = got(s.search(q, 5)).toSeq
+    val planned = s.search(q, 5) // its plan holds the broadcast
+    s.close()
+    s.close() // idempotent
+    val ex = intercept[IllegalStateException](s.search(q, 5))
+    assert(ex.getMessage.contains("closed"), ex.getMessage)
+    intercept[IllegalStateException](s.searchCollapse(q, 10, "lang"))
+    // the destroyed broadcast really is gone: a plan built before close fails
+    val gone = intercept[Exception](planned.collect())
+    assert(Iterator.iterate[Throwable](gone)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("destroyed")), gone.toString)
+    // closing before the first query creates no broadcast and fails the same way
+    val never = new Searcher(spark, indexDir)
+    never.close()
+    intercept[IllegalStateException](never.searchOr(q, 5))
+    // other Searchers over the same index are unaffected
+    assert(got(searcher.search(q, 5)).toSeq == before)
   }
 
   test("term range search: bounded expansion + OR scoring, rank-identical") {
@@ -425,11 +523,6 @@ class SearcherSpec extends AnyFunSuite {
   }
 
   test("scalable (window-free) oracle agrees with the window oracle") {
-    val withId = files.join(
-      spark.read.parquet(s"$indexDir/docs.parquet")
-        .select("docId", "repo", "path", "commit"),
-      Seq("repo", "path", "commit"))
-      .select("docId", "content")
     for (q <- Seq("import val", "util_3 import def", "zzqx_nothing import")) {
       val a = OracleBm25.topK(files, q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
@@ -441,11 +534,6 @@ class SearcherSpec extends AnyFunSuite {
 
   test("scalable OR and phrase oracles agree with the window oracles") {
     // parity here is what makes ScaleCheck's or:/phrase: evidence trustworthy
-    val withId = files.join(
-      spark.read.parquet(s"$indexDir/docs.parquet")
-        .select("docId", "repo", "path", "commit"),
-      Seq("repo", "path", "commit"))
-      .select("docId", "content")
     for (q <- Seq("import val", "util_3 zzqx_nothing", "import def class")) {
       val a = OracleBm25.topKOr(files, q, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
