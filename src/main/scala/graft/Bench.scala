@@ -13,7 +13,7 @@ import graft.query.Searcher
   * Reports, as one JSON line:
   *  - headline table-operator timings at SPARK_GRAFT_SF_DIR
   *  - index-build throughput (files/sec, postings/sec) on the deterministic
-  *    bench corpus (fast-path build)
+  *    bench corpus
   *  - BM25 reference-query-set latency (p50/p95 of warmed runs)
   *  - N vs 4N scaling: the identical build via spark-submit
   *    local-cluster[W,2,2048] at W=1 vs W=4 identical executor JVMs on the

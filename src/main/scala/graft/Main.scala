@@ -14,8 +14,7 @@ import graft.query.Searcher
   *   gen    --docs N [--seed S] [--offset M] --out DIR   synthesize corpus
   *   build  --corpus DIR --index DIR [--docsPerShard N] [--stopAfter STAGE]
   *          [--positions true]  (positional index for phrase queries)
-  *          [--fast true]       (fused fast-path build; implied by positions)
-  *          [--partResume true] (per-partition postings commit/resume, fast build)
+  *          [--partResume true] (per-partition postings commit/resume)
   *   query  --index DIR --q "TERMS" [--k K] [--or true] [--phrase true]
   *          [--near W]       (proximity: all terms within a W-token span)
   *          [--prefix true]  (wildcard: dictionary-expand q* then OR-score)
@@ -113,11 +112,8 @@ object Main {
 
       case "build" =>
         val spark = session("psispark-build")
-        // both builds checkpoint/resume now: the staged build at
-        // docs/tf/doclen/docs_meta/dict/segments/publish, buildFast (incl.
-        // positional) at docs/dlens/postings/dict
+        // checkpoint/resume at the docs/dlens/postings/dict stage markers
         val positional = opts.getOrElse("positions", "false").toBoolean
-        val fast = positional || opts.getOrElse("fast", "false").toBoolean
         val cfg = IndexConfig(
           docsPerShard = opts.getOrElse("docsPerShard", s"${1 << 12}").toInt,
           stopAfterStage = opts.getOrElse("stopAfter", ""),
@@ -128,9 +124,7 @@ object Main {
             Some(ProgressReporter.attach(spark, "build"))
           else None
         val t0 = System.nanoTime()
-        val meta =
-          if (fast) IndexBuilder.buildFast(spark, opts("corpus"), opts("index"), cfg)
-          else IndexBuilder.build(spark, opts("corpus"), opts("index"), cfg)
+        val meta = IndexBuilder.buildFast(spark, opts("corpus"), opts("index"), cfg)
         val sec = (System.nanoTime() - t0) / 1e9
         reporter.foreach(ProgressReporter.detach(spark, _))
         if (meta == null)

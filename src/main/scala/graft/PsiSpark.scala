@@ -21,18 +21,11 @@ import graft.query.Searcher
   */
 object PsiSpark {
 
-  /** Staged, resumable build (the petabyte default). */
+  /** Build (resumable per artifact: a kill mid-build restarts from the last
+    * committed stage) and open an index.
+    */
   def buildIndex(spark: SparkSession, corpusDir: String, indexDir: String,
                  cfg: IndexConfig = IndexConfig()): IndexHandle = {
-    IndexBuilder.build(spark, corpusDir, indexDir, cfg)
-    openIndex(spark, indexDir)
-  }
-
-  /** Fused fast-path build (throughput mode; per-artifact resumable since
-    * r2 — a kill mid-build restarts from the last committed artifact).
-    */
-  def buildIndexFast(spark: SparkSession, corpusDir: String, indexDir: String,
-                     cfg: IndexConfig = IndexConfig()): IndexHandle = {
     IndexBuilder.buildFast(spark, corpusDir, indexDir, cfg)
     openIndex(spark, indexDir)
   }

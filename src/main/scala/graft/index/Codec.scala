@@ -249,7 +249,7 @@ object Codec {
 
   /** Assemble one compressed posting segment from docId-ascending parallel
     * arrays (docIds, tfs, per-doc dlens) — the single definition of segment
-    * encoding shared by the fast build, the incremental indexer, and
+    * encoding shared by the index build, the incremental indexer, and
     * compaction, so the artifact format cannot silently diverge.
     */
   def makeSeg(term: String, shard: Int, da: Array[Long], fa: Array[Int],

@@ -4,9 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 import graft._
 import graft.sources.CorpusSource
@@ -55,24 +55,27 @@ case class IndexMeta(numDocs: Long, totalTokens: Long, avgdl: Double,
                      k1: Double, b: Double, docsPerShard: Int,
                      numTerms: Long, numSegments: Long, fingerprint: String)
 
-/** Staged, resumable inverted-index build (SURVEY.md §3.1 build-job trace).
+/** Resumable inverted-index build (SURVEY.md §3.1 build-job trace), one
+  * pipeline: [[IndexBuilder.buildFast]].
   *
-  * Stages (each materialized, committed by a `_stage_<name>.json` marker; a
+  * Stages (each committed by a `_stage_<name>.json` marker after its write; a
   * rerun skips stages whose marker carries the same config fingerprint — the
   * analog of the reference's `RecoveryCheckpoint` stage enum + safe-point
   * resume, psi/checkpoint/recovery.h:37-121):
   *
-  *   docs      corpus → dup-key reject + sha256 verify + deterministic dense
-  *             docId assignment (total order of (repo,path,commit), two-pass
-  *             range-sort + partition offsets — no global window, no RDD)
-  *   tf        tokenize + (term, docId) term frequencies      [wide shuffle 1]
-  *   doclen    per-doc token counts (dlen = Σ tf)
-  *   docs_meta docs table + per-shard packed dlen arrays
-  *   dict      term dictionary (df, cf)
-  *   segments  (term, shard) compressed posting runs           [wide shuffle 2,
-  *             repartition(term, shard) = hash bucket spill analog,
-  *             psi/utils/hash_bucket_cache.cc:49-61] + per-partition lineage
-  *   publish   global sort-merge pass into query layout, meta.json commit
+  *   docs      corpus → sha256 verify + deterministic dense docId assignment
+  *             (total order of (repo,path,commit): one range sort + partition
+  *             offsets — no global window) + per-doc token counts (dlen)
+  *   dlens     per-shard packed dlen arrays (dup-key reject runs first, over
+  *             the committed docs table)
+  *   postings  map-side tokenize into compressed (term, shard) drafts, ONE
+  *             hash exchange on (term, shard) (hash bucket spill analog,
+  *             psi/utils/hash_bucket_cache.cc:49-61), reduce-side finalize +
+  *             per-partition lineage manifests; optionally committed per
+  *             reduce partition (`partitionedResume`)
+  *   dict      term dictionary (df, cf) derived from the postings
+  *
+  * `meta.json`, written last, is the publish marker.
   */
 object IndexBuilder {
 
@@ -111,22 +114,13 @@ object IndexBuilder {
   }
 
   /** Per-row `sha256(content)` invariant vs the corpus sidecar (input_hint;
-    * reference analog psi/utils/csv_checker.cc:104). One LEFT join over
-    * keys+hash (~100 B/row through the exchange): a row with no sidecar
-    * entry is an UNCOVERED failure — silent partial verification is exactly
-    * the vacuous-pass mode an inner join would hide — and a covered row
-    * with a differing hash is a MISMATCH failure.
-    */
-  private def verifyShaSidecar(spark: SparkSession, files: DataFrame,
-                               corpusDir: String, keyCols: Seq[String]): Unit =
-    verifyShaKeyed(spark, files
-      .select(col("repo"), col("path"), col("commit"),
-        sha2(col("content"), 256).as("got_sha")), corpusDir, keyCols)
-
-  /** The sidecar compare over an ALREADY-HASHED (repo, path, commit,
-    * got_sha) projection — lets buildFast verify from the persisted docId
-    * sort pass (which computes sha256 anyway) instead of paying a second
-    * full corpus scan + sha computation (guide §1.2: remove a whole pass).
+    * reference analog psi/utils/csv_checker.cc:104), over an ALREADY-HASHED
+    * (repo, path, commit, got_sha) projection of the persisted docId sort
+    * pass (which computes sha256 anyway), so verifying costs no second
+    * corpus scan. One LEFT join over keys+hash (~100 B/row through the
+    * exchange): a row with no sidecar entry is an UNCOVERED failure — silent
+    * partial verification is exactly the vacuous-pass mode an inner join
+    * would hide — and a covered row with a differing hash is a MISMATCH.
     */
   private def verifyShaKeyed(spark: SparkSession, keyed: DataFrame,
                              corpusDir: String, keyCols: Seq[String]): Unit = {
@@ -145,208 +139,6 @@ object IndexBuilder {
         "sha256 coverage is incomplete, refusing to index unverified rows")
     require(mismatched == 0,
       s"$mismatched of $total rows fail the sha256(content) invariant")
-  }
-
-  def build(spark: SparkSession, corpusDir: String, indexDir: String,
-            cfg: IndexConfig = IndexConfig()): IndexMeta = {
-    import spark.implicits._
-    require(!cfg.positions,
-      "positional indexing is built by buildFast (IndexConfig(positions = true))")
-    Files.createDirectories(Paths.get(indexDir))
-    val P = if (cfg.buildPartitions > 0) cfg.buildPartitions
-            else negotiatePartitions(spark, corpusDir)
-    val fp = cfg.fingerprint
-    val stages = new StageTracker(indexDir, fp, cfg.stopAfterStage)
-
-    val files = CorpusSource.readFiles(spark, corpusDir)
-    val keyCols = Seq("repo", "path", "commit")
-
-    // ---- stage: docs (validate + assign docIds) -------------------------
-    stages.run("docs") {
-      // duplicate composite keys are rejected, like the reference's
-      // duplicated-key config check (psi/interface.cc:218-220)
-      val dups = files.groupBy(keyCols.map(col): _*).count().filter($"count" > 1).count()
-      require(dups == 0, s"$dups duplicate (repo,path,commit) keys in corpus")
-      if (cfg.verifySha) verifyShaSidecar(spark, files, corpusDir, keyCols)
-      // deterministic dense docIds: global total order of the composite key
-      // via range partition + local sort, then per-partition offsets
-      // (two-pass; the scalable alternative to a single-partition window —
-      // mirrors KeyInfo.start_index from sorted position,
-      // psi/utils/table_utils.cc:333-347)
-      val sortedKeys = files.select(keyCols.map(col): _*)
-        .repartitionByRange(P, col("repo"), col("path"), col("commit"))
-        .sortWithinPartitions("repo", "path", "commit")
-        .as[(String, String, String)]
-        .persist()
-      val counts = sortedKeys.mapPartitions { it =>
-        Iterator.single((TaskContext.getPartitionId(), it.size.toLong))
-      }.collect().toMap
-      val offsets = {
-        var acc = 0L
-        (0 until P).map { pid =>
-          val o = pid -> acc; acc += counts.getOrElse(pid, 0L); o
-        }.toMap
-      }
-      val mapping = sortedKeys.mapPartitions { it =>
-        var next = offsets(TaskContext.getPartitionId())
-        it.map { case (r, p, c) => val id = next; next += 1; (r, p, c, id) }
-      }.toDF("repo", "path", "commit", "docId")
-      // canonical docId-keyed corpus copy (read by every later stage; the
-      // one place content is shuffled)
-      files.withColumn("sha256", sha2(col("content"), 256))
-        .join(mapping, keyCols)
-        .select("docId", "repo", "path", "commit", "lang", "sha256", "content")
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/docs_raw.parquet")
-      sortedKeys.unpersist()
-    }
-    if (stages.stopped) return null
-    def docsRaw = spark.read.parquet(s"$indexDir/docs_raw.parquet")
-
-    // ---- stage: tf -------------------------------------------------------
-    stages.run("tf") {
-      docsRaw
-        .select(col("docId"), explode(Tokenize.termsCol(col("content"))).as("term"))
-        .groupBy("term", "docId")
-        .agg(count(lit(1)).cast("int").as("tf"))
-        .repartition(P, col("term"), col("docId"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/tf.parquet")
-    }
-    if (stages.stopped) return null
-    def tf = spark.read.parquet(s"$indexDir/tf.parquet")
-
-    // ---- stage: doclen ---------------------------------------------------
-    stages.run("doclen") {
-      tf.groupBy("docId").agg(sum($"tf").cast("int").as("dlen"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/doclen.parquet")
-    }
-    if (stages.stopped) return null
-    def doclen = spark.read.parquet(s"$indexDir/doclen.parquet")
-
-    val numDocs = docsRaw.count()
-    val dps = cfg.docsPerShard
-
-    // ---- stage: docs_meta (docs table + packed per-shard dlens) ----------
-    stages.run("docs_meta") {
-      docsRaw.drop("content")
-        .join(doclen, Seq("docId"), "left")
-        .na.fill(0, Seq("dlen"))
-        .select($"docId", $"repo", $"path", $"commit", $"lang",
-          $"dlen".cast("int"), $"sha256")
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/docs.parquet")
-      val nd = numDocs
-      spark.read.parquet(s"$indexDir/docs.parquet")
-        .select($"docId", $"dlen", (($"docId" / dps).cast("int")).as("shard"))
-        .as[(Long, Int, Int)]
-        .groupByKey(_._3)
-        .mapGroups { (shard, it) =>
-          val first = shard.toLong * dps
-          val size = math.min(dps.toLong, nd - first).toInt
-          val lens = new Array[Int](size)
-          it.foreach { case (docId, dlen, _) => lens((docId - first).toInt) = dlen }
-          ShardLens(shard, first, lens)
-        }
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dlens.parquet")
-    }
-    if (stages.stopped) return null
-
-    // ---- stage: dict ------------------------------------------------------
-    stages.run("dict") {
-      tf.groupBy("term")
-        .agg(count(lit(1)).as("df"), sum($"tf").as("cf"))
-        .as[TermStat]
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dict.parquet")
-    }
-    if (stages.stopped) return null
-
-    val totalTokens = doclen.agg(sum($"dlen")).as[Long].head()
-    val avgdl = totalTokens.toDouble / numDocs
-
-    // ---- stage: segments (wide shuffle 2 + per-partition lineage) --------
-    stages.run("segments") {
-      val acc: CollectionAccumulator[PartitionManifest] =
-        spark.sparkContext.collectionAccumulator[PartitionManifest]("segmentManifests")
-      val (k1, b, ad) = (cfg.k1, cfg.b, avgdl)
-      val segs = tf
-        .join(doclen, "docId")
-        .select($"term", $"docId", $"tf".cast("int"),
-          $"dlen".cast("int"), (($"docId" / dps).cast("int")).as("shard"))
-        .as[(String, Long, Int, Int, Int)]
-        // hot-term defusal: partition by (term, shard) — shard is the
-        // docId-range salt, so no single partition ever holds a whole hot
-        // term's postings (SURVEY.md §4 skew row)
-        .repartition(P, $"term", $"shard")
-        .sortWithinPartitions($"term", $"shard", $"docId")
-        .mapPartitions { it =>
-          val t0 = System.nanoTime()
-          var rows = 0L; var postings = 0L; var bytes = 0L
-          val digest = java.security.MessageDigest.getInstance("SHA-256")
-          val out = new Iterator[PostingSeg] {
-            val buf = it.buffered
-            def hasNext: Boolean = buf.hasNext
-            def next(): PostingSeg = {
-              val (term, _, _, _, shard) = buf.head
-              val docs = Array.newBuilder[Long]
-              val tfs = Array.newBuilder[Int]
-              val dls = Array.newBuilder[Int]
-              while (buf.hasNext && buf.head._1 == term && buf.head._5 == shard) {
-                val (_, d, f, dl, _) = buf.next()
-                docs += d; tfs += f; dls += dl
-                rows += 1
-              }
-              val da = docs.result(); val fa = tfs.result(); val la = dls.result()
-              val seg = Codec.makeSeg(term, shard, da, fa, la, k1, b, ad)
-              postings += da.length
-              bytes += seg.docBytes.length + seg.tfBytes.length
-              digest.update(term.getBytes(StandardCharsets.UTF_8))
-              digest.update(seg.docBytes); digest.update(seg.tfBytes)
-              seg
-            }
-          }
-          new Iterator[PostingSeg] {
-            def hasNext: Boolean = {
-              val h = out.hasNext
-              if (!h && rows >= 0) { // emit lineage once, at exhaustion
-                acc.add(PartitionManifest("segments", TaskContext.getPartitionId(),
-                  rows, postings, bytes,
-                  digest.digest().map(x => f"$x%02x").mkString,
-                  (System.nanoTime() - t0) / 1000000))
-                rows = -1
-              }
-              h
-            }
-            def next(): PostingSeg = out.next()
-          }
-        }
-      segs.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/segments.parquet")
-      // per-partition lineage manifest (RecoveryCheckpoint/PsiResultReport analog)
-      val entries = acc.value
-      import scala.jdk.CollectionConverters._
-      val manifest = entries.asScala.toSeq.sortBy(_.partition)
-      spark.createDataset(manifest)
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$indexDir/manifests/segments.parquet")
-      Metrics.writeJson(s"$indexDir/manifests/segments.json", manifest)
-    }
-    if (stages.stopped) return null
-
-    // ---- stage: publish (sort-merge into query layout) --------------------
-    stages.run("publish") {
-      // global sort by (term, shard): parquet row groups become term-ranged,
-      // so a query-time `term IN (...)` filter prunes row groups — the
-      // external-sort analog of MultiKeySort (psi/utils/key.cc:122-183)
-      spark.read.parquet(s"$indexDir/segments.parquet")
-        .repartitionByRange(P, col("term"), col("shard"))
-        .sortWithinPartitions("term", "shard")
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
-    }
-    if (stages.stopped) return null
-
-    val numTerms = spark.read.parquet(s"$indexDir/dict.parquet").count()
-    val numSegments = spark.read.parquet(s"$indexDir/postings.parquet").count()
-    val meta = IndexMeta(numDocs, totalTokens, avgdl, cfg.k1, cfg.b,
-      cfg.docsPerShard, numTerms, numSegments, fp)
-    Metrics.writeMetaJson(s"$indexDir/meta.json", meta)
-    meta
   }
 
   def readMeta(indexDir: String): IndexMeta = Metrics.readMetaJson(s"$indexDir/meta.json")
@@ -587,15 +379,10 @@ object IndexBuilder {
     meta
   }
 
-  /** Group consecutive (term, shard)-sorted tf rows into compressed posting
-    * segments — the reduce-side encode kernel of the fast build, shared by
-    * the direct-parquet and per-partition-parts write paths.
-    */
   /** Wrap a posting-segment iterator so its partition emits one
     * [[PartitionManifest]] lineage record at exhaustion: segments out,
     * postings encoded, compressed bytes, a content sha256 and elapsed ms
-    * (postings/sec = postings / elapsedMs·1000) — the buildFast twin of the
-    * staged build's segments manifest, per the north star's
+    * (postings/sec = postings / elapsedMs·1000), per the north star's
     * "per-partition metrics logged for lineage". `fanIn` records how many
     * committed part files a publish task merged (1 for an encode task).
     */
@@ -695,9 +482,6 @@ object IndexBuilder {
     private var vals = new Array[RunBuilder](cap)
     private var size = 0
 
-    @inline private def lower(c: Char): Char =
-      if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-
     private def grow(): Unit = {
       val ok = keys; val ov = vals
       cap <<= 1; mask = cap - 1
@@ -722,7 +506,7 @@ object IndexBuilder {
     def lookupRun(s: String, start: Int, end: Int): RunBuilder = {
       var h = 0
       var i = start
-      while (i < end) { h = 31 * h + lower(s.charAt(i)); i += 1 }
+      while (i < end) { h = 31 * h + Tokenize.asciiLower(s.charAt(i)); i += 1 }
       var j = h & mask
       val len = end - start
       while (true) {
@@ -730,7 +514,7 @@ object IndexBuilder {
         if (k == null) {
           val buf = new Array[Char](len)
           var x = 0
-          while (x < len) { buf(x) = lower(s.charAt(start + x)); x += 1 }
+          while (x < len) { buf(x) = Tokenize.asciiLower(s.charAt(start + x)); x += 1 }
           val key = new String(buf)
           keys(j) = key
           val b = new RunBuilder(positional)
@@ -741,7 +525,7 @@ object IndexBuilder {
         }
         if (k.length == len) {
           var x = 0
-          while (x < len && k.charAt(x) == lower(s.charAt(start + x))) x += 1
+          while (x < len && k.charAt(x) == Tokenize.asciiLower(s.charAt(start + x))) x += 1
           if (x == len) return vals(j)
         }
         j = (j + 1) & mask
@@ -819,35 +603,23 @@ object IndexBuilder {
           prevId = docId
           touched.clear()
           val n = content.length
-          // ASCII prescan, exactly Tokenize.tokenize's fast-path gate: any
-          // char ≥ 0x80 sends the WHOLE doc to the regex definition of record
-          var ascii = true
-          var i = 0
-          while (i < n) {
-            if (content.charAt(i) >= 0x80) { ascii = false; i = n } else i += 1
-          }
           var dlen = 0
-          if (ascii) {
-            i = 0
+          // Tokenize.tokenize's scanner and fast-path gate, minus the
+          // per-token String: the table probes the run in place
+          if (Tokenize.isAscii(content)) {
+            var i = 0
             while (i < n) {
-              val c = content.charAt(i)
-              if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
-                  (c >= 'A' && c <= 'Z') || c == '_') {
+              if (Tokenize.isTokChar(content.charAt(i))) {
                 val start = i
                 i += 1
-                var cc: Char = 0
-                while (i < n && {
-                  cc = content.charAt(i)
-                  (cc >= 'a' && cc <= 'z') || (cc >= '0' && cc <= '9') ||
-                    (cc >= 'A' && cc <= 'Z') || cc == '_'
-                }) i += 1
+                while (i < n && Tokenize.isTokChar(content.charAt(i))) i += 1
                 val b = m.lookupRun(content, start, i)
                 if (b.addOcc(docId, dlen)) touched.add(b)
                 dlen += 1
               } else i += 1
             }
           } else {
-            val toks = Tokenize.tokenize(content)
+            val toks = Tokenize.tokenizeRegex(content)
             dlen = toks.length
             var j = 0
             while (j < toks.length) {
@@ -888,8 +660,7 @@ object IndexBuilder {
     * the same [[Codec.makeSeg]] math).
     */
   private def finalizeSegments(it: Iterator[SegDraft], k1: Double, b: Double,
-      avgdl: Double,
-      counter: org.apache.spark.util.LongAccumulator): Iterator[PostingSeg] = {
+      avgdl: Double, counter: LongAccumulator): Iterator[PostingSeg] = {
     val buf = it.buffered
     new Iterator[PostingSeg] {
       def hasNext: Boolean = buf.hasNext
@@ -930,8 +701,7 @@ object IndexBuilder {
     * first-docId order.
     */
   private def finalizeSegmentsP(it: Iterator[SegDraftP], k1: Double, b: Double,
-      avgdl: Double,
-      counter: org.apache.spark.util.LongAccumulator): Iterator[PostingSegP] = {
+      avgdl: Double, counter: LongAccumulator): Iterator[PostingSegP] = {
     val buf = it.buffered
     new Iterator[PostingSegP] {
       def hasNext: Boolean = buf.hasNext
@@ -984,8 +754,9 @@ object IndexBuilder {
     * (transient recovery artifacts; a crash in the tiny window between
     * publish and the stage marker just re-encodes once — still correct).
     */
-  private def publishFromParts(spark: SparkSession, indexDir: String,
-      partsDir: String, numParts: Int, positional: Boolean): Unit = {
+  private def publishFromParts[S <: Product : Encoder](spark: SparkSession,
+      indexDir: String, partsDir: String, numParts: Int,
+      readPart: String => Iterator[S]): Unit = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val committed = PartStore.listCommitted(partsDir, conf)
@@ -1007,18 +778,11 @@ object IndexBuilder {
     // when the encode manifest is partial after a mid-stage crash+resume
     val pubAcc: CollectionAccumulator[PartitionManifest] =
       spark.sparkContext.collectionAccumulator[PartitionManifest]("publishManifests")
-    if (!positional)
-      ds.mapPartitions { pathIt =>
-        val paths = pathIt.toArray
-        manifested(pubAcc, "publish", paths.length.toLong)(
-          paths.iterator.flatMap(PartStore.readPart))
-      }.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
-    else
-      ds.mapPartitions { pathIt =>
-        val paths = pathIt.toArray
-        manifested(pubAcc, "publish", paths.length.toLong)(
-          paths.iterator.flatMap(PartStore.readPartP))
-      }.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
+    ds.mapPartitions { pathIt =>
+      val paths = pathIt.toArray
+      manifested(pubAcc, "publish", paths.length.toLong)(
+        paths.iterator.flatMap(readPart))
+    }.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
     locally {
       import scala.jdk.CollectionConverters._
       val pub = pubAcc.value.asScala.toSeq.groupBy(_.partition)
@@ -1032,13 +796,12 @@ object IndexBuilder {
     p.getFileSystem(conf).delete(p, true)
   }
 
-  /** Fast-path build: the same logical pipeline with fused stages and the
-  * minimum data movement. This is the throughput configuration; since r2 it
-  * is ALSO resumable: each published artifact (docs, dlens, postings, dict)
-  * commits a `_stage_<name>.json` marker after its write completes, and a
-  * rerun skips committed artifacts — so a kill mid-build (including the
-  * positional variant, the engine's flagship path) restarts from the last
-  * finished artifact instead of zero (reference mid-stream resume analog:
+  /** The index build: fused stages with the minimum data movement. Each
+  * published artifact (docs, dlens, postings, dict) commits a
+  * `_stage_<name>.json` marker after its write completes, and a rerun skips
+  * committed artifacts — so a kill mid-build (including the positional
+  * variant, the engine's flagship path) restarts from the last finished
+  * artifact instead of zero (reference mid-stream resume analog:
   * psi/algorithm/rr22/receiver.cc:106-109; checkpoint stages,
   * psi/checkpoint/checkpoint.proto:8-43).
   *
@@ -1069,8 +832,6 @@ object IndexBuilder {
   *   - dlen rides WITH each posting row (computed at tokenize time), so
   *     there is no doclen join; the dictionary is derived from the
   *     compressed segments, so there is no second tokenize pass
-  *
-  * Produces the same index artifacts as the staged build.
   */
   def buildFast(spark: SparkSession, corpusDir: String, indexDir: String,
                 cfg: IndexConfig = IndexConfig()): IndexMeta = {
@@ -1173,7 +934,7 @@ object IndexBuilder {
       phase("docs-write")
     }
     if (stages.stopped) { unpersistSorted(); return null }
-    def docsDf = spark.read.parquet(s"$indexDir/docs.parquet")
+    lazy val docsDf = IndexFiles.docs(spark, Seq(indexDir))
     // corpus stats: from this attempt's sort/observation when the stage ran,
     // else re-aggregated from the committed docs artifact (narrow scans)
     val numDocs = if (numDocsFromSort >= 0) numDocsFromSort else docsDf.count()
@@ -1182,8 +943,9 @@ object IndexBuilder {
     // the docId order is "the TOTAL order of the unique composite key" — a
     // duplicate key makes tie order attempt-dependent, so a kill+resume
     // could bind docIds to different rows than the committed docs artifact.
-    // The staged build rejects dups up front; enforce the same here from the
-    // committed (narrow, content-free) docs table before postings publish.
+    // Rejected here from the committed (narrow, content-free) docs table,
+    // before postings publish (the reference's duplicated-key config check,
+    // psi/interface.cc:218-220).
     if (!stages.isDone("postings")) {
       val dups = docsDf.groupBy($"repo", $"path", $"commit")
         .count().filter($"count" > 1).limit(1).count()
@@ -1236,7 +998,7 @@ object IndexBuilder {
     // docId) term frequencies are FULLY computable map-side — a typed
     // per-partition tokenize+count replaces the explode→groupBy exchange.
     // Token-level rows then cross exactly ONE exchange: the (term, shard)
-    // range partition that is also the final published sort order.
+    // hash partition, sorted within each output file.
     stages.run("postings") {
       // resume consistency: a resumed postings stage re-derives docIds from a
       // fresh sort of the CURRENT corpus while composing with the COMMITTED
@@ -1267,78 +1029,53 @@ object IndexBuilder {
       // row groups are term-ranged and `term IN (...)` skips row groups —
       // but only in files large enough to hold several; a one-row-group
       // file is read whole.
-      if (!cfg.positions) {
+      // The plain and positional builds differ only in the draft and segment
+      // types (positional ones carry posBytes, enabling phrase queries via
+      // Searcher.searchPhrase), the finalize kernel and the part reader.
+      def encode[D <: Product : Encoder, S <: Product : Encoder](
+          finalize: (Iterator[D], LongAccumulator) => Iterator[S],
+          readPart: String => Iterator[S]): Unit = {
+        val positional = cfg.positions
         val sortedDrafts = withId
           .select($"docId", $"content")
           .as[(Long, String)]
           .mapPartitions(it =>
-            draftSegments(it, dps, positional = false)
-              .asInstanceOf[Iterator[SegDraft]])
+            draftSegments(it, dps, positional).asInstanceOf[Iterator[D]])
           .repartition(P, $"term", $"shard")
           .sortWithinPartitions($"term", $"shard")
         if (!cfg.partitionedResume) {
           sortedDrafts
             .mapPartitions(it => manifested(mAcc, "postings", 1L)(
-              finalizeSegments(it, k1, b, avgdl, segCounter)))
+              finalize(it, segCounter)))
             .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
         } else {
           // per-partition committed parts + publish — see PartStore; the
           // hash partitioning is attempt-deterministic, so a resumed reduce
           // task for a committed pid skips encoding entirely
           val partsDir = s"$indexDir/_postings_parts"
-          PartStore.pinScheme(partsDir, P, positional = false, cfg.fingerprint)
+          PartStore.pinScheme(partsDir, P, positional, cfg.fingerprint)
           val committed = spark.sparkContext.broadcast(
             PartStore.listCommitted(partsDir, spark.sessionState.newHadoopConf()))
           if (committed.value.nonEmpty)
             System.err.println(s"[buildFast] partitioned resume: " +
               s"${committed.value.size}/$P postings partitions already " +
               "committed — re-encoding only the rest")
-          sortedDrafts.foreachPartition { (it: Iterator[SegDraft]) =>
+          sortedDrafts.foreachPartition { (it: Iterator[D]) =>
             val tc = TaskContext.get()
             if (!committed.value.contains(tc.partitionId()))
               PartStore.writePart(partsDir, tc.partitionId(), tc.taskAttemptId(),
-                manifested(mAcc, "postings", 1L)(
-                  finalizeSegments(it, k1, b, avgdl, null)), positional = false)
+                manifested(mAcc, "postings", 1L)(finalize(it, null)), positional)
           }
           if (cfg.stopAfterStage == "postings_parts") stages.abort()
-          else publishFromParts(spark, indexDir, partsDir, P, positional = false)
-        }
-      } else {
-        // positional variant (opt-in): drafts additionally carry posBytes
-        // (PostingSegP) enabling phrase queries (Searcher.searchPhrase)
-        val sortedDraftsP = withId
-          .select($"docId", $"content")
-          .as[(Long, String)]
-          .mapPartitions(it =>
-            draftSegments(it, dps, positional = true)
-              .asInstanceOf[Iterator[SegDraftP]])
-          .repartition(P, $"term", $"shard")
-          .sortWithinPartitions($"term", $"shard")
-        if (!cfg.partitionedResume) {
-          sortedDraftsP
-            .mapPartitions(it => manifested(mAcc, "postings", 1L)(
-              finalizeSegmentsP(it, k1, b, avgdl, segCounter)))
-            .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
-        } else {
-          val partsDir = s"$indexDir/_postings_parts"
-          PartStore.pinScheme(partsDir, P, positional = true, cfg.fingerprint)
-          val committed = spark.sparkContext.broadcast(
-            PartStore.listCommitted(partsDir, spark.sessionState.newHadoopConf()))
-          if (committed.value.nonEmpty)
-            System.err.println(s"[buildFast] partitioned resume: " +
-              s"${committed.value.size}/$P postings partitions already " +
-              "committed — re-encoding only the rest")
-          sortedDraftsP.foreachPartition { (it: Iterator[SegDraftP]) =>
-            val tc = TaskContext.get()
-            if (!committed.value.contains(tc.partitionId()))
-              PartStore.writePart(partsDir, tc.partitionId(), tc.taskAttemptId(),
-                manifested(mAcc, "postings", 1L)(
-                  finalizeSegmentsP(it, k1, b, avgdl, null)), positional = true)
-          }
-          if (cfg.stopAfterStage == "postings_parts") stages.abort()
-          else publishFromParts(spark, indexDir, partsDir, P, positional = true)
+          else publishFromParts(spark, indexDir, partsDir, P, readPart)
         }
       }
+      if (!cfg.positions)
+        encode[SegDraft, PostingSeg](finalizeSegments(_, k1, b, avgdl, _),
+          PartStore.readPart)
+      else
+        encode[SegDraftP, PostingSegP](finalizeSegmentsP(_, k1, b, avgdl, _),
+          PartStore.readPartP)
       // per-partition lineage manifest of the encode (segments, postings,
       // compressed bytes, content sha, elapsed ms → postings/sec). On a
       // partitioned resume, partitions whose parts were committed by an
@@ -1346,15 +1083,15 @@ object IndexBuilder {
       // manifest file when it exists; an attempt killed INSIDE the postings
       // stage wrote no manifest — the publish manifest below is then the
       // complete per-partition record, since publish re-reads every part).
-      {
+      locally {
         import scala.jdk.CollectionConverters._
         val newMs = mAcc.value.asScala.toSeq.groupBy(_.partition)
           .map(_._2.head).toSeq // speculative dup attempts: keep one
         val mPath = s"$indexDir/manifests/postings.parquet"
         val prior =
           if (cfg.partitionedResume && Files.exists(Paths.get(mPath)))
-            scala.util.Try(spark.read.parquet(mPath).as[PartitionManifest]
-              .collect().toSeq).getOrElse(Nil)
+            scala.util.Try(spark.read.schema(Encoders.product[PartitionManifest].schema)
+              .parquet(mPath).as[PartitionManifest].collect().toSeq).getOrElse(Nil)
           else Nil
         val newPids = newMs.map(_.partition).toSet
         val merged = (prior.filterNot(m => newPids(m.partition)) ++ newMs)
@@ -1373,7 +1110,7 @@ object IndexBuilder {
     var numTermsObserved = -1L
     stages.run("dict") {
       val dictObs = new org.apache.spark.sql.Observation("dictstats")
-      spark.read.parquet(s"$indexDir/postings.parquet")
+      IndexFiles.postings(spark, Seq(indexDir))
         .groupBy("term")
         .agg(sum($"n".cast("long")).as("df"), sum($"sumTf").as("cf"))
         // r6: term-RANGE-sorted dictionary files — every expansion path
@@ -1395,13 +1132,13 @@ object IndexBuilder {
 
     val numTerms =
       if (numTermsObserved >= 0) numTermsObserved
-      else spark.read.parquet(s"$indexDir/dict.parquet").count()
+      else IndexFiles.dict(spark, Seq(indexDir)).count()
     val numSegments =
       // partitionedResume: the accumulator misses partitions skipped on a
       // resume, so count the published artifact (a metadata-only scan)
       if (stages.ranStages.contains("postings") && !cfg.partitionedResume)
         segCounter.value.longValue()
-      else spark.read.parquet(s"$indexDir/postings.parquet").count()
+      else IndexFiles.postings(spark, Seq(indexDir)).count()
     val meta = IndexMeta(numDocs, totalTokens, avgdl, cfg.k1, cfg.b,
       cfg.docsPerShard, numTerms, numSegments, cfg.fingerprint)
     Metrics.writeMetaJson(s"$indexDir/meta.json", meta)

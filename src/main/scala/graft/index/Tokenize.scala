@@ -35,20 +35,36 @@ object Tokenize {
   def termsCol(content: Column): Column =
     regexp_extract_all(lower(content), lit(TokenPattern), lit(0))
 
-  @inline private def isTokChar(c: Char): Boolean =
+  /** The ASCII token-char class of the fast paths: [A-Za-z0-9_], i.e. the
+    * chars that `TokenPattern` matches after ASCII lowercasing. Shared with
+    * the index build's draft encoder, so build and query cannot drift.
+    */
+  @inline private[graft] def isTokChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
       (c >= 'A' && c <= 'Z') || c == '_'
+
+  /** ASCII lowercasing of one char (1:1; other chars unchanged). */
+  @inline private[graft] def asciiLower(c: Char): Char =
+    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** Whether every char of `s` is ASCII — the gate of the fast paths: any
+    * char ≥ 0x80 sends the whole string to the regex definition of record.
+    */
+  private[graft] def isAscii(s: String): Boolean = {
+    val n = s.length
+    var i = 0
+    while (i < n && s.charAt(i) < 0x80) i += 1
+    i == n
+  }
 
   /** JVM-side twin — must match `termsCol` exactly. ASCII fast path (run
     * scanner, no regex); non-ASCII input falls back to the regex definition.
     */
   def tokenize(s: String): Array[String] = {
+    if (!isAscii(s)) return tokenizeRegex(s)
     val n = s.length
-    var i = 0
-    while (i < n && s.charAt(i) < 0x80) i += 1
-    if (i < n) return tokenizeRegex(s)
     val out = Array.newBuilder[String]
-    i = 0
+    var i = 0
     while (i < n) {
       if (isTokChar(s.charAt(i))) {
         val start = i
@@ -57,11 +73,7 @@ object Tokenize {
         val len = i - start
         val buf = new Array[Char](len)
         var j = 0
-        while (j < len) {
-          val c = s.charAt(start + j)
-          buf(j) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-          j += 1
-        }
+        while (j < len) { buf(j) = asciiLower(s.charAt(start + j)); j += 1 }
         out += new String(buf)
       } else i += 1
     }

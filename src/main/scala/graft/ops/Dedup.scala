@@ -26,7 +26,7 @@ object Dedup {
     * itself: at 100 TB a full-text group/join key would move the corpus
     * through the exchange just to compare equality, whereas the hash key
     * moves 64 B/row (the same keys+hash discipline as the index build's
-    * sha-verify join, IndexBuilder.verifyShaSidecar). A sha256 collision
+    * sha-verify join, IndexBuilder.verifyShaKeyed). A sha256 collision
     * would conflate two distinct documents; at 2^128 collision resistance
     * that is the standard content-addressing assumption (git, the reference's
     * own sha256 row invariant).

@@ -23,7 +23,7 @@ import graft.index.{Codec, IndexBuilder, IndexConfig, IndexFiles, Metrics, Token
   *  - each batch directory is committed by its meta.json (written last);
   *    a restart recomputes the next docId from committed batches only and
   *    overwrites any uncommitted partial batch — idempotent resume, the
-  *    streaming twin of the staged build's stage markers
+  *    streaming twin of the index build's stage markers
   */
 object IncrementalIndexer {
 
@@ -118,7 +118,7 @@ object IncrementalIndexer {
         .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
     } else {
       // positional deltas: ordinals via posexplode, per-(term, doc) ascending
-      // position lists; same PostingSegP shape as the positional fast build,
+      // position lists; same PostingSegP shape as the positional index build,
       // so composite and compacted phrase search work over streamed batches
       withId
         .select($"docId", (($"docId" / dps).cast("int")).as("shard"), $"dlen",

@@ -7,19 +7,29 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexFiles}
 import graft.query.Searcher
 import graft.SparkEntry
 
-/** Dump `.explain("formatted")` physical plans for the query surfaces this
-  * round touches, into `plans/r06/<name>_<suffix>.txt` — plan SHAPE is
-  * scale-independent, so a small deterministic corpus is enough. The suffix
-  * (`before`/`after`) comes from args so the same binary documents both
-  * sides of a change.
+/** Dump `.explain("formatted")` physical plans into
+  * `plans/r06/<name>_<suffix>.txt` — plan SHAPE is scale-independent, so a
+  * small deterministic corpus is enough. The suffix (`before`/`after`) comes
+  * from args so the same binary documents both sides of a change.
+  *
+  * Names are the engine's query surfaces below, `bm25_scan` (the query-side
+  * postings scan: `term IN (...)` must reach the parquet scan as a pushed
+  * filter) and any `SparkEntry.queries` gate; `all` (the default) dumps the
+  * surfaces plus the gates whose physical shape matters at scale
+  * (pushdown/broadcast/codegen, SURVEY.md §4).
   *
   * Usage: sbt "runMain graft.tools.PlanDump <suffix> [name,...]"
   */
 object PlanDump {
+
+  /** The gates dumped by `all`. */
+  private val DefaultGates: Seq[String] = Seq("q_scan_project", "q_membership_filter",
+    "q1_agg", "q_join_inner_dup", "q_topk", "q_window_rank", "q_ann_ivf",
+    "q_ann_topk", "q_sessionize", "q_multimodal_real", "q_token_counts")
 
   def main(args: Array[String]): Unit = {
     val suffix = args.headOption.getOrElse("before")
@@ -67,11 +77,15 @@ object PlanDump {
         searcher.searchBatch(Seq(("a", "import util_7", 10), ("b", "def class", 10))))
       dump("filtered",
         searcher.searchWhere("import util_7", 10, col("lang") === "scala").toDF())
+      dump("bm25_scan", IndexFiles.postings(spark, Seq(s"$work/index"))
+        .filter(col("term").isin("import", "def", "util_7")))
 
       val qmap = SparkEntry.queries
-      for (name <- Seq("q_ann_ivf", "q_ann_topk", "q_sessionize",
-          "q_multimodal_real", "q_token_counts") if qmap.contains(name))
-        dump(name, qmap(name)(spark, sfDir))
+      val gates = if (wanted("all")) DefaultGates else wanted.toSeq.sorted
+      for (name <- gates if qmap.contains(name))
+        try dump(name, qmap(name)(spark, sfDir))
+        catch { case e: Exception =>
+          println(s"[plandump] $name failed: ${e.getMessage.take(200)}") }
     } finally {
       spark.stop()
       graft.FsUtil.deleteRecursively(work)

@@ -60,12 +60,17 @@ class IndexEndToEndSpec extends AnyFunSuite {
   }
 
   test("segment lineage manifests cover every build partition with metrics") {
-    val m = spark.read.parquet(s"$indexDir/manifests/segments.parquet")
-    assert(m.count() > 0)
     import spark.implicits._
-    val total = m.agg(org.apache.spark.sql.functions.sum("postings")).as[Long].head()
-    // total postings == rows of tf
-    val tfRows = spark.read.parquet(s"$indexDir/tf.parquet").count()
-    assert(total == tfRows, s"manifest postings $total != tf rows $tfRows")
+    import org.apache.spark.sql.functions.sum
+    val m = spark.read.parquet(s"$indexDir/manifests/postings.parquet")
+      .as[PartitionManifest].collect()
+    assert(m.nonEmpty && m.forall(e => e.sha256.nonEmpty && e.elapsedMs >= 1))
+    // one entry per reduce partition (the build negotiates the session's
+    // shuffle width at this corpus size)
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(m.map(_.partition).sorted.toSeq == (0 until width))
+    // total postings == Σdf of the dictionary
+    val sumDf = spark.read.parquet(s"$indexDir/dict.parquet").agg(sum("df")).as[Long].head()
+    assert(m.map(_.postings).sum == sumDf, s"manifest postings != dict Σdf $sumDf")
   }
 }

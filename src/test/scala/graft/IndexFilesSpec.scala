@@ -53,6 +53,13 @@ class IndexFilesSpec extends AnyFunSuite {
     assert(n <= 9, s"indexBatch launched $n jobs")
   }
 
+  test("a plain buildFast launches at most 22 jobs") {
+    val (corpusDir, _) = TestSpark.builtIndex
+    val n = jobsOf(IndexBuilder.buildFast(spark, corpusDir, s"$work/build_jobs",
+      IndexConfig(docsPerShard = 256)))
+    assert(n <= 22, s"buildFast launched $n jobs")
+  }
+
   test("a Searcher over a positional-ness mix fails loudly") {
     val ex = intercept[IllegalArgumentException] {
       new Searcher(spark, indexDir, Seq(positionalDelta))

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{Codec, IndexBuilder, IndexConfig, Tokenize}
 
 /** Checkpoint-resume golden test (BASELINE.md "resume" row): kill mid-build
   * (simulated via stopAfterStage), rerun, and require (a) finished stages are
@@ -19,26 +19,26 @@ class ResumeSpec extends AnyFunSuite {
   test("interrupted build resumes and produces an identical index") {
     val (corpusDir, fullIndexDir) = TestSpark.builtIndex
     val resumeDir = s"${TestSpark.workDir}/index_resume"
+    val cfg = IndexConfig(docsPerShard = 256)
 
-    // simulate a crash after the tf stage
-    val stopped = IndexBuilder.build(spark, corpusDir, resumeDir,
-      IndexConfig(docsPerShard = 256, stopAfterStage = "tf"))
+    // simulate a crash after the docs stage
+    val stopped = IndexBuilder.buildFast(spark, corpusDir, resumeDir,
+      cfg.copy(stopAfterStage = "docs"))
     assert(stopped == null)
-    assert(Files.exists(Paths.get(s"$resumeDir/_stage_tf.json")))
+    assert(Files.exists(Paths.get(s"$resumeDir/_stage_docs.json")))
+    assert(!Files.exists(Paths.get(s"$resumeDir/_stage_dlens.json")))
     assert(!Files.exists(Paths.get(s"$resumeDir/meta.json")))
 
-    // resume: same config → docs+tf skipped, rest built
-    val tracker = new graft.index.StageTracker(resumeDir,
-      IndexConfig(docsPerShard = 256).fingerprint, "")
-    assert(tracker.isDone("docs") && tracker.isDone("tf"))
-    assert(!tracker.isDone("segments"))
-    val meta = IndexBuilder.build(spark, corpusDir, resumeDir,
-      IndexConfig(docsPerShard = 256))
+    // resume: same config → docs skipped, the rest built
+    val tracker = new graft.index.StageTracker(resumeDir, cfg.fingerprint, "")
+    assert(tracker.isDone("docs") && !tracker.isDone("postings"))
+    val meta = IndexBuilder.buildFast(spark, corpusDir, resumeDir, cfg)
     assert(meta != null && Files.exists(Paths.get(s"$resumeDir/meta.json")))
+    assert(meta == IndexBuilder.readMeta(fullIndexDir))
 
     // identical postings content vs the uninterrupted build
     def segs(dir: String) = spark.read.parquet(s"$dir/postings.parquet")
-      .select("term", "shard", "n", "docBytes", "tfBytes")
+      .select("term", "shard", "n", "sumTf", "docBytes", "tfBytes")
     assert(segs(resumeDir).exceptAll(segs(fullIndexDir)).isEmpty)
     assert(segs(fullIndexDir).exceptAll(segs(resumeDir)).isEmpty)
   }
@@ -81,35 +81,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
-  test("fast-path build produces an identical index to the staged build") {
-    val (corpusDir, stagedDir) = TestSpark.builtIndex
-    val fastDir = s"${TestSpark.workDir}/index_fast"
-    val meta = graft.index.IndexBuilder.buildFast(spark, corpusDir, fastDir,
-      graft.index.IndexConfig(docsPerShard = 256))
-    val stagedMeta = graft.index.IndexBuilder.readMeta(stagedDir)
-    assert(meta.numDocs == stagedMeta.numDocs &&
-      meta.totalTokens == stagedMeta.totalTokens &&
-      meta.numTerms == stagedMeta.numTerms &&
-      meta.numSegments == stagedMeta.numSegments &&
-      meta.avgdl == stagedMeta.avgdl)
-    def segs(dir: String) = spark.read.parquet(s"$dir/postings.parquet")
-      .select("term", "shard", "n", "sumTf", "docBytes", "tfBytes")
-    assert(segs(fastDir).exceptAll(segs(stagedDir)).isEmpty)
-    assert(segs(stagedDir).exceptAll(segs(fastDir)).isEmpty)
-    def docs(dir: String) = spark.read.parquet(s"$dir/docs.parquet")
-    assert(docs(fastDir).exceptAll(docs(stagedDir)).isEmpty)
-    // buildFast emits per-partition lineage manifests too (north-star
-    // metrics): every encode partition accounted, postings sum == Σdf
+  test("postings and doc lengths equal an independent tokenize of the corpus") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{sum => fsum}
-    val m = spark.read.parquet(s"$fastDir/manifests/postings.parquet")
-    assert(m.count() > 0 && !m.filter($"sha256" === "").head(1).nonEmpty)
-    val mPost = m.agg(fsum("postings")).as[Long].head()
-    val dictDf = spark.read.parquet(s"$fastDir/dict.parquet")
-      .agg(fsum("df")).as[Long].head()
-    assert(mPost == dictDf, s"manifest postings $mPost != dict df sum $dictDf")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$fastDir/manifests/postings.json")))
+    import org.apache.spark.sql.functions._
+    val (corpusDir, indexDir) = TestSpark.builtIndex
+    val docs = spark.read.parquet(s"$indexDir/docs.parquet")
+    // reference postings: the SQL tokenizer over the corpus, keyed by the
+    // docIds the docs table binds to (repo, path, commit)
+    val want = spark.read.parquet(s"$corpusDir/files.parquet")
+      .join(docs.select("docId", "repo", "path", "commit"), Seq("repo", "path", "commit"))
+      .select($"docId", explode(Tokenize.termsCol($"content")).as("term"))
+      .groupBy("term", "docId").agg(count(lit(1)).cast("int").as("tf"))
+      .select("term", "docId", "tf")
+    val got = spark.read.parquet(s"$indexDir/postings.parquet").as[PostingSeg]
+      .flatMap(s => Codec.decodeDeltas(s.docBytes, s.n)
+        .zip(Codec.decodeInts(s.tfBytes, s.n)).map { case (d, tf) => (s.term, d, tf) })
+      .toDF("term", "docId", "tf")
+    assert(got.exceptAll(want).isEmpty)
+    assert(want.exceptAll(got).isEmpty)
+    // docs.dlen is the per-doc token count (0 for a doc without tokens)
+    val sums = want.groupBy("docId").agg(sum("tf").cast("int").as("sumTf"))
+    assert(docs.join(sums, Seq("docId"), "left")
+      .filter(coalesce($"sumTf", lit(0)) =!= $"dlen").isEmpty)
+    // the encode manifest accounts for every posting
+    val manifest = spark.read.parquet(s"$indexDir/manifests/postings.parquet")
+    assert(manifest.agg(sum("postings")).as[Long].head() == want.count())
   }
 
   test("index content is independent of build partition count (cluster-size determinism)") {
@@ -137,7 +133,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("per-partition postings resume re-encodes only the missing partitions") {
-    val (corpusDir, stagedDir) = TestSpark.builtIndex
+    val (corpusDir, fullDir) = TestSpark.builtIndex
     val cfg = IndexConfig(docsPerShard = 256, buildPartitions = 8,
       partitionedResume = true)
     val rDir = s"${TestSpark.workDir}/index_partres"
@@ -169,11 +165,11 @@ class ResumeSpec extends AnyFunSuite {
     assert(meta != null && Files.exists(Paths.get(s"$rDir/meta.json")))
     assert(!Files.exists(Paths.get(s"$rDir/_postings_parts")))
 
-    // content identical to the staged build of the same corpus
+    // content identical to the uninterrupted build of the same corpus
     def segs(dir: String) = spark.read.parquet(s"$dir/postings.parquet")
       .select("term", "shard", "n", "sumTf", "docBytes", "tfBytes")
-    assert(segs(rDir).exceptAll(segs(stagedDir)).isEmpty)
-    assert(segs(stagedDir).exceptAll(segs(rDir)).isEmpty)
+    assert(segs(rDir).exceptAll(segs(fullDir)).isEmpty)
+    assert(segs(fullDir).exceptAll(segs(rDir)).isEmpty)
     // and queries over it match the oracle
     val files = spark.read.parquet(s"$corpusDir/files.parquet")
     val s = new graft.query.Searcher(spark, rDir)
@@ -264,9 +260,8 @@ class ResumeSpec extends AnyFunSuite {
       FileRow("r", "p", "c", "scala", "a b"),
       FileRow("r", "p", "c", "scala", "a b"))
     rows.toDF().write.mode("overwrite").parquet(s"$dir/files.parquet")
-    spark.emptyDataFrame
     val ex = intercept[IllegalArgumentException] {
-      IndexBuilder.build(spark, dir, s"$dir/idx",
+      IndexBuilder.buildFast(spark, dir, s"$dir/idx",
         IndexConfig(verifySha = false))
     }
     assert(ex.getMessage.contains("duplicate"))
@@ -280,12 +275,8 @@ class ResumeSpec extends AnyFunSuite {
     Seq(("r", "p", "c", "deadbeef")).toDF("repo", "path", "commit", "ref_sha256")
       .write.mode("overwrite").parquet(s"$dir/ref_sha.parquet")
     val ex = intercept[IllegalArgumentException] {
-      IndexBuilder.build(spark, dir, s"$dir/idx", IndexConfig())
+      IndexBuilder.buildFast(spark, dir, s"$dir/idx", IndexConfig())
     }
     assert(ex.getMessage.contains("sha256"))
-    val exFast = intercept[IllegalArgumentException] {
-      IndexBuilder.buildFast(spark, dir, s"$dir/idx_fast", IndexConfig())
-    }
-    assert(exFast.getMessage.contains("sha256"))
   }
 }

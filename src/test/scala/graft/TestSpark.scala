@@ -30,7 +30,7 @@ object TestSpark {
     val c = s"$workDir/corpus"
     val i = s"$workDir/index"
     corpus.CorpusGen.writeCorpus(spark, corpusCfg, c)
-    index.IndexBuilder.build(spark, c, i, index.IndexConfig(docsPerShard = 256))
+    index.IndexBuilder.buildFast(spark, c, i, index.IndexConfig(docsPerShard = 256))
     (c, i)
   }
 
