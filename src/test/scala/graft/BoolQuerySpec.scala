@@ -127,15 +127,45 @@ class BoolQuerySpec extends AnyFunSuite {
     }
   }
 
-  test("flat trees agree with the dedicated AND / OR kernels") {
-    val andTree = got("util_7 def")
-    val andFlat = searcher.search("util_7 def", 10).collect()
-      .map(h => (h.docId, h.score)).toSeq
-    assert(andTree == andFlat)
-    val orTree = got("util_7 OR def")
-    val orFlat = searcher.searchOr("util_7 def", 10).collect()
-      .map(h => (h.docId, h.score)).toSeq
-    assert(orTree == orFlat)
+  test("flat AND / OR / NOT / filtered queries: rank identity vs oracle, 3+ and repeated terms") {
+    import org.apache.spark.sql.functions.{array_contains, col}
+    val docs = spark.read.parquet(s"$indexDir/docs.parquet")
+    val withId = files.join(docs.select("docId", "repo", "path", "commit"),
+      Seq("repo", "path", "commit")).select("docId", "content")
+    def hits(ds: org.apache.spark.sql.Dataset[graft.Hit]) =
+      ds.collect().map(h => (h.docId, h.score)).toSeq
+    def oracle(q: String, k: Int, conjunctive: Boolean = true,
+               restrictTo: Option[org.apache.spark.sql.DataFrame] = None) =
+      OracleBm25.topKScalable(withId, q, k, conjunctive = conjunctive,
+        restrictTo = restrictTo).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // unsorted, repeated, 3+ distinct terms: the score must be summed once per
+    // DISTINCT term in ascending-term order whatever the query's token order
+    val queries = Seq("def util_7 import def", "val import class def",
+      "util_3 import val util_3")
+    for (q <- queries; k <- Seq(10, 200)) {
+      val and = hits(searcher.search(q, k))
+      assert(and == oracle(q, k), s"AND '$q' k=$k")
+      assert(and.nonEmpty, s"vacuous AND '$q'")
+      val or = hits(searcher.searchOr(q, k))
+      assert(or == oracle(q, k, conjunctive = false), s"OR '$q' k=$k")
+      assert(or.length > and.length || k <= and.length, s"OR '$q' adds nothing")
+    }
+    for ((q, ne) <- Seq(("def util_7 import def", "util_3"),
+                        ("val import class def", "util_7 util_1 util_7"))) {
+      val negs = graft.index.Tokenize.tokenize(ne).distinct
+      val keep = withId.filter(!negs.map(t =>
+        array_contains(graft.index.Tokenize.termsCol(col("content")), t)).reduce(_ || _))
+      val g = hits(searcher.searchNot(q, ne, 50))
+      assert(g == oracle(q, 50, restrictTo = Some(keep)), s"'$q' NOT '$ne'")
+      assert(g.nonEmpty && g != hits(searcher.search(q, 50)), s"vacuous NOT '$q' - '$ne'")
+    }
+    for ((q, pred) <- Seq(("def util_7 import def", col("lang") === "scala"),
+                          ("val import class def", col("lang") =!= "py"))) {
+      val g = hits(searcher.searchWhere(q, 50, pred))
+      assert(g == oracle(q, 50, restrictTo = Some(docs.filter(pred).select("docId"))),
+        s"'$q' WHERE $pred")
+      assert(g.nonEmpty && g != hits(searcher.search(q, 50)), s"vacuous WHERE '$q'")
+    }
   }
 
   test("missing terms: dead required term empties, dead OR branch drops out") {
