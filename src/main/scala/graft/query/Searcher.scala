@@ -9,7 +9,13 @@ import org.apache.spark.util.LongAccumulator
 import graft._
 import graft.index.{Codec, IndexBuilder, IndexFiles, IndexMeta, Tokenize, Tombstones}
 
-/** Top-k conjunctive (AND) BM25 search over the compressed posting index.
+/** Top-k BM25 search over the compressed posting index.
+  *
+  * Every non-positional mode — AND, OR, NOT, metadata-filtered, the
+  * prefix / regex / wildcard / fuzzy / term-range expansions, more-like-this
+  * and boolean trees — compiles to a [[BoolQ]] tree and runs through one
+  * per-shard harness and one kernel, [[Searcher.scoreShardBool]]; phrase,
+  * span and near queries keep their positional kernels.
   *
   * The PSI analog: a query is a multi-list intersection — the same dataflow as
   * the reference's per-bucket dense-map probe
@@ -21,9 +27,9 @@ import graft.index.{Codec, IndexBuilder, IndexFiles, IndexMeta, Tokenize, Tombst
   * re-shuffle of anything but the query's own (filtered) segments.
   *
   * Block-max pruning: each 128-posting block carries an admissible upper
-  * bound of the BM25 tf-normalization; a candidate is scored only if
-  * Σ_t idf_t·(k1+1)·blockMax_t can still beat the current k-th score —
-  * the WAND/BMW idea applied to the conjunctive traversal.
+  * bound of the BM25 tf-normalization; a candidate is scored only if the
+  * tree's bound over Σ_t idf_t·(k1+1)·blockMax_t can still beat the current
+  * k-th score — the WAND/BMW idea applied to the tree traversal.
   */
 class Searcher(spark: SparkSession, indexDir: String,
                deltaDirs: Seq[String] = Nil,
@@ -239,11 +245,13 @@ class Searcher(spark: SparkSession, indexDir: String,
   def idf(numDocs: Long, df: Long): Double =
     math.log(1.0 + (numDocs - df + 0.5) / (df + 0.5))
 
-  /** Top-k hits `(docId, score)`, rank-identical to the brute-force oracle:
-    * deterministic tiebreak (score desc, docId asc), per-doc term scores
-    * accumulated in ascending-term order in Double.
+  /** Top-k hits `(docId, score)` of the conjunction of the query's terms,
+    * rank-identical to the brute-force oracle: deterministic tiebreak
+    * (score desc, docId asc), per-doc term scores accumulated in
+    * ascending-term order in Double.
     */
-  def search(query: String, k: Int): Dataset[Hit] = searchImpl(query, k, null)
+  def search(query: String, k: Int): Dataset[Hit] =
+    searchFlat(Tokenize.tokenize(query).toSeq, conjunctive = true, k)
 
   /** CURSOR pagination (Lucene's `searchAfter`): the next k hits strictly
     * AFTER `after` in the exact (score desc, docId asc) ranking. Unlike
@@ -256,183 +264,105 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   def searchAfter(query: String, k: Int, after: Hit): Dataset[Hit] = {
     require(after != null, "searchAfter needs a cursor hit; use search() for page 1")
-    searchImpl(query, k, after)
+    searchFlat(Tokenize.tokenize(query).toSeq, conjunctive = true, k, after)
   }
 
-  private def searchImpl(query: String, k: Int, after: Hit): Dataset[Hit] =
-    shardHits(query, k, after).fold(spark.emptyDataset[Hit])(
-      _.orderBy($"score".desc, $"docId".asc).limit(k))
+  /** Top-k of the flat AND (`conjunctive`) or OR tree over `terms`, after
+    * the cursor when one is given; empty when there is no term.
+    */
+  private def searchFlat(terms: Seq[String], conjunctive: Boolean, k: Int,
+                         after: Hit = null): Dataset[Hit] =
+    topK(flatTree(terms, conjunctive).flatMap(treeHits(_, k, after)), k)
 
-  /** The conjunctive query's UNORDERED per-shard hit stream: each candidate
-    * shard emits its own top-k (after the cursor, when one is given) from
-    * [[Searcher.scoreShard]]; the caller orders and cuts. `None` when the
-    * query cannot match (no token, a term absent from the dictionary, no
-    * shard holding every term), decided on the driver with no Spark job.
+  /** The flat AND / OR tree over the DISTINCT terms in ascending order —
+    * never the raw token sequence: a tree sums its children in child order,
+    * so unsorted leaves would add in another order than the oracle, and a
+    * repeated leaf would score twice. None when there is no term.
+    */
+  private def flatTree(terms: Seq[String], conjunctive: Boolean): Option[BoolQ] = {
+    val leaves: Vector[BoolQ] = terms.distinct.sorted.map(BoolQ.Term(_)).toVector
+    if (leaves.isEmpty) None
+    else Some(if (conjunctive) BoolQ.And(leaves) else BoolQ.Or(leaves))
+  }
+
+  /** The global top-k cut of a per-shard hit stream. */
+  private def topK(hits: Option[Dataset[Hit]], k: Int): Dataset[Hit] =
+    hits.fold(spark.emptyDataset[Hit])(_.orderBy($"score".desc, $"docId".asc).limit(k))
+
+  /** The per-shard harness of every non-positional BM25 mode: a boolean
+    * tree's UNORDERED per-shard hit stream — each candidate shard emits its
+    * own top-k (after the cursor, when one is given) from
+    * [[Searcher.scoreShardBool]]; the caller orders and cuts. `None` when
+    * the tree cannot match (a multi-term leaf expands to nothing where a
+    * match needs it, a required term is absent from the dictionary, no
+    * shard can satisfy the tree), decided on the driver with no Spark job.
     * With `k = Int.MaxValue` the stream is the FULL match set with exact
     * scores, at most `docsPerShard` rows per shard.
+    *
+    * `filter` (searchWhere) is the docs-table predicate behind the tree's
+    * [[Searcher.FilterTerm]] leaf: its docId list is packed per shard into
+    * ordinary posting segments with zero idf, so it joins the traversal as
+    * one more list and adds no score mass. The driver does not know which
+    * shards hold passing docs, so for shard pruning the leaf is present in
+    * every shard.
     */
-  private def shardHits(query: String, k: Int, after: Hit): Option[Dataset[Hit]] = {
-    val terms = Tokenize.tokenize(query).distinct.sorted
-    if (terms.isEmpty) return None
-    val info = lookupTerms(terms)
-    // AND semantics: any term absent from the dictionary → empty result.
+  private def treeHits(tree0: BoolQ, k: Int, after: Hit = null,
+                       filter: Option[org.apache.spark.sql.Column] = None)
+      : Option[Dataset[Hit]] = {
+    val tree = rewriteBoolTree(tree0) match {
+      case None => return None
+      case Some(t) => t
+    }
+    require(!BoolQuery.matchesEmptyDoc(tree),
+      s"pure-negative / match-all boolean query (matches a document with " +
+        s"none of its terms — unanswerable from posting lists): $tree")
+    val dictTerms = BoolQuery.leafTerms(tree).filter(_ != Searcher.FilterTerm)
+    if (dictTerms.isEmpty) return None
+    val info = lookupTerms(dictTerms)
+    val isFilter: String => Boolean = t => filter.nonEmpty && t == Searcher.FilterTerm
+    // a term absent from the dictionary can never be present anywhere.
     // The analog of the reference's empty-party early exit
     // (psi/utils/bucket.cc:54-60).
-    if (terms.exists(t => info(t).df == 0L)) return None
+    if (!BoolQuery.satisfiable(tree, t => isFilter(t) || info(t).df > 0L)) return None
+    val dictLive = dictTerms.filter(t => info(t).df > 0L)
+    // FilterTerm (leading space) sorts before every real token
+    val live = if (filter.nonEmpty) Searcher.FilterTerm +: dictLive else dictLive
     val idfByTerm: Map[String, Double] =
-      terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-
-    // shards holding ALL query terms — intersection of the cached per-term
-    // shard sets, computed driver-side with no Spark job
-    val candShards: Array[Int] =
-      terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
+      dictLive.map(t => t -> idf(meta.numDocs, info(t).df)).toMap ++
+        filter.map(_ => Searcher.FilterTerm -> 0.0)
+    // per-shard prune by the tree's own satisfiability over the cached
+    // per-term shard sets, driver-side with no Spark job
+    val shardSets: Map[String, Array[Int]] =
+      dictLive.map(t => t -> info(t).shards).toMap
+    val candShards: Seq[Int] = dictLive.flatMap(t => shardSets(t)).distinct.sorted
+      .filter { sh =>
+        BoolQuery.satisfiable(tree, t => isFilter(t) || shardSets.get(t).exists(a =>
+          java.util.Arrays.binarySearch(a, sh) >= 0))
+      }
     if (candShards.isEmpty) return None
+    val required = BoolQuery.requiredTerms(tree).filter(live.contains).sorted
+
+    // phrase leaves ("a b" quoted) need adjacency → the positional kernel;
+    // phrase-free trees keep the block-max-pruned non-positional path below
+    if (BoolQuery.phraseLeaves(tree).nonEmpty)
+      return Some(searchBoolTreePos(tree, k, live, required, idfByTerm, candShards))
 
     // `term IN (...) AND shard IN (...)` both reach the parquet scan. Row
     // groups within a postings file are term-ranged, so the scan skips row
     // groups only once a file holds several; a file that is a single row
     // group (small indexes) is read whole and filtered after the scan.
-    val segsC = postings.filter($"term".isin(terms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
-
+    val termSegs = postings.filter($"term".isin(dictLive: _*) &&
+      $"shard".isin(candShards: _*)).as[PostingSeg]
+    val segsC = filter.fold(termSegs)(p =>
+      termSegs.unionByName(filterSegs(p, candShards), allowMissingColumns = true))
+      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val termsSorted = terms
-    val pruning = usePruning
-    val reB = needReBound
-    val cursor = after
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    Some(cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del)
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.size < termsSorted.length || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          val lens = Searcher.mergeLens(lenIt)
-          Searcher.scoreShard(segsByTerm, lens, termsSorted, idfByTerm,
-            k1, b, avgdl, k, accS, accP, pruning, deleted, reB, cursor)
-        }
-    })
-  }
-
-  /** Conjunctive top-k BM25 with NEGATED terms (`a AND b AND NOT c…`):
-    * candidates must contain every `query` term and NO `exclude` term.
-    * Each negative term's posting list (restricted to the candidate shards
-    * by the same pushed `term IN`/`shard IN` filters) rides the per-shard
-    * EXCLUSION mechanism tombstoned documents use — `decodeDeleted` merges
-    * the lists — so the scoring kernel is unchanged: survivors' scores are
-    * bit-identical to the plain conjunctive query (negative terms carry no
-    * score mass; positive statistics stay full-corpus — Lucene's NOT
-    * semantics). Block-max pruning stays ON in shards holding negative
-    * postings (withoutDeleted rebuilds the filtered lists' block alignment
-    * — same admissibility discipline as deletions); a term that is both
-    * positive and negative is unsatisfiable → empty result.
-    * A 100 TB note: a hot negative term costs its list decode in candidate
-    * shards — unavoidable under exact NOT semantics (Lucene pays the same).
-    */
-  def searchNot(query: String, exclude: String, k: Int): Dataset[Hit] = {
-    val terms = Tokenize.tokenize(query).distinct.sorted
-    val negAll = Tokenize.tokenize(exclude).distinct.sorted
-    if (terms.isEmpty || negAll.exists(terms.contains))
-      return spark.emptyDataset[Hit]
-    val info = lookupTerms(terms ++ negAll)
-    if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
-    val neg = negAll.filter(t => info(t).df > 0L) // absent negatives: no-ops
-    val idfByTerm: Map[String, Double] =
-      terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-    val candShards: Array[Int] =
-      terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-
-    val negSegs: Dataset[PostingSeg] =
-      if (neg.isEmpty) spark.emptyDataset[PostingSeg]
-      else postings.filter($"term".isin(neg: _*) &&
-        $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-        .map(_.copy(term = Searcher.DeletedTerm, sumTf = 0L))
-    val segsC = postings.filter($"term".isin(terms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-      .unionByName(negSegs, allowMissingColumns = true)
-      .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
-
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val termsSorted = terms
     val pruning = usePruning
     val reB = needReBound
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    Some(cogroupLens(segsC, candShards)(_.shard) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del)
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.size < termsSorted.length || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShard(segsByTerm, Searcher.mergeLens(lenIt), termsSorted,
-            idfByTerm, k1, b, avgdl, k, accS, accP, pruning, deleted, reB)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
-
-  /** Conjunctive top-k BM25 restricted to documents satisfying a metadata
-    * predicate over the docs table (`lang`, `repo`, `path`, …). The filter's
-    * docId set rides the SAME galloping intersection as the query terms:
-    * per shard it becomes one more delta-compressed sorted list, with zero
-    * idf so it contributes no score mass (x + 0.0 ≡ x for finite doubles —
-    * scores stay bit-identical to the unfiltered formula on the surviving
-    * docs, proven against the oracle). Because the shortest list leads the
-    * traversal, a SELECTIVE filter prunes work instead of adding a
-    * post-hoc scan.
-    */
-  def searchWhere(query: String, k: Int,
-                  predicate: org.apache.spark.sql.Column): Dataset[Hit] = {
-    val terms = Tokenize.tokenize(query).distinct.sorted
-    if (terms.isEmpty) return spark.emptyDataset[Hit]
-    val info = lookupTerms(terms)
-    if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
-    val idfByTerm: Map[String, Double] =
-      terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap +
-        (Searcher.FilterTerm -> 0.0)
-    val candShards: Array[Int] =
-      terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-
-    // the filter list: a metadata-only scan of the docs table, packed into
-    // ordinary posting segments (tf = 1, admissible block bound = 0).
-    // r6: packed per scan partition after a LOCAL sort — no groupByKey
-    // exchange per query (the r5 plan shuffled the filtered ids by shard
-    // before the cogroup). Partial runs of one shard from different scan
-    // partitions may interleave (docs.parquet row order is layout-
-    // dependent), so the scoring cogroup below merges the shard's partials
-    // order-independently (decode → merge-sort → re-encode, shard-bounded)
-    // before they reach the kernel.
-    val dps = meta.docsPerShard
-    val filterSegs = docs.filter(predicate)
-      .select($"docId", (($"docId" / dps).cast("int")).as("shard"))
-      .filter($"shard".isin(candShards.toSeq: _*))
-      .sortWithinPartitions($"shard", $"docId")
-      .as[(Long, Int)]
-      .mapPartitions(it =>
-        Searcher.packRuns(Searcher.FilterTerm, it, sumTfPerId = true))
-
-    val segsC = postings.filter($"term".isin(terms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-      .unionByName(filterSegs, allowMissingColumns = true)
-      .unionByName(exclusionSegs(candShards.toSeq), allowMissingColumns = true)
-
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    // FilterTerm (leading space) sorts before every real token, preserving the
-    // ascending-term accumulation order (0.0 is added first — the identity)
-    val termsAll: Seq[String] = (Searcher.FilterTerm +: terms.toSeq)
-    val pruning = usePruning
-    val reB = needReBound
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del)
         val segsByTerm0 = rest.groupBy(_.term)
         // packRuns partials of the filter list may interleave across scan
         // partitions — merge them order-independently into ONE run before
@@ -442,16 +372,79 @@ class Searcher(spark: SparkSession, indexDir: String,
             Searcher.FilterTerm, Array(Searcher.mergeZeroBoundRuns(fs)))
           case _ => segsByTerm0
         }
-        // the filter list must be present too (a shard with no matching
-        // docs has no filter segment → early exit, AND semantics)
-        if (segsByTerm.size < termsAll.length || !lenIt.hasNext) Iterator.empty
+        // a shard missing a required list (the filter's too: a shard with
+        // no passing doc has no filter segment) cannot match
+        if (segsByTerm.isEmpty || !lenIt.hasNext ||
+            required.exists(t => !segsByTerm.contains(t))) Iterator.empty
         else {
           accT.add(1)
-          Searcher.scoreShard(segsByTerm, Searcher.mergeLens(lenIt), termsAll,
-            idfByTerm, k1, b, avgdl, k, accS, accP, pruning, deleted, reB)
+          Searcher.scoreShardBool(segsByTerm, Searcher.mergeLens(lenIt), tree,
+            live, required, idfByTerm, k1, b, avgdl, k, after, accS, accP,
+            pruning, Searcher.decodeDeleted(del), reB)
         }
+    })
+  }
+
+  /** A metadata predicate's docId list as per-shard posting runs: a
+    * metadata-only scan of the docs table, packed into ordinary posting
+    * segments (tf = 1, admissible block bound = 0) under
+    * [[Searcher.FilterTerm]] per scan partition after a LOCAL sort, so the
+    * filter adds no exchange. Partial runs of one shard from different scan
+    * partitions may interleave (docs.parquet row order is layout-
+    * dependent); the scoring harness merges them.
+    */
+  private def filterSegs(predicate: org.apache.spark.sql.Column,
+                         candShards: Seq[Int]): Dataset[PostingSeg] = {
+    val dps = meta.docsPerShard
+    docs.filter(predicate)
+      .select($"docId", (($"docId" / dps).cast("int")).as("shard"))
+      .filter($"shard".isin(candShards: _*))
+      .sortWithinPartitions($"shard", $"docId")
+      .as[(Long, Int)]
+      .mapPartitions(it =>
+        Searcher.packRuns(Searcher.FilterTerm, it, sumTfPerId = true))
+  }
+
+  /** Conjunctive top-k BM25 with NEGATED terms (`a AND b AND NOT c…`):
+    * candidates must contain every `query` term and NO `exclude` term —
+    * the tree `And(terms…, Not(Term(n))…)`. A NOT clause adds 0.0, which
+    * leaves a positive finite sum unchanged, so survivors' scores are
+    * bit-identical to the plain conjunctive query (negative terms carry no
+    * score mass; positive statistics stay full-corpus — Lucene's NOT
+    * semantics). An absent negative term is a no-op; a term that is both
+    * positive and negative is unsatisfiable → empty result, decided on the
+    * driver.
+    * A 100 TB note: a hot negative term costs its list decode in candidate
+    * shards — unavoidable under exact NOT semantics (Lucene pays the same).
+    */
+  def searchNot(query: String, exclude: String, k: Int): Dataset[Hit] = {
+    val terms = Tokenize.tokenize(query).toSeq
+    val neg = Tokenize.tokenize(exclude).distinct.sorted
+    flatTree(terms, conjunctive = true) match {
+      case Some(BoolQ.And(pos)) if !neg.exists(terms.contains) =>
+        topK(treeHits(BoolQ.And(pos ++ neg.map(t => BoolQ.Not(BoolQ.Term(t)))), k), k)
+      case _ => spark.emptyDataset[Hit]
     }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
+  }
+
+  /** Conjunctive top-k BM25 restricted to documents satisfying a metadata
+    * predicate over the docs table (`lang`, `repo`, `path`, …). The filter's
+    * docId set rides the SAME traversal as the query terms: per shard it
+    * becomes one more delta-compressed sorted list — the tree's first,
+    * required [[Searcher.FilterTerm]] leaf — with zero idf so it contributes
+    * no score mass (0.0 is added first, the identity for finite doubles —
+    * scores stay bit-identical to the unfiltered formula on the surviving
+    * docs, proven against the oracle). Because the shortest required list
+    * leads the traversal, a SELECTIVE filter prunes work instead of adding
+    * a post-hoc scan.
+    */
+  def searchWhere(query: String, k: Int,
+                  predicate: org.apache.spark.sql.Column): Dataset[Hit] = {
+    // FilterTerm's leading space sorts it before every token: the filter
+    // leaf is the tree's first child and adds its 0.0 first
+    val tree = flatTree(Searcher.FilterTerm +: Tokenize.tokenize(query).toSeq,
+      conjunctive = true)
+    topK(tree.flatMap(treeHits(_, k, filter = Some(predicate))), k)
   }
 
   /** Exact-phrase top-k BM25 — requires a positional index
@@ -766,7 +759,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * matching terms in ascending-term order, tiebreak (score desc, docId asc).
     */
   def searchOr(query: String, k: Int): Dataset[Hit] =
-    searchOrTerms(Tokenize.tokenize(query).distinct.sorted, k)
+    searchFlat(Tokenize.tokenize(query).toSeq, conjunctive = false, k)
 
   /** Boolean-tree top-k BM25: arbitrary AND/OR/NOT nesting over term
     * leaves — `(util_7 def) OR (util_3 -val)` — parsed by [[BoolQuery]].
@@ -803,62 +796,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   /** [[searchBool]] over an already-parsed tree (multi-term leaves are
     * rewritten here, so gates/facade callers may pass raw parses).
     */
-  def searchBoolTree(tree0: BoolQ, k: Int): Dataset[Hit] = {
-    val tree = rewriteBoolTree(tree0) match {
-      case None => return spark.emptyDataset[Hit]
-      case Some(t) => t
-    }
-    require(!BoolQuery.matchesEmptyDoc(tree),
-      s"pure-negative / match-all boolean query (matches a document with " +
-        s"none of its terms — unanswerable from posting lists): $tree")
-    val allTerms = BoolQuery.leafTerms(tree)
-    if (allTerms.isEmpty) return spark.emptyDataset[Hit]
-    val info = lookupTerms(allTerms)
-    // a term absent from the dictionary can never be present anywhere
-    if (!BoolQuery.satisfiable(tree, t => info(t).df > 0L))
-      return spark.emptyDataset[Hit]
-    val live = allTerms.filter(t => info(t).df > 0L)
-    val idfByTerm: Map[String, Double] =
-      live.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-    // per-shard prune by the tree's own satisfiability over shard sets
-    val shardSets: Map[String, Array[Int]] =
-      live.map(t => t -> info(t).shards).toMap
-    val candShards: Seq[Int] = live.flatMap(t => shardSets(t)).distinct.sorted
-      .filter { sh =>
-        BoolQuery.satisfiable(tree, t => shardSets.get(t).exists(a =>
-          java.util.Arrays.binarySearch(a, sh) >= 0))
-      }
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-    val required = BoolQuery.requiredTerms(tree).filter(live.contains).sorted
-
-    // phrase leaves ("a b" quoted) need adjacency → the positional kernel;
-    // phrase-free trees keep the block-max-pruned non-positional path below
-    if (BoolQuery.phraseLeaves(tree).nonEmpty)
-      return searchBoolTreePos(tree, k, live, required, idfByTerm, candShards)
-
-    val segsC = postings.filter($"term".isin(live: _*) &&
-      $"shard".isin(candShards: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val liveSorted = live
-    val pruning = usePruning
-    val reB = needReBound
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del)
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.isEmpty || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardBool(segsByTerm, Searcher.mergeLens(lenIt), tree,
-            liveSorted, required, idfByTerm, k1, b, avgdl, k, accS, accP,
-            pruning, deleted, reB)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
+  def searchBoolTree(tree: BoolQ, k: Int): Dataset[Hit] = topK(treeHits(tree, k), k)
 
   /** Positional leg of [[searchBoolTree]] for phrase-bearing trees: same
     * shard pruning and required-term discipline, but segments decode WITH
@@ -883,7 +821,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (treeB, liveB, reqB, idfB) = (tree, live, required, idfByTerm)
     val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
+    cogroupLens(segsC, candShards)(_.shard) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
         val deleted = Searcher.decodeDeleted(del.map(s =>
@@ -897,7 +835,6 @@ class Searcher(spark: SparkSession, indexDir: String,
             treeB, liveB, reqB, idfB, k1, b, avgdl, k, accS, deleted, accP)
         }
     }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
   /** Prefix (wildcard `prefix*`) top-k BM25: the prefix is expanded against
@@ -913,8 +850,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   def searchPrefix(prefix: String, k: Int,
                    maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandPrefix(prefix, maxExpand)
-    if (expanded.isEmpty) spark.emptyDataset[Hit]
-    else searchOrTerms(expanded.sorted, k)
+    searchFlat(expanded, conjunctive = false, k)
   }
 
   /** Regex term query (Lucene's RegexpQuery analog): `pattern` is matched
@@ -936,8 +872,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   def searchRegex(pattern: String, k: Int,
                   maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandRegex(pattern, maxExpand)
-    if (expanded.isEmpty) spark.emptyDataset[Hit]
-    else searchOrTerms(expanded.sorted, k)
+    searchFlat(expanded, conjunctive = false, k)
   }
 
   /** Wildcard term query (Lucene WildcardQuery analog): `?` matches
@@ -956,8 +891,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   def searchWildcard(glob: String, k: Int,
                      maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandWildcard(glob, maxExpand)
-    if (expanded.isEmpty) spark.emptyDataset[Hit]
-    else searchOrTerms(expanded.sorted, k)
+    searchFlat(expanded, conjunctive = false, k)
   }
 
   /** The dictionary expansion of a wildcard glob: anchored full-term
@@ -984,8 +918,7 @@ class Searcher(spark: SparkSession, indexDir: String,
                       includeLo: Boolean = true, includeHi: Boolean = true,
                       maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandTermRange(lo, hi, includeLo, includeHi, maxExpand)
-    if (expanded.isEmpty) spark.emptyDataset[Hit]
-    else searchOrTerms(expanded.sorted, k)
+    searchFlat(expanded, conjunctive = false, k)
   }
 
   /** The dictionary expansion of a term range: all terms in the range,
@@ -1045,8 +978,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   def searchFuzzy(term: String, k: Int, maxEdits: Int = 1, prefixLength: Int = 0,
                   maxExpand: Int = Searcher.DefaultMaxExpand): Dataset[Hit] = {
     val expanded = expandFuzzy(term, maxEdits, prefixLength, maxExpand)
-    if (expanded.isEmpty) spark.emptyDataset[Hit]
-    else searchOrTerms(expanded.sorted, k)
+    searchFlat(expanded, conjunctive = false, k)
   }
 
   /** The dictionary expansion of a fuzzy term: all terms within
@@ -1198,9 +1130,8 @@ class Searcher(spark: SparkSession, indexDir: String,
                    maxQueryTerms: Int = 25, minTermFreq: Int = 2,
                    minDocFreq: Int = 5): Dataset[Hit] = {
     val selected = mltTerms(files, docId, maxQueryTerms, minTermFreq, minDocFreq)
-    if (selected.isEmpty) return spark.emptyDataset[Hit]
     // ask for k+1 so the seed (if ranked) never costs a result slot
-    searchOrTerms(selected.sorted, k + 1)
+    searchFlat(selected, conjunctive = false, k + 1)
       .filter($"docId" =!= docId)
       .orderBy($"score".desc, $"docId".asc).limit(k)
   }
@@ -1485,11 +1416,13 @@ class Searcher(spark: SparkSession, indexDir: String,
     * operations that rank or group over every match rather than a top-k
     * (collapse/grouping). It is the AND query's own per-shard stream with
     * an unbounded per-shard k: the same harness, norms, tombstone exclusion
-    * and [[Searcher.scoreShard]] kernel, so scores are the kernel's, and a
-    * task holds at most one shard's matches. No driver materialization.
+    * and [[Searcher.scoreShardBool]] kernel, so scores are the kernel's, and
+    * a task holds at most one shard's matches. No driver materialization.
     */
   def scoredMatches(query: String): DataFrame =
-    shardHits(query, Int.MaxValue, null).getOrElse(spark.emptyDataset[Hit]).toDF()
+    flatTree(Tokenize.tokenize(query).toSeq, conjunctive = true)
+      .flatMap(treeHits(_, Int.MaxValue))
+      .getOrElse(spark.emptyDataset[Hit]).toDF()
 
   /** Field-sorted results (Lucene `Sort(SortField)` analog): the top-k of
     * the FULL conjunctive match set ordered by a docs-table column instead
@@ -1530,38 +1463,6 @@ class Searcher(spark: SparkSession, indexDir: String,
       .orderBy($"score".desc, $"docId".asc)
       .limit(k)
 
-  /** Disjunctive scoring over an explicit, sorted term set. */
-  private def searchOrTerms(terms: Seq[String], k: Int): Dataset[Hit] = {
-    if (terms.isEmpty) return spark.emptyDataset[Hit]
-    val info = lookupTerms(terms)
-    val present = terms.filter(t => info(t).df > 0L).toSeq
-    if (present.isEmpty) return spark.emptyDataset[Hit]
-    val idfByTerm: Map[String, Double] =
-      present.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-    // shards holding ANY present term (union, driver-side)
-    val candShards = present.flatMap(t => info(t).shards).distinct.sorted
-    val segs = postings.filter($"term".isin(present: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    val pruning = usePruning
-    val reB = needReBound
-    val hits = cogroupLens(segs, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del)
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.isEmpty || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardOr(segsByTerm, Searcher.mergeLens(lenIt), present,
-            idfByTerm, k1, b, avgdl, k, accS, accP, pruning, deleted, reB)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
-
   /** Batched search: evaluate many queries in ONE Spark job. All queries'
     * posting segments are fetched in a single pushdown scan and scored
     * per-shard together — the throughput mode for query workloads (amortizes
@@ -1585,8 +1486,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     val live = parsed.flatMap { case (name, ts, k) =>
       val presentTs = ts.filter(idfByTerm.contains)
       if (conjunctive && presentTs.length < ts.length) None
-      else if (presentTs.isEmpty) None
-      else Some((name, presentTs, k))
+      else flatTree(presentTs, conjunctive).map(tree =>
+        (name, presentTs, k, tree, BoolQuery.requiredTerms(tree)))
     }
     if (live.isEmpty)
       return Seq.empty[(String, Long, Double, Int)]
@@ -1595,7 +1496,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     // shards any live query can hit: per-query intersection (conjunctive) /
     // union (disjunctive) of the cached per-term shard sets, then the union
     // across queries — driver-side, no Spark job
-    val candShards = live.flatMap { case (_, ts, _) =>
+    val candShards = live.flatMap { case (_, ts, _, _, _) =>
       if (conjunctive) ts.map(t => info(t).shards).reduce(Searcher.intersectSorted).toSeq
       else ts.flatMap(t => info(t).shards.toSeq)
     }.distinct.sorted
@@ -1606,33 +1507,24 @@ class Searcher(spark: SparkSession, indexDir: String,
       $"shard".isin(candShards: _*)).as[PostingSeg]
       .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val conj = conjunctive
-    val pruningB = usePruning
+    val pruning = usePruning
     val reB = needReBound
-    val perShard = cogroupLens(segs, candShards.toSeq)(_.shard) {
+    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
+    // one tree per query over the shard's shared segments; a query missing
+    // a required list here returns from the kernel before any decode
+    val perShard = cogroupLens(segs, candShards)(_.shard) {
       (shard, segIt, lenIt) =>
         val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del)
         val segsByTerm = rest.groupBy(_.term)
         if (segsByTerm.isEmpty || !lenIt.hasNext) Iterator.empty
         else {
+          accT.add(1)
           val lens = Searcher.mergeLens(lenIt)
-          live.iterator.flatMap { case (name, ts, k) =>
-            val found = ts.count(segsByTerm.contains)
-            if (conj && found < ts.length) Iterator.empty
-            else if (found == 0) Iterator.empty
-            else {
-              val hits =
-                if (conj)
-                  Searcher.scoreShard(segsByTerm.filter(e => ts.contains(e._1)),
-                    lens, ts, idfByTerm, k1, b, avgdl, k, null, null,
-                    pruningB, deleted, reB)
-                else
-                  Searcher.scoreShardOr(segsByTerm.filter(e => ts.contains(e._1)),
-                    lens, ts, idfByTerm, k1, b, avgdl, k, null, null,
-                    pruningB, deleted, reB)
-              hits.map(h => (name, h.docId, h.score))
-            }
+          val deleted = Searcher.decodeDeleted(del)
+          live.iterator.flatMap { case (name, ts, k, tree, required) =>
+            Searcher.scoreShardBool(segsByTerm, lens, tree, ts, required,
+              idfByTerm, k1, b, avgdl, k, null, accS, accP, pruning, deleted, reB)
+              .map(h => (name, h.docId, h.score))
           }
         }
     }.toDF("query_name", "docId", "score")
@@ -1739,9 +1631,9 @@ object Searcher {
     * each surviving posting's new block takes the max over the ORIGINAL
     * block bounds of its members — admissible (deletion only removes
     * postings, so every survivor keeps a bound ≥ its own original block's),
-    * which keeps block-max pruning ON for tombstoned and NOT-filtered
-    * shards (r4 hard-disabled it there; compaction still restores the
-    * tight build-time bounds).
+    * which keeps block-max pruning ON for tombstoned shards (r4
+    * hard-disabled it there; compaction still restores the tight
+    * build-time bounds).
     */
   private[graft] def withoutDeleted(l: TermList, deleted: Array[Long]): TermList = {
     if (deleted.isEmpty) return l
@@ -2256,7 +2148,8 @@ object Searcher {
     * (repeatedly advance the smallest head; the cover ending there is
     * max − min + 1; early-exit the moment a cover fits the window), then
     * exact BM25 over the distinct terms — survivors keep scores
-    * bit-identical to [[scoreShard]]'s.
+    * bit-identical to the conjunctive query's ([[scoreShardBool]] over the
+    * AND of the same terms).
     */
   def scoreShardNear(segsByTerm: Map[String, Array[PostingSegP]],
                      lens: ShardLens, termsSorted: Seq[String], window: Int,
@@ -2398,230 +2291,6 @@ object Searcher {
     }
   }
 
-  /** Galloping k-list intersection with block-max candidate pruning and a
-    * local top-k heap; emits this shard's surviving hits.
-    */
-  def scoreShard(segsByTerm: Map[String, Array[PostingSeg]], lens: ShardLens,
-                 termsSorted: Seq[String], idfByTerm: Map[String, Double],
-                 k1: Double, b: Double, avgdl: Double, k: Int,
-                 accScored: LongAccumulator, accPruned: LongAccumulator,
-                 pruning: Boolean = true,
-                 deleted: Array[Long] = Array.emptyLongArray,
-                 reBound: Boolean = false,
-                 after: Hit = null): Iterator[Hit] = {
-    val k1p1 = k1 + 1.0
-    val lists: Array[TermList] = termsSorted.map(t =>
-      withoutDeleted(
-        decodeTermList(t, segsByTerm(t), idfByTerm(t) * k1p1, reBound, k1, b, avgdl),
-        deleted)).toArray
-    // rarest list leads the traversal (smallest-list-leads, the reference's
-    // build-on-smaller-side trick, psi/utils/ec_point_store.cc:133-222)
-    val byLen = lists.sortBy(_.docs.length)
-    val lead = byLen(0)
-    val others = byLen.drop(1)
-
-    val heap = mutable.PriorityQueue.empty[Hit](Ordering.by((h: Hit) => (-h.score, h.docId)))
-    var scored = 0L
-    var pruned = 0L
-
-    var li = 0
-    var advanced = true
-    while (li < lead.docs.length && advanced) {
-      val cand = lead.docs(li)
-      // gallop every other list to cand
-      var ok = true
-      var oi = 0
-      while (ok && oi < others.length) {
-        val ol = others(oi)
-        ol.pos = gallop(ol.docs, ol.pos, cand)
-        if (ol.pos >= ol.docs.length) { ok = false; advanced = false } // list exhausted → done
-        else if (ol.docs(ol.pos) != cand) ok = false
-        oi += 1
-      }
-      if (ok) {
-        lead.pos = li
-        // block-max upper bound: Σ idf·(k1+1)·blockMax(current block)
-        val theta = if (heap.size >= k) heap.head.score else Double.NegativeInfinity
-        var ub = 0.0
-        var i = 0
-        if (pruning) {
-          while (i < lists.length) {
-            val l = lists(i)
-            ub += l.idfK1p1 * l.blockMax(l.pos >>> 7)
-            i += 1
-          }
-        } else ub = Double.PositiveInfinity
-        if (ub <= theta) pruned += 1
-        else {
-          // exact score, summed in ascending-term order (lists is term-sorted)
-          var score = 0.0
-          i = 0
-          while (i < lists.length) {
-            val l = lists(i)
-            val tf = l.tfs(l.pos).toDouble
-            val dlen = lens.lens((cand - lens.firstDocId).toInt).toDouble
-            score += (idfByTerm(l.term) * (tf * k1p1)) /
-              (tf + k1 * (1.0 - b + b * (dlen / avgdl)))
-            i += 1
-          }
-          scored += 1
-          // cursor paging (searchAfter): admit only hits strictly AFTER the
-          // cursor in (score desc, docId asc) rank order — the per-shard
-          // heap stays size k at any page depth
-          val qualifies = after == null || score < after.score ||
-            (score == after.score && cand > after.docId)
-          if (qualifies) {
-            if (heap.size < k) heap.enqueue(Hit(cand, score))
-            else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(cand, score)) }
-          }
-        }
-      }
-      li += 1
-    }
-    if (accScored != null) accScored.add(scored)
-    if (accPruned != null) accPruned.add(pruned)
-    heap.iterator.toArray.iterator
-  }
-
-  /** Document-at-a-time disjunctive scoring with WAND pivoting + block-max
-    * rechecking (Broder'03 / Ding-Suel'11 applied to the OR path): lists are
-    * kept ordered by their current docId; the PIVOT is the first prefix of
-    * that order whose summed per-list score ceilings can beat the current
-    * k-th score θ, so every doc before the pivot is skipped WITHOUT being
-    * scored — lists ahead of the pivot gallop directly to it. A candidate at
-    * the pivot is then re-checked against the Σ of its lists' per-BLOCK
-    * bounds before the exact scoring runs. Hot-term OR queries therefore
-    * walk hot lists in jumps once θ rises, instead of scoring every posting
-    * (the r1 verdict's OR-path weakness).
-    *
-    * Exactness: a doc is skipped only when its admissible upper bound ≤ θ,
-    * and the heap admits only score > θ — so skipping never changes the
-    * result. Scoring iterates the term-sorted `lists` array, preserving the
-    * ascending-term Double accumulation order (bit-identical to the oracle).
-    */
-  def scoreShardOr(segsByTerm: Map[String, Array[PostingSeg]], lens: ShardLens,
-                   termsSorted: Seq[String], idfByTerm: Map[String, Double],
-                   k1: Double, b: Double, avgdl: Double, k: Int,
-                   accScored: LongAccumulator = null,
-                   accPruned: LongAccumulator = null,
-                   pruning: Boolean = true,
-                   deleted: Array[Long] = Array.emptyLongArray,
-                   reBound: Boolean = false): Iterator[Hit] = {
-    val k1p1 = k1 + 1.0
-    val lists: Array[TermList] = termsSorted.filter(segsByTerm.contains).map(t =>
-      withoutDeleted(
-        decodeTermList(t, segsByTerm(t), idfByTerm(t) * k1p1, reBound, k1, b, avgdl),
-        deleted)).toArray
-      .filter(_.docs.nonEmpty)
-    if (lists.isEmpty) return Iterator.empty
-    // per-list score ceiling: idf·(k1+1)·max over the list's block bounds
-    // (admissible for every posting of the list); +inf disables pivoting
-    // when pruning is off (delta indexes, where block bounds are stale)
-    val maxContrib: Array[Double] = lists.map { l =>
-      if (!pruning) Double.PositiveInfinity
-      else {
-        var m = 0.0f; var i = 0
-        while (i < l.blockMax.length) { if (l.blockMax(i) > m) m = l.blockMax(i); i += 1 }
-        l.idfK1p1 * m
-      }
-    }
-    // `order` holds indices into `lists`, maintained sorted by current docId
-    // (exhausted lists sink to the end with key Long.MaxValue); n lists is
-    // tiny, so an insertion re-sort per step is cheap
-    val n = lists.length
-    val order = Array.range(0, n)
-    def curDoc(i: Int): Long = {
-      val l = lists(i)
-      if (l.pos < l.docs.length) l.docs(l.pos) else Long.MaxValue
-    }
-    def resort(): Unit = {
-      var i = 1
-      while (i < n) {
-        val v = order(i); val key = curDoc(v)
-        var j = i - 1
-        while (j >= 0 && curDoc(order(j)) > key) { order(j + 1) = order(j); j -= 1 }
-        order(j + 1) = v
-        i += 1
-      }
-    }
-    val heap = mutable.PriorityQueue.empty[Hit](Ordering.by((h: Hit) => (-h.score, h.docId)))
-    var scored = 0L
-    var pruned = 0L
-    var done = false
-    resort()
-    while (!done) {
-      if (curDoc(order(0)) == Long.MaxValue) done = true
-      else {
-        val theta = if (heap.size >= k) heap.head.score else Double.NegativeInfinity
-        // pivot: shortest prefix of the docId order whose ceilings beat θ
-        var acc = 0.0
-        var p = -1
-        var i = 0
-        while (p < 0 && i < n && curDoc(order(i)) != Long.MaxValue) {
-          acc += maxContrib(order(i))
-          if (acc > theta) p = i
-          i += 1
-        }
-        if (p < 0) done = true // no remaining doc can enter the heap
-        else {
-          val pivotDoc = curDoc(order(p))
-          if (curDoc(order(0)) == pivotDoc) {
-            // EVERY list whose cursor sits at pivotDoc participates — the
-            // equal-docId run can extend past the pivot index, and both the
-            // upper bound and the cursor advance must cover the whole run
-            // (a partial advance would re-emit pivotDoc next iteration)
-            var runEnd = p + 1
-            while (runEnd < n && curDoc(order(runEnd)) == pivotDoc) runEnd += 1
-            // block-max recheck over the run before exact scoring
-            var ub = 0.0
-            i = 0
-            while (pruning && i < runEnd) {
-              val l = lists(order(i))
-              ub += l.idfK1p1 * l.blockMax(l.pos >>> 7)
-              i += 1
-            }
-            if (pruning && ub <= theta) pruned += 1
-            else {
-              var score = 0.0
-              val dlen = lens.lens((pivotDoc - lens.firstDocId).toInt).toDouble
-              i = 0
-              while (i < n) { // `lists` is term-sorted → deterministic sum order
-                val l = lists(i)
-                if (l.pos < l.docs.length && l.docs(l.pos) == pivotDoc) {
-                  val tf = l.tfs(l.pos).toDouble
-                  score += (idfByTerm(l.term) * (tf * k1p1)) /
-                    (tf + k1 * (1.0 - b + b * (dlen / avgdl)))
-                }
-                i += 1
-              }
-              scored += 1
-              if (heap.size < k) heap.enqueue(Hit(pivotDoc, score))
-              else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(pivotDoc, score)) }
-            }
-            // advance every list sitting at pivotDoc (the full run)
-            i = 0
-            while (i < runEnd) {
-              lists(order(i)).pos += 1
-              i += 1
-            }
-          } else {
-            // lists before the pivot gallop forward to it — the skip
-            i = 0
-            while (i < p) {
-              val l = lists(order(i))
-              l.pos = gallop(l.docs, l.pos, pivotDoc)
-              i += 1
-            }
-          }
-          resort()
-        }
-      }
-    }
-    if (accScored != null) accScored.add(scored)
-    if (accPruned != null) accPruned.add(pruned)
-    heap.iterator.toArray.iterator
-  }
-
   /** Per-shard boolean-tree evaluation (document-at-a-time, EXACT, with
     * block-max pruning through the tree — the r4 verdict's "WAND-class
     * skipping for boolean trees"). Admissible bounds come from
@@ -2650,20 +2319,26 @@ object Searcher {
     *     lists gallop only after this test passes: a pruned candidate
     *     never pays the veto lookup).
     *
-    * With `pruning = false` (delta indexes / tombstoned shards, where the
-    * stored block alignment is stale) every bound is +∞ and the walk
-    * degrades to the exact unpruned traversal.
+    * Every non-positional BM25 mode runs here: flat AND / OR queries are
+    * the And / Or of their distinct terms in ascending order (so the
+    * evalScore sum is the ascending-term sum the oracle computes), NOT
+    * queries add `Not` leaves, filtered queries a zero-idf required leaf.
+    * `after` (cursor paging, may be null) admits only hits ranked strictly
+    * after it in (score desc, docId asc) order, so the heap stays size k at
+    * any page depth; `k = Int.MaxValue` emits the shard's full match set.
+    * `pruning = false` (the `forcePruningOff` test hook) makes every bound
+    * +∞ and the walk the exact unpruned traversal. `deleted` (tombstones,
+    * sorted) is removed from every list; `reBound` re-derives block bounds
+    * under the combined avgdl of a base + delta index.
     */
   def scoreShardBool(segsByTerm: Map[String, Array[PostingSeg]],
                      lens: ShardLens, tree: BoolQ,
                      termsSorted: Seq[String], required: Seq[String],
                      idfByTerm: Map[String, Double],
-                     k1: Double, b: Double, avgdl: Double, k: Int,
-                     accScored: LongAccumulator,
-                     accPruned: LongAccumulator = null,
-                     pruning: Boolean = false,
-                     deleted: Array[Long] = Array.emptyLongArray,
-                     reBound: Boolean = false): Iterator[Hit] = {
+                     k1: Double, b: Double, avgdl: Double, k: Int, after: Hit,
+                     accScored: LongAccumulator, accPruned: LongAccumulator,
+                     pruning: Boolean, deleted: Array[Long],
+                     reBound: Boolean): Iterator[Hit] = {
     val k1p1 = k1 + 1.0
     // a required term with no postings in this shard → no match possible
     if (required.exists(t => !segsByTerm.contains(t))) return Iterator.empty
@@ -2760,27 +2435,61 @@ object Searcher {
     var pruned = 0L
     val has = new Array[Boolean](n)
     def theta: Double = if (heap.size >= k) heap.head.score else Double.NegativeInfinity
+    // the leaf callbacks of the tree walk, built once per shard: one slot
+    // lookup per leaf, no Option, the idf read from the slot's array
+    val idfOf: Array[Double] = present.map(idfByTerm).toArray
+    val hasLeaf: String => Boolean = { t => val i = byTerm.getOrElse(t, -1); i >= 0 && has(i) }
+    var denomK = 0.0
+    val leafScore: String => Double = { t =>
+      val i = byTerm(t)
+      val tf = lists(i).tfs(lists(i).pos).toDouble
+      (idfOf(i) * (tf * k1p1)) / (tf + denomK)
+    }
+    // tier-3 bound: each leaf present at the candidate (`has`) at its
+    // current block's bound, absent leaves at 0
+    def presentUb(): Double =
+      if (!pruning) Double.PositiveInfinity
+      else if (wArr != null) {
+        var s = wConst; var j = 0
+        while (j < n) { if (has(j)) s += wArr(j) * curUb(j); j += 1 }
+        inflate(s)
+      } else if (wForms != null) {
+        var mx = Double.NegativeInfinity; var kf = 0
+        while (kf < nForms) {
+          var s = wFormC(kf); var j = 0
+          while (j < n) { if (has(j)) s += wForms(kf)(j) * curUb(j); j += 1 }
+          if (s > mx) mx = s
+          kf += 1
+        }
+        inflate(mx)
+      } else
+        BoolQuery.upperBound(tree, t => byTerm.get(t) match {
+          case Some(j) if has(j) => curUb(j)
+          case _ => 0.0
+        })
     // exact evaluation at `cand`; every present list's cursor sits at cand
     def evalAt(cand: Long): Unit = {
       val dlen = lens.lens((cand - lens.firstDocId).toInt).toDouble
-      val denomK = k1 * (1.0 - b + b * (dlen / avgdl))
-      val score = BoolQuery.evalScore(tree,
-        t => byTerm.get(t).exists(has),
-        { t =>
-          val l = lists(byTerm(t))
-          val tf = l.tfs(l.pos).toDouble
-          (idfByTerm(t) * (tf * k1p1)) / (tf + denomK)
-        })
+      denomK = k1 * (1.0 - b + b * (dlen / avgdl))
+      val score = BoolQuery.evalScore(tree, hasLeaf, leafScore)
       if (!score.isNaN) {
         scored += 1
-        if (heap.size < k) heap.enqueue(Hit(cand, score))
-        else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(cand, score)) }
+        val qualifies = after == null || score < after.score ||
+          (score == after.score && cand > after.docId)
+        if (qualifies) {
+          if (heap.size < k) heap.enqueue(Hit(cand, score))
+          else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(cand, score)) }
+        }
       }
     }
 
     if (required.nonEmpty) {
       // ---- conjunctive root: rarest required list leads ------------------
-      val leadIdx = required.map(byTerm).minBy(i => lists(i).docs.length)
+      // required lists rarest first: the lead, then the likeliest misses
+      val reqIdx: Array[Int] = required.map(byTerm).sortBy(i => lists(i).docs.length).toArray
+      val isReq = new Array[Boolean](n)
+      reqIdx.foreach(isReq(_) = true)
+      val leadIdx = reqIdx(0)
       val lead = lists(leadIdx)
       val leadTerm = present(leadIdx)
       var li = 0
@@ -2815,36 +2524,30 @@ object Searcher {
                 else byTerm.get(t).map(listMaxUb).getOrElse(0.0))
           if (b1 <= th) pruned += 1
           else {
-            var i = 0
-            while (i < n) {
-              val l = lists(i)
+            // every required list must hold cand: one that misses skips
+            // it, one past its end ends the shard (no later candidate can
+            // match); the other lists gallop only for full candidates
+            var ok = true
+            var r = 1
+            while (ok && r < reqIdx.length) {
+              val l = lists(reqIdx(r))
               l.pos = gallop(l.docs, l.pos, cand)
+              if (l.pos >= l.docs.length) { ok = false; done = true }
+              else if (l.docs(l.pos) != cand) ok = false
+              r += 1
+            }
+            var i = 0
+            while (ok && i < n) {
+              val l = lists(i)
+              if (!isReq(i)) l.pos = gallop(l.docs, l.pos, cand)
               has(i) = l.pos < l.docs.length && l.docs(l.pos) == cand
               i += 1
             }
             // tier 3: block-max recheck with exact presence
-            val b2 =
-              if (!pruning) Double.PositiveInfinity
-              else if (wArr != null) {
-                var s = wConst; var j = 0
-                while (j < n) { if (has(j)) s += wArr(j) * curUb(j); j += 1 }
-                inflate(s)
-              } else if (wForms != null) {
-                var mx = Double.NegativeInfinity; var kf = 0
-                while (kf < nForms) {
-                  var s = wFormC(kf); var j = 0
-                  while (j < n) { if (has(j)) s += wForms(kf)(j) * curUb(j); j += 1 }
-                  if (s > mx) mx = s
-                  kf += 1
-                }
-                inflate(mx)
-              } else
-                BoolQuery.upperBound(tree, t => byTerm.get(t) match {
-                  case Some(j) if has(j) => curUb(j)
-                  case _ => 0.0
-                })
-            if (b2 <= th) pruned += 1
-            else evalAt(cand)
+            if (ok) {
+              if (presentUb() <= th) pruned += 1
+              else evalAt(cand)
+            }
           }
           li += 1
         }
@@ -2928,27 +2631,7 @@ object Searcher {
               i = 0
               while (i < runEnd) { has(order(i)) = true; i += 1 }
               // tier 3: block-max recheck before the veto lookup + eval
-              val b2 =
-                if (!pruning) Double.PositiveInfinity
-                else if (wArr != null) {
-                  var s2 = wConst; var j2 = 0
-                  while (j2 < n) { if (has(j2)) s2 += wArr(j2) * curUb(j2); j2 += 1 }
-                  inflate(s2)
-                } else if (wForms != null) {
-                  var mx = Double.NegativeInfinity; var kf = 0
-                  while (kf < nForms) {
-                    var s2 = wFormC(kf); var j2 = 0
-                    while (j2 < n) { if (has(j2)) s2 += wForms(kf)(j2) * curUb(j2); j2 += 1 }
-                    if (s2 > mx) mx = s2
-                    kf += 1
-                  }
-                  inflate(mx)
-                } else
-                  BoolQuery.upperBound(tree, t => byTerm.get(t) match {
-                    case Some(j) if has(j) => curUb(j)
-                    case _ => 0.0
-                  })
-              if (b2 <= th) pruned += 1
+              if (presentUb() <= th) pruned += 1
               else {
                 // gallop the negative-only lists for the NOT veto test
                 i = 0

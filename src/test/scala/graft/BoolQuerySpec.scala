@@ -127,7 +127,7 @@ class BoolQuerySpec extends AnyFunSuite {
     }
   }
 
-  test("flat AND / OR / NOT / filtered queries: rank identity vs oracle, 3+ and repeated terms") {
+  test("flat AND / OR / NOT / filtered: 3+ and repeated terms, rank identity vs oracle") {
     import org.apache.spark.sql.functions.{array_contains, col}
     val docs = spark.read.parquet(s"$indexDir/docs.parquet")
     val withId = files.join(docs.select("docId", "repo", "path", "commit"),

@@ -273,6 +273,27 @@ class SearcherSpec extends AnyFunSuite {
     s.close()
   }
 
+  test("flat query modes over already-looked-up terms: Spark job counts pinned") {
+    import org.apache.spark.sql.functions.col
+    val s = new Searcher(spark, indexDir)
+    val (q, q2) = ("def util_7 import def", "util_3 val")
+    val cursor = s.search(q, 3).collect().last
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "search" -> (() => s.search(q, 10).collect()),
+      "searchAfter" -> (() => s.searchAfter(q, 10, cursor).collect()),
+      "searchOr" -> (() => s.searchOr(q2, 10).collect()),
+      "searchNot" -> (() => s.searchNot(q, "util_3", 10).collect()),
+      "searchWhere" -> (() => s.searchWhere(q, 10, col("lang") === "scala").collect()),
+      "no-hit AND" -> (() => assert(s.search("import zzqx_nothing", 10).isEmpty)))
+    ops.foreach(_._2()) // looks every term up and broadcasts the norms
+    // one exchange per plan: its map stage and the final top-k are the two
+    // jobs; a term absent from the dictionary exits on the driver with none
+    val counts = ops.map { case (name, op) => name -> jobsOf(op()) }
+    assert(counts == Seq("search" -> 2, "searchAfter" -> 2, "searchOr" -> 2,
+      "searchNot" -> 2, "searchWhere" -> 2, "no-hit AND" -> 0))
+    s.close()
+  }
+
   test("close destroys the norms broadcast; later queries fail with IllegalStateException") {
     val s = new Searcher(spark, indexDir)
     val q = "import val"
@@ -752,10 +773,13 @@ class SearcherSpec extends AnyFunSuite {
   test("batched search matches per-query search exactly") {
     val qs = Seq(("a", "import val", 5), ("b", "util_3 import", 7),
       ("c", "zzqx_nothing import", 5), ("d", "import def val class", 3))
+    val touched = searcher.shardsTouched.value
     val batch = searcher.searchBatch(qs)
       .orderBy("query_name", "rank")
       .as[(String, Long, Double, Int)].collect()
       .groupBy(_._1).map { case (k, v) => k -> v.map(t => (t._2, t._3)).toSeq }
+    // the batch's per-shard kernel work shows in the bm25 metrics
+    assert(searcher.shardsTouched.value > touched)
     for ((name, q, k) <- qs) {
       val single = got(searcher.search(q, k)).toSeq
       assert(batch.getOrElse(name, Seq.empty) == single, s"query $name '$q'")

@@ -159,7 +159,8 @@ class StreamingIndexSpec extends AnyFunSuite {
     // stats (maxTf/minDlen) under the combined avgdl and rebuilds block
     // alignment for filtered lists — so pruning must now (a) fire on a
     // base+delta+tombstone index and (b) change nothing: results bit-equal
-    // to a force-unpruned searcher on AND, OR, and boolean-tree paths.
+    // to a force-unpruned searcher on AND, OR, NOT, filtered and
+    // boolean-tree paths.
     val (base, deltas, _) = env
     val allDirs = base +: deltas
     val keys = spark.read.parquet(allDirs.map(d => s"$d/docs.parquet"): _*)
@@ -176,6 +177,15 @@ class StreamingIndexSpec extends AnyFunSuite {
       val gOr = on.searchOr(q, 10).collect().map(h => (h.docId, h.score)).toSeq
       val wOr = off.searchOr(q, 10).collect().map(h => (h.docId, h.score)).toSeq
       assert(gOr == wOr, s"OR pruning-on vs off differ for '$q'")
+      val gNot = on.searchNot(q, "util_1", 10).collect().map(h => (h.docId, h.score)).toSeq
+      val wNot = off.searchNot(q, "util_1", 10).collect().map(h => (h.docId, h.score)).toSeq
+      assert(gNot == wNot, s"NOT pruning-on vs off differ for '$q'")
+      assert(gNot.nonEmpty, s"vacuous NOT for '$q'")
+      val pred = col("lang") =!= "py"
+      val gW = on.searchWhere(q, 10, pred).collect().map(h => (h.docId, h.score)).toSeq
+      val wW = off.searchWhere(q, 10, pred).collect().map(h => (h.docId, h.score)).toSeq
+      assert(gW == wW, s"filtered pruning-on vs off differ for '$q'")
+      assert(gW.nonEmpty, s"vacuous filter for '$q'")
     }
     for (q <- Seq("(util_7 import) OR (util_3 val)", "import (def OR -val)")) {
       val g = on.searchBool(q, 10).collect().map(h => (h.docId, h.score)).toSeq
