@@ -278,9 +278,7 @@ object IndexBuilder {
             val lens = lenIt.next()
             val (del, rest) = segIt.toArray
               .partition(_.term == graft.query.Searcher.DeletedTerm)
-            val deleted = graft.query.Searcher.decodeDeleted(del.map(s =>
-              PostingSeg(s.term, s.shard, s.n, s.sumTf, s.docBytes, s.tfBytes,
-                s.blockFirst, s.blockMaxTfn, s.blockMaxTf, s.blockMinDlen)))
+            val deleted = graft.query.Searcher.decodeDeleted(del)
             rest.groupBy(_.term).iterator.flatMap { case (term, ss) =>
               val parts = ss.map(s => (Codec.decodeDeltas(s.docBytes, s.n),
                 Codec.decodeInts(s.tfBytes, s.n), s.posBytes)).sortBy(_._1.head)

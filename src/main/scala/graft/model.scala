@@ -39,7 +39,17 @@ case class TfRow(term: String, docId: Long, tf: Int)
 case class PostingSeg(term: String, shard: Int, n: Int, sumTf: Long,
                       docBytes: Array[Byte], tfBytes: Array[Byte],
                       blockFirst: Array[Long], blockMaxTfn: Array[Float],
-                      blockMaxTf: Array[Int], blockMinDlen: Array[Int])
+                      blockMaxTf: Array[Int], blockMinDlen: Array[Int]) extends Segment
+
+/** The fields a plain and a positional posting segment share: enough to
+  * group segments by shard and term and to decode their docIds.
+  */
+trait Segment {
+  def term: String
+  def shard: Int
+  def n: Int
+  def docBytes: Array[Byte]
+}
 
 /** Positional posting segment (IndexConfig(positions = true) builds):
   * `posBytes` is the concatenation, in docId order, of each document's
@@ -54,7 +64,7 @@ case class PostingSegP(term: String, shard: Int, n: Int, sumTf: Long,
                        docBytes: Array[Byte], tfBytes: Array[Byte],
                        blockFirst: Array[Long], blockMaxTfn: Array[Float],
                        blockMaxTf: Array[Int], blockMinDlen: Array[Int],
-                       posBytes: Array[Byte])
+                       posBytes: Array[Byte]) extends Segment
 
 /** MAP-SIDE posting-segment draft (r6 build optimization): because docIds
   * are dense ranks of the range-sorted corpus, each build map partition

@@ -1,8 +1,9 @@
 package graft.query
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -94,7 +95,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * ≤ ~16.7M docs): every query then runs as ONE grouped input instead of
     * a two-sided cogroup — no per-query dlens scan and no second exchange
     * branch (r6). Above the cap — the 100 TB regime, where norms are
-    * 0.4 B+ rows — [[cogroupLens]] falls back to the r5 cogroup against
+    * 0.4 B+ rows — [[perShard]] falls back to the r5 cogroup against
     * the pruned dlens scan, the scale-safe plan. The threshold is derived
     * from DATA size, never core count; the index is immutable for the
     * lifetime of a Searcher (the same argument as the term-metadata LRU),
@@ -106,20 +107,30 @@ class Searcher(spark: SparkSession, indexDir: String,
       : Option[org.apache.spark.broadcast.Broadcast[Map[Int, ShardLens]]] = null
   private var closed = false
 
-  /** The norms broadcast, created on first use. Throws once [[close]] ran. */
+  /** Test hook: every query runs on the cogroup plan, as on an index whose
+    * norms exceed the broadcast cap, so both plans run under test.
+    */
+  private[graft] var forceNormsCogroup: Boolean = false
+
+  /** The norms broadcast, created on first use; None on the cogroup plan.
+    * Throws once [[close]] ran.
+    */
   private def dlensCache
       : Option[org.apache.spark.broadcast.Broadcast[Map[Int, ShardLens]]] =
     synchronized {
       if (closed) throw new IllegalStateException(
         s"Searcher over $indexDir is closed: its norms broadcast was destroyed")
-      if (dlensCacheBc == null) dlensCacheBc =
-        if (meta.numDocs * 4L > DlensCacheMaxBytes) None
-        else {
-          val merged = dlens.as[ShardLens].collect().groupBy(_.shard)
-            .map { case (s, rs) => s -> Searcher.mergeLens(rs.iterator) }
-          Some(spark.sparkContext.broadcast(merged))
-        }
-      dlensCacheBc
+      if (forceNormsCogroup) None
+      else {
+        if (dlensCacheBc == null) dlensCacheBc =
+          if (meta.numDocs * 4L > DlensCacheMaxBytes) None
+          else {
+            val merged = dlens.as[ShardLens].collect().groupBy(_.shard)
+              .map { case (s, rs) => s -> Searcher.mergeLens(rs.iterator) }
+            Some(spark.sparkContext.broadcast(merged))
+          }
+        dlensCacheBc
+      }
     }
 
   /** Destroys the norms broadcast, if one was created, so a session that
@@ -134,26 +145,54 @@ class Searcher(spark: SparkSession, indexDir: String,
     }
   }
 
-  /** Per-shard scoring harness shared by every query path: group the
-    * fetched segments by shard and hand each shard's segments plus its
-    * dlens row(s) to `f` — via the broadcast norms cache (one grouped
-    * input) when it fits, else via the cogroup against the pruned dlens
-    * scan. `f` keeps the historical cogroup signature (the lens iterator
-    * carries 0..n partial rows; callers mergeLens) so both plans run the
-    * IDENTICAL shard kernel.
+  /** The per-shard harness every query path runs through. It fetches the
+    * segments of `terms` in `candShards` (`term IN` and `shard IN` both
+    * reach the parquet scan), the `extra` segments (a filter's docId runs)
+    * and each shard's tombstone runs under [[Searcher.DeletedTerm]], groups
+    * them by shard, and hands `kernel` one shard's segments by term, its
+    * merged norms row and its sorted deleted docIds. A shard where some
+    * group of `need` has no segment cannot match: it is skipped before the
+    * kernel and not counted in `shardsTouched`. `S` is the schema the
+    * kernel decodes: [[PostingSegP]] for the positional kernels,
+    * [[PostingSeg]] for the others.
+    *
+    * Norms come from the broadcast cache when they fit (one grouped input),
+    * else from a cogroup against the pruned dlens scan; both plans hand the
+    * kernel the same merged row, so they run the identical kernel.
     */
-  private def cogroupLens[S, T: org.apache.spark.sql.Encoder](
-      segs: Dataset[S], candShards: Seq[Int])(shardOf: S => Int)(
-      f: (Int, Iterator[S], Iterator[ShardLens]) => Iterator[T]): Dataset[T] =
+  private def perShard[S <: Segment : Encoder : ClassTag, T: Encoder](
+      terms: Seq[String], candShards: Seq[Int], need: Seq[Seq[String]],
+      extra: Option[Dataset[PostingSeg]] = None)(
+      kernel: (Map[String, Array[S]], ShardLens, Array[Long]) => Iterator[T])
+      : Dataset[T] = {
+    // Row groups within a postings file are term-ranged, so the scan skips
+    // row groups only once a file holds several; a file that is a single
+    // row group (small indexes) is read whole and filtered after the scan.
+    val fetched = postings.filter($"term".isin(terms: _*) && $"shard".isin(candShards: _*))
+    val segs = (extra.toSeq :+ exclusionSegs(candShards))
+      .foldLeft(fetched)((all, e) => all.unionByName(e.toDF(), allowMissingColumns = true))
+      .as[S].groupByKey(_.shard)
+    val accT = shardsTouched
+    val run = (_: Int, segIt: Iterator[S], lenIt: Iterator[ShardLens]) => {
+      val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
+      val segsByTerm = rest.groupBy(_.term)
+      if (segsByTerm.isEmpty || !lenIt.hasNext ||
+          need.exists(!_.exists(segsByTerm.contains))) Iterator.empty
+      else {
+        accT.add(1)
+        kernel(segsByTerm, Searcher.mergeLens(lenIt), Searcher.decodeDeleted(del))
+      }
+    }
     dlensCache match {
       case Some(bc) =>
-        segs.groupByKey(shardOf).flatMapGroups { (shard: Int, it: Iterator[S]) =>
-          f(shard, it, bc.value.get(shard).iterator)
+        segs.flatMapGroups { (shard: Int, it: Iterator[S]) =>
+          run(shard, it, bc.value.get(shard).iterator)
         }
       case None =>
-        val lensC = dlens.filter($"shard".isin(candShards: _*)).as[ShardLens]
-        segs.groupByKey(shardOf).cogroup(lensC.groupByKey(_.shard))(f)
+        segs.cogroup(dlens.filter($"shard".isin(candShards: _*)).as[ShardLens]
+          .groupByKey(_.shard))(run)
     }
+  }
 
   /** Tombstoned (deleted) docs — parquet of (docId, shard) written by
     * `Tombstones.applyDeletes`, read through `Tombstones.read` so a swap
@@ -169,8 +208,9 @@ class Searcher(spark: SparkSession, indexDir: String,
     */
   private lazy val tombstoneDf = tombstones.map(Tombstones.read(spark, _))
 
-  /** One exclusion segment per candidate shard, carrying the shard's sorted
-    * deleted docIds through the cogroup under [[Searcher.DeletedTerm]].
+  /** The candidate shards' sorted deleted docIds as runs under
+    * [[Searcher.DeletedTerm]], which [[perShard]] splits off before the
+    * kernel.
     */
   private def exclusionSegs(candShards: Seq[Int]): Dataset[PostingSeg] =
     tombstoneDf match {
@@ -341,29 +381,27 @@ class Searcher(spark: SparkSession, indexDir: String,
       }
     if (candShards.isEmpty) return None
     val required = BoolQuery.requiredTerms(tree).filter(live.contains).sorted
-
-    // phrase leaves ("a b" quoted) need adjacency → the positional kernel;
-    // phrase-free trees keep the block-max-pruned non-positional path below
-    if (BoolQuery.phraseLeaves(tree).nonEmpty)
-      return Some(searchBoolTreePos(tree, k, live, required, idfByTerm, candShards))
-
-    // `term IN (...) AND shard IN (...)` both reach the parquet scan. Row
-    // groups within a postings file are term-ranged, so the scan skips row
-    // groups only once a file holds several; a file that is a single row
-    // group (small indexes) is read whole and filtered after the scan.
-    val termSegs = postings.filter($"term".isin(dictLive: _*) &&
-      $"shard".isin(candShards: _*)).as[PostingSeg]
-    val segsC = filter.fold(termSegs)(p =>
-      termSegs.unionByName(filterSegs(p, candShards), allowMissingColumns = true))
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
+    // a shard missing a required list (the filter's too: a shard with no
+    // passing doc has no filter segment) cannot match
+    val need = required.map(Seq(_))
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val pruning = usePruning
-    val reB = needReBound
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    Some(cogroupLens(segsC, candShards)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val segsByTerm0 = rest.groupBy(_.term)
+    val (pruning, reB) = (usePruning, needReBound)
+    val (accS, accP) = (candidatesScored, candidatesPruned)
+    // Phrase leaves ("a b" quoted) need adjacency, so those trees decode
+    // positions and run [[Searcher.scoreShardBoolPos]], which prunes on
+    // exact per-list score ceilings; the others keep the block-max kernel.
+    if (BoolQuery.phraseLeaves(tree).nonEmpty) {
+      require(positional,
+        "phrase leaves in a boolean query require a positional index " +
+          "(IndexConfig(positions = true))")
+      Some(perShard[PostingSegP, Hit](dictLive, candShards, need) {
+        (segsByTerm, lens, deleted) =>
+          Searcher.scoreShardBoolPos(segsByTerm, lens, tree, live, required,
+            idfByTerm, k1, b, avgdl, k, accS, deleted, accP)
+      })
+    } else Some(perShard[PostingSeg, Hit](dictLive, candShards, need,
+        filter.map(filterSegs(_, candShards))) {
+      (segsByTerm0, lens, deleted) =>
         // packRuns partials of the filter list may interleave across scan
         // partitions — merge them order-independently into ONE run before
         // the kernel (decodeTermList requires interval-disjoint segments)
@@ -372,16 +410,8 @@ class Searcher(spark: SparkSession, indexDir: String,
             Searcher.FilterTerm, Array(Searcher.mergeZeroBoundRuns(fs)))
           case _ => segsByTerm0
         }
-        // a shard missing a required list (the filter's too: a shard with
-        // no passing doc has no filter segment) cannot match
-        if (segsByTerm.isEmpty || !lenIt.hasNext ||
-            required.exists(t => !segsByTerm.contains(t))) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardBool(segsByTerm, Searcher.mergeLens(lenIt), tree,
-            live, required, idfByTerm, k1, b, avgdl, k, after, accS, accP,
-            pruning, Searcher.decodeDeleted(del), reB)
-        }
+        Searcher.scoreShardBool(segsByTerm, lens, tree, live, required,
+          idfByTerm, k1, b, avgdl, k, after, accS, accP, pruning, deleted, reB)
     })
   }
 
@@ -493,84 +523,43 @@ class Searcher(spark: SparkSession, indexDir: String,
     val exToks = Tokenize.tokenize(exclude)
     require(exToks.length == 1,
       s"span-not exclude must normalize to one token, got ${exToks.toSeq} from '$exclude'")
-    val ex = exToks.head
-    val tokenSeq = Tokenize.tokenize(phrase).toSeq
-    if (tokenSeq.isEmpty) return spark.emptyDataset[Hit]
-    require(positional,
-      "span-not search requires a positional index (IndexConfig(positions = true))")
-    val terms = tokenSeq.distinct.sorted
-    val info = lookupTerms((terms :+ ex).distinct)
-    if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
-    val idfByTerm: Map[String, Double] =
-      terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-    // candidate shards come from the PHRASE terms only — the exclusion can
-    // only shrink the match set, never add shards
-    val candShards: Array[Int] =
-      terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-    val fetchTerms = (terms :+ ex).distinct
-    val segsC = postings.filter($"term".isin(fetchTerms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val (seqB, termsB, exB, preB, postB) = (tokenSeq, terms, ex, pre, post)
-    val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del.map(s =>
-          PostingSeg(s.term, s.shard, s.n, s.sumTf, s.docBytes, s.tfBytes,
-            s.blockFirst, s.blockMaxTfn, s.blockMaxTf, s.blockMinDlen)))
-        val segsByTerm = rest.groupBy(_.term)
-        if (!termsB.forall(segsByTerm.contains) || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardSpanNot(segsByTerm, Searcher.mergeLens(lenIt),
-            seqB, termsB, exB, preB, postB, idfByTerm, k1, b, avgdl, k,
-            accS, deleted)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
+    searchPhraseImpl(phrase, k, Int.MaxValue, Some(exToks.head), pre, post)
   }
 
-  private def searchPhraseImpl(phrase: String, k: Int,
-                               maxEnd: Int): Dataset[Hit] = {
+  /** The idf of each of `terms` and the shards that hold all of them; None
+    * when a term is absent from the dictionary or no shard holds them all.
+    */
+  private def conjunction(terms: Seq[String]): Option[(Map[String, Double], Seq[Int])] = {
+    val info = lookupTerms(terms)
+    if (terms.exists(t => info(t).df == 0L)) return None
+    val candShards = terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
+    if (candShards.isEmpty) None
+    else Some((terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap, candShards.toSeq))
+  }
+
+  /** The phrase query ending within `maxEnd` positions, or with no
+    * `exclude` occurrence within `pre` / `post` positions (span-not).
+    */
+  private def searchPhraseImpl(phrase: String, k: Int, maxEnd: Int,
+                               exclude: Option[String] = None,
+                               pre: Int = 0, post: Int = 0): Dataset[Hit] = {
     val tokenSeq = Tokenize.tokenize(phrase).toSeq
     if (tokenSeq.isEmpty || maxEnd < tokenSeq.length)
       return spark.emptyDataset[Hit]
     require(positional,
-      "phrase search requires a positional index (IndexConfig(positions = true))")
+      "phrase and span search require a positional index (IndexConfig(positions = true))")
     val terms = tokenSeq.distinct.sorted
-    val info = lookupTerms(terms)
-    if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
-    val idfByTerm: Map[String, Double] =
-      terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-    val candShards: Array[Int] =
-      terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-    val segsC = postings.filter($"term".isin(terms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val (seqB, termsB, endB) = (tokenSeq, terms, maxEnd)
-    val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del.map(s =>
-          PostingSeg(s.term, s.shard, s.n, s.sumTf, s.docBytes, s.tfBytes,
-            s.blockFirst, s.blockMaxTfn, s.blockMaxTf, s.blockMinDlen)))
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.size < termsB.length || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardPhrase(segsByTerm, Searcher.mergeLens(lenIt),
-            seqB, termsB, idfByTerm, k1, b, avgdl, k, accS, deleted, endB)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
+    val accS = candidatesScored
+    // candidate shards come from the PHRASE terms only — an exclusion can
+    // only shrink the match set, never add shards
+    topK(conjunction(terms).map { case (idfByTerm, candShards) =>
+      perShard[PostingSegP, Hit]((terms ++ exclude).distinct, candShards,
+          terms.map(Seq(_))) { (segsByTerm, lens, deleted) =>
+        Searcher.scoreShardPhrase(segsByTerm, lens, tokenSeq, terms, idfByTerm,
+          k1, b, avgdl, k, accS, deleted, maxEnd, exclude, pre, post)
+      }
+    }, k)
   }
 
   /** Multi-phrase top-k (Lucene MultiPhraseQuery): a phrase whose every
@@ -607,32 +596,15 @@ class Searcher(spark: SparkSession, indexDir: String,
       .map(_.map(t => info(t).shards).reduce(Searcher.unionSorted))
       .reduce(Searcher.intersectSorted)
     if (candShards.isEmpty) return spark.emptyDataset[Hit]
-    val liveTerms = liveSlots.flatten.distinct.sorted
-    val segsC = postings.filter($"term".isin(liveTerms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val slotSeqB = slotKeys.zip(liveSlots)
-    val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del.map(s =>
-          PostingSeg(s.term, s.shard, s.n, s.sumTf, s.docBytes, s.tfBytes,
-            s.blockFirst, s.blockMaxTfn, s.blockMaxTf, s.blockMinDlen)))
-        val segsByTerm = rest.groupBy(_.term)
-        // every slot needs a live member IN THIS SHARD to chain
-        if (!lenIt.hasNext ||
-            slotSeqB.exists(!_._2.exists(segsByTerm.contains)))
-          Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardMultiPhrase(segsByTerm, Searcher.mergeLens(lenIt),
-            slotSeqB, idfBySlot, k1, b, avgdl, k, accS, deleted)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
+    val slotSeq = slotKeys.zip(liveSlots)
+    val accS = candidatesScored
+    // every slot needs a live member IN THIS SHARD to chain
+    topK(Some(perShard[PostingSegP, Hit](liveSlots.flatten.distinct.sorted,
+        candShards.toSeq, liveSlots) { (segsByTerm, lens, deleted) =>
+      Searcher.scoreShardMultiPhrase(segsByTerm, lens, slotSeq, idfBySlot,
+        k1, b, avgdl, k, accS, deleted)
+    }), k)
   }
 
   /** Phrase-prefix top-k (Lucene MultiPhrasePrefixQuery / Elasticsearch
@@ -680,44 +652,24 @@ class Searcher(spark: SparkSession, indexDir: String,
   def searchNear(query: String, k: Int, window: Int,
                  ordered: Boolean = false): Dataset[Hit] = {
     val seq = Tokenize.tokenize(query)
-    val terms = seq.distinct.sorted
+    val terms = seq.distinct.sorted.toSeq
     if (terms.isEmpty || window < (if (ordered) seq.length else terms.length))
       return spark.emptyDataset[Hit]
     require(positional,
       "proximity search requires a positional index (IndexConfig(positions = true))")
-    val info = lookupTerms(terms)
-    if (terms.exists(t => info(t).df == 0L)) return spark.emptyDataset[Hit]
-    val idfByTerm: Map[String, Double] =
-      terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap
-    val candShards: Array[Int] =
-      terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-    val segsC = postings.filter($"term".isin(terms: _*) &&
-      $"shard".isin(candShards.toSeq: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards.toSeq)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val (termsB, winB) = (terms, window)
-    // ordered mode: the query's token slots as indices into termsB — the
-    // kernel's list array is termsB-ordered, duplicates keep their own slot
-    val slotsB: Array[Int] =
-      if (ordered) seq.map(t => termsB.indexOf(t)).toArray else null
-    val (accT, accS) = (shardsTouched, candidatesScored)
-    val hits = cogroupLens(segsC, candShards.toSeq)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del.map(s =>
-          PostingSeg(s.term, s.shard, s.n, s.sumTf, s.docBytes, s.tfBytes,
-            s.blockFirst, s.blockMaxTfn, s.blockMaxTf, s.blockMinDlen)))
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.size < termsB.length || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardNear(segsByTerm, Searcher.mergeLens(lenIt),
-            termsB, winB, idfByTerm, k1, b, avgdl, k, accS, deleted, slotsB)
-        }
-    }
-    hits.orderBy($"score".desc, $"docId".asc).limit(k)
+    // ordered mode: the query's token slots as indices into terms — the
+    // kernel's list array is terms-ordered, duplicates keep their own slot
+    val slots: Array[Int] =
+      if (ordered) seq.map(t => terms.indexOf(t)).toArray else null
+    val accS = candidatesScored
+    topK(conjunction(terms).map { case (idfByTerm, candShards) =>
+      perShard[PostingSegP, Hit](terms, candShards, terms.map(Seq(_))) {
+        (segsByTerm, lens, deleted) =>
+          Searcher.scoreShardNear(segsByTerm, lens, terms, window,
+            idfByTerm, k1, b, avgdl, k, accS, deleted, slots)
+      }
+    }, k)
   }
 
   /** Top-k hits with a SNIPPET: the 2·window+1-token context around the
@@ -797,45 +749,6 @@ class Searcher(spark: SparkSession, indexDir: String,
     * rewritten here, so gates/facade callers may pass raw parses).
     */
   def searchBoolTree(tree: BoolQ, k: Int): Dataset[Hit] = topK(treeHits(tree, k), k)
-
-  /** Positional leg of [[searchBoolTree]] for phrase-bearing trees: same
-    * shard pruning and required-term discipline, but segments decode WITH
-    * positions and the per-shard walk is the exact positional kernel
-    * [[Searcher.scoreShardBoolPos]], which prunes on presence-level tree
-    * bounds over exact per-list score ceilings (admissible for phrase
-    * leaves — adjacency only shrinks the match set); the candidate stream
-    * is bounded by the rarest required list (phrase members are required
-    * wherever the phrase is) or the positive-list union.
-    */
-  private def searchBoolTreePos(tree: BoolQ, k: Int, live: Seq[String],
-                                required: Seq[String],
-                                idfByTerm: Map[String, Double],
-                                candShards: Seq[Int]): Dataset[Hit] = {
-    require(positional,
-      "phrase leaves in a boolean query require a positional index " +
-        "(IndexConfig(positions = true))")
-    val segsC = postings.filter($"term".isin(live: _*) &&
-      $"shard".isin(candShards: _*)).as[PostingSegP]
-      .unionByName(exclusionSegs(candShards)
-        .withColumn("posBytes", lit(null).cast("binary")).as[PostingSegP])
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val (treeB, liveB, reqB, idfB) = (tree, live, required, idfByTerm)
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
-    cogroupLens(segsC, candShards)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val deleted = Searcher.decodeDeleted(del.map(s =>
-          PostingSeg(s.term, s.shard, s.n, s.sumTf, s.docBytes, s.tfBytes,
-            s.blockFirst, s.blockMaxTfn, s.blockMaxTf, s.blockMinDlen)))
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.isEmpty || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          Searcher.scoreShardBoolPos(segsByTerm, Searcher.mergeLens(lenIt),
-            treeB, liveB, reqB, idfB, k1, b, avgdl, k, accS, deleted, accP)
-        }
-    }
-  }
 
   /** Prefix (wildcard `prefix*`) top-k BM25: the prefix is expanded against
     * the term dictionary — `term >= prefix` range scan, pushed down to the
@@ -1082,35 +995,14 @@ class Searcher(spark: SparkSession, indexDir: String,
       .select("term").as[String].collect().toSeq
   }
 
-  /** All docIds containing EVERY query term (the full conjunctive match set,
-    * not a top-k): posting lists for the query's (term, shard) segments are
-    * decoded by the native codegen'd `vbyte_decode_deltas` Expression inside
-    * WholeStageCodegen and intersected with one count-distinct aggregation —
-    * the DataFrame-declarative twin of the galloping kernel, used where the
-    * CONSUMER is another DataFrame op (facets, joins, exports) rather than a
-    * ranked list.
+  /** All docIds matching EVERY query term, tombstoned docs excluded (the
+    * full conjunctive match set, not a top-k): the docId column of
+    * [[scoredMatches]], the AND kernel's own per-shard match stream, so
+    * count, facets, sort and significant terms use the same match and
+    * delete rules as [[search]]. Used where the CONSUMER is another
+    * DataFrame op (facets, joins, exports) rather than a ranked list.
     */
-  def matchingDocs(query: String): DataFrame = {
-    graft.functions.VByteFunctions.register(spark)
-    val terms = Tokenize.tokenize(query).distinct.sorted
-    if (terms.isEmpty) return spark.range(0).select($"id".as("docId"))
-    val info = lookupTerms(terms)
-    if (terms.exists(t => info(t).df == 0L))
-      return spark.range(0).select($"id".as("docId"))
-    val candShards = terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.range(0).select($"id".as("docId"))
-    val nTerms = terms.length
-    val matched = postings
-      .filter($"term".isin(terms: _*) && $"shard".isin(candShards.toSeq: _*))
-      .select($"term", explode(expr("vbyte_decode_deltas(docBytes, n)")).as("docId"))
-      .groupBy("docId").agg(count(lit(1)).as("nt"))
-      .filter($"nt" === nTerms) // a (term, shard) pair holds a docId once
-      .select("docId")
-    tombstoneDf match {
-      case Some(ts) => matched.join(ts.select("docId"), Seq("docId"), "left_anti")
-      case None => matched
-    }
-  }
+  def matchingDocs(query: String): DataFrame = scoredMatches(query).select("docId")
 
   /** More-like-this (Lucene `MoreLikeThis` analog): find the documents most
     * similar to a SEED document. Representative terms are selected from the
@@ -1169,60 +1061,34 @@ class Searcher(spark: SparkSession, indexDir: String,
 
   /** Per-term score breakdown for the top-k hits (Lucene
     * `IndexSearcher.explain` analog): one row per (hit doc, query term) —
-    * `(docId, score, term, tf, df, idf, contribution)` — where
-    * `contribution` is that term's BM25 summand computed by the SAME
-    * IEEE expression shape as the scoring kernel
-    * (`idf · tf·(k1+1) / (tf + k1·(1−b+b·dlen/avgdl))`), so the rows are
-    * bit-exact against both the kernel's accumulated score (ascending-term
-    * sum) and a SQL oracle.
+    * `(docId, score, term, tf, df, idf, contribution)`, ordered by (docId,
+    * term) — where `contribution` is that term's BM25 summand from
+    * [[Searcher.termScore]], the kernels' own formula, so the rows sum
+    * (ascending-term) bit-exactly to the kernel's hit score.
     *
     * Plan shape: the ranking itself comes from [[search]] (exact top-k);
-    * the k hit docIds (driver-sized by construction) restrict the postings
-    * scan to their shards via `term IN` + `shard IN` pushdown, the decode
-    * is the codegen'd vbyte Expressions, and dlen comes from
-    * `element_at` on the shard's packed length row — no corpus re-tokenize,
-    * no shuffle wider than the touched shards.
+    * the per-shard harness then decodes the live terms' lists in the hits'
+    * shards only and looks each hit doc up in them, with the same merged
+    * norms row the scores were computed against.
     */
   def explainHits(query: String, k: Int): DataFrame = {
-    graft.functions.VByteFunctions.register(spark)
-    val terms = Tokenize.tokenize(query).distinct.sorted
     val hitRows = search(query, k).collect() // top-k: driver-sized
-    val schema = Seq.empty[(Long, Double, String, Int, Long, Double, Double)]
-      .toDF("docId", "score", "term", "tf", "df", "idf", "contribution")
-    if (hitRows.isEmpty || terms.isEmpty) return schema
-    val info = lookupTerms(terms)
-    val live = terms.filter(t => info(t).df > 0L)
-    val dps = meta.docsPerShard
-    val candShards = hitRows.map(h => (h.docId / dps).toInt).distinct.sorted.toSeq
-    val termStats = broadcast(
-      live.map(t => (t, info(t).df, idf(meta.numDocs, info(t).df))).toSeq
-        .toDF("term", "df", "idf"))
-    val hitDf = broadcast(
-      hitRows.toSeq.map(h => (h.docId, h.score)).toDF("docId", "score"))
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    postings
-      .filter($"term".isin(live: _*) && $"shard".isin(candShards: _*))
-      .select($"term", explode(arrays_zip(
-        expr("vbyte_decode_deltas(docBytes, n)").as("d"),
-        expr("vbyte_decode_ints(tfBytes, n)").as("f"))).as("p"))
-      .select($"term", $"p.d".as("docId"), $"p.f".as("tf"))
-      .join(hitDf, "docId")
-      .join(termStats, "term")
-      // merged per-shard length rows — with deltas a straddled shard has
-      // several partial ShardLens rows; the kernel's mergeLens view is the
-      // one the scores were computed against
-      .join(dlens.filter($"shard".isin(candShards: _*)).as[ShardLens]
-          .groupByKey(_.shard).mapGroups((_, it) => Searcher.mergeLens(it))
-          .select($"shard", $"firstDocId", $"lens"),
-        ($"docId" / dps).cast("int") === $"shard")
-      .withColumn("dlen",
-        element_at($"lens", ($"docId" - $"firstDocId" + 1).cast("int")))
-      .withColumn("contribution",
-        ($"idf" * ($"tf".cast("double") * lit(k1 + 1.0))) /
-          ($"tf".cast("double") +
-            lit(k1) * (lit(1.0) - lit(b) +
-              lit(b) * ($"dlen".cast("double") / lit(avgdl)))))
-      .select($"docId", $"score", $"term", $"tf", $"df", $"idf", $"contribution")
+    val rows =
+      if (hitRows.isEmpty) spark.emptyDataset[(Long, Double, String, Int, Long, Double, Double)]
+      else {
+        val terms = Tokenize.tokenize(query).distinct.sorted.toSeq
+        val info = lookupTerms(terms)
+        val stats = terms.filter(t => info(t).df > 0L)
+          .map(t => (t, info(t).df, idf(meta.numDocs, info(t).df)))
+        val dps = meta.docsPerShard
+        val hitsByShard = hitRows.groupBy(h => (h.docId / dps).toInt)
+        val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
+        perShard[PostingSeg, (Long, Double, String, Int, Long, Double, Double)](
+          stats.map(_._1), hitsByShard.keys.toSeq.sorted, Nil) { (segsByTerm, lens, _) =>
+          Searcher.explainShard(segsByTerm, lens, hitsByShard(lens.shard), stats, k1, b, avgdl)
+        }
+      }
+    rows.toDF("docId", "score", "term", "tf", "df", "idf", "contribution")
       .orderBy($"docId", $"term")
   }
 
@@ -1299,7 +1165,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * by LIFT like everything else — a ubiquitous query term (bg ≈ 1)
     * scores near zero, exactly the stopword suppression JLH is for.
     *
-    * Plan shape: the match set (codegen'd decode + one agg) is joined
+    * Plan shape: the match set (the AND kernel's stream) is joined
     * against the postings of the MATCHING SHARDS ONLY (`shard IN` pushed
     * to the parquet scan — a query touching few shards decodes few lists),
     * one shuffle on docId, one hash agg per term, dict join for bg df.
@@ -1366,49 +1232,24 @@ class Searcher(spark: SparkSession, indexDir: String,
     * (score desc, docId asc); dead variants drop out; a single live
     * variant degenerates to a one-term query up to the df blend.
     *
-    * Plan shape: one predicate-pushed postings scan over the variants'
-    * lists (`term IN` + `shard IN` union), codegen'd vbyte decode, one
-    * hash aggregation summing tf per docId (an INTEGER sum — order-
-    * independent, so scores are deterministic and oracle-reproducible
-    * without a fold), one merged-lens join, one IEEE scoring expression,
-    * global TakeOrdered k. Never collected beyond the top-k.
+    * Plan shape: the per-shard harness over the union of the variants'
+    * shards; [[Searcher.scoreShardSynonym]] sums the decoded variant lists
+    * per doc (an integer sum — order-independent) and scores each shard's
+    * top-k, then one global TakeOrdered k.
     */
   def searchSynonym(variants: Seq[String], k: Int): Dataset[Hit] = {
-    graft.functions.VByteFunctions.register(spark)
     val terms = variants.flatMap(Tokenize.tokenize(_)).distinct.sorted
     require(terms.nonEmpty, s"synonym query normalizes to no token: $variants")
     val info = lookupTerms(terms)
     val live = terms.filter(t => info(t).df > 0L)
     if (live.isEmpty) return spark.emptyDataset[Hit]
-    val candShards = live.map(t => info(t).shards)
-      .reduce(Searcher.unionSorted)
-    val dfBlend = live.map(t => info(t).df).max // Lucene's SynonymQuery df
-    val idfSyn = idf(meta.numDocs, dfBlend)
-    val dps = meta.docsPerShard
+    val candShards = live.map(t => info(t).shards).reduce(Searcher.unionSorted)
+    val idfSyn = idf(meta.numDocs, live.map(t => info(t).df).max) // Lucene's blended df
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val scored = postings
-      .filter($"term".isin(live: _*) && $"shard".isin(candShards.toSeq: _*))
-      .select(explode(arrays_zip(
-        expr("vbyte_decode_deltas(docBytes, n)").as("d"),
-        expr("vbyte_decode_ints(tfBytes, n)").as("f"))).as("p"))
-      .select($"p.d".as("docId"), $"p.f".as("tf"))
-      .groupBy("docId").agg(sum($"tf").as("tfSum")) // exact integer sum
-      .join(dlens.filter($"shard".isin(candShards.toSeq: _*)).as[ShardLens]
-          .groupByKey(_.shard).mapGroups((_, it) => Searcher.mergeLens(it))
-          .select($"shard", $"firstDocId", $"lens"),
-        ($"docId" / dps).cast("int") === $"shard")
-      .withColumn("dlen",
-        element_at($"lens", ($"docId" - $"firstDocId" + 1).cast("int")))
-      .select($"docId",
-        ((lit(idfSyn) * ($"tfSum".cast("double") * lit(k1 + 1.0))) /
-          ($"tfSum".cast("double") +
-            lit(k1) * (lit(1.0) - lit(b) +
-              lit(b) * ($"dlen".cast("double") / lit(avgdl))))).as("score"))
-    val pruned = tombstoneDf match {
-      case Some(ts) => scored.join(ts.select("docId"), Seq("docId"), "left_anti")
-      case None => scored
-    }
-    pruned.orderBy($"score".desc, $"docId".asc).limit(k).as[Hit]
+    topK(Some(perShard[PostingSeg, Hit](live, candShards.toSeq, Nil) {
+      (segsByTerm, lens, deleted) =>
+        Searcher.scoreShardSynonym(segsByTerm, lens, idfSyn, k1, b, avgdl, k, deleted)
+    }), k)
   }
 
   /** The FULL conjunctive match set WITH exact BM25 scores, as a
@@ -1427,8 +1268,8 @@ class Searcher(spark: SparkSession, indexDir: String,
   /** Field-sorted results (Lucene `Sort(SortField)` analog): the top-k of
     * the FULL conjunctive match set ordered by a docs-table column instead
     * of relevance — `(docId, <sortCol>)`, ties broken by docId asc, like
-    * Lucene's index-order tiebreak. The plan is [[matchingDocs]] (codegen'd
-    * decode + hash agg) joined once against the docs table, then a global
+    * Lucene's index-order tiebreak. The plan is [[matchingDocs]] (the AND
+    * kernel's match stream) joined once against the docs table, then a global
     * TakeOrdered of k rows — no full sort materializes at any scale.
     */
   def searchSortBy(query: String, k: Int, sortCol: String,
@@ -1503,29 +1344,17 @@ class Searcher(spark: SparkSession, indexDir: String,
     if (candShards.isEmpty)
       return Seq.empty[(String, Long, Double, Int)]
         .toDF("query_name", "docId", "score", "rank")
-    val segs = postings.filter($"term".isin(liveTerms: _*) &&
-      $"shard".isin(candShards: _*)).as[PostingSeg]
-      .unionByName(exclusionSegs(candShards), allowMissingColumns = true)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val pruning = usePruning
-    val reB = needReBound
-    val (accS, accP, accT) = (candidatesScored, candidatesPruned, shardsTouched)
+    val (pruning, reB) = (usePruning, needReBound)
+    val (accS, accP) = (candidatesScored, candidatesPruned)
     // one tree per query over the shard's shared segments; a query missing
     // a required list here returns from the kernel before any decode
-    val perShard = cogroupLens(segs, candShards)(_.shard) {
-      (shard, segIt, lenIt) =>
-        val (del, rest) = segIt.toArray.partition(_.term == Searcher.DeletedTerm)
-        val segsByTerm = rest.groupBy(_.term)
-        if (segsByTerm.isEmpty || !lenIt.hasNext) Iterator.empty
-        else {
-          accT.add(1)
-          val lens = Searcher.mergeLens(lenIt)
-          val deleted = Searcher.decodeDeleted(del)
-          live.iterator.flatMap { case (name, ts, k, tree, required) =>
-            Searcher.scoreShardBool(segsByTerm, lens, tree, ts, required,
-              idfByTerm, k1, b, avgdl, k, null, accS, accP, pruning, deleted, reB)
-              .map(h => (name, h.docId, h.score))
-          }
+    val hits = perShard[PostingSeg, (String, Long, Double)](liveTerms, candShards, Nil) {
+      (segsByTerm, lens, deleted) =>
+        live.iterator.flatMap { case (name, ts, k, tree, required) =>
+          Searcher.scoreShardBool(segsByTerm, lens, tree, ts, required,
+            idfByTerm, k1, b, avgdl, k, null, accS, accP, pruning, deleted, reB)
+            .map(h => (name, h.docId, h.score))
         }
     }.toDF("query_name", "docId", "score")
     import org.apache.spark.sql.expressions.Window
@@ -1533,7 +1362,7 @@ class Searcher(spark: SparkSession, indexDir: String,
       .orderBy(col("score").desc, col("docId").asc)
     val kByName = live.map(q => (q._1, q._3)).toMap
     val kDf = kByName.toSeq.toDF("query_name", "k")
-    perShard.withColumn("rank", row_number().over(w))
+    hits.withColumn("rank", row_number().over(w))
       .join(broadcast(kDf), "query_name")
       .filter(col("rank") <= col("k"))
       .select("query_name", "docId", "score", "rank")
@@ -1747,10 +1576,25 @@ object Searcher {
   /** Decode + merge a shard's tombstone segments into one sorted docId
     * array (normally exactly one segment per shard).
     */
-  private[graft] def decodeDeleted(del: Array[PostingSeg]): Array[Long] =
+  private[graft] def decodeDeleted(del: Array[_ <: Segment]): Array[Long] =
     if (del.isEmpty) Array.emptyLongArray
     else if (del.length == 1) Codec.decodeDeltas(del.head.docBytes, del.head.n)
     else del.flatMap(s => Codec.decodeDeltas(s.docBytes, s.n)).distinct.sorted
+
+  /** BM25 length normalization of a doc of length `dlen`:
+    * `k1·(1−b+b·dlen/avgdl)`.
+    */
+  @inline private def lengthNorm(k1: Double, b: Double, dlen: Double,
+                                 avgdl: Double): Double =
+    k1 * (1.0 - b + b * (dlen / avgdl))
+
+  /** One term's BM25 summand, `idf·tf·(k1+1) / (tf + norm)`, with `k1p1` =
+    * k1 + 1 and `norm` from [[lengthNorm]]. Every kernel scores through it,
+    * in this exact IEEE shape, which the oracle reproduces bit for bit.
+    */
+  @inline private def termScore(idf: Double, tf: Double, k1p1: Double,
+                                norm: Double): Double =
+    (idf * (tf * k1p1)) / (tf + norm)
 
   /** Cached per-term metadata: global doc frequency and the sorted shard set
     * holding the term (df == 0 ⇔ term absent from the index).
@@ -1897,69 +1741,50 @@ object Searcher {
 
   /** Phrase scoring for one shard: conjunctive galloping intersection, then
     * ordered-adjacency verification over position lists, then exact BM25
-    * over the distinct terms.
+    * over the distinct terms. An occurrence must end within the first
+    * `maxEnd` positions (span-first) and, with an `exclude` term (Lucene
+    * SpanNotQuery), have NO exclude position inside
+    * `[start − pre, end − 1 + post]` (inclusive token positions); the doc
+    * matches when ANY occurrence qualifies. An exclude list absent from the
+    * shard excludes nothing.
     */
   def scoreShardPhrase(segsByTerm: Map[String, Array[PostingSegP]],
                        lens: ShardLens, tokenSeq: Seq[String],
                        termsSorted: Seq[String], idfByTerm: Map[String, Double],
                        k1: Double, b: Double, avgdl: Double, k: Int,
-                       accScored: LongAccumulator = null,
-                       deleted: Array[Long] = Array.emptyLongArray,
-                       maxEnd: Int = Int.MaxValue): Iterator[Hit] = {
-    val lists: Array[PosList] =
-      termsSorted.map(t =>
-        withoutDeletedPos(decodePosList(t, segsByTerm(t)), deleted)).toArray
+                       accScored: LongAccumulator, deleted: Array[Long],
+                       maxEnd: Int, exclude: Option[String],
+                       pre: Int, post: Int): Iterator[Hit] = {
+    def decode(t: String, ss: Array[PostingSegP]) =
+      withoutDeletedPos(decodePosList(t, ss), deleted)
+    val lists: Array[PosList] = termsSorted.map(t => decode(t, segsByTerm(t))).toArray
     val byTerm = lists.map(l => l.term -> l).toMap
     val seqLists = tokenSeq.map(byTerm).toArray
+    // its own decode (its own cursor), even when it is a phrase term;
+    // deleted docs can't be candidates, so filtering it is merely consistent
+    val excl = exclude.flatMap(t => segsByTerm.get(t).map(decode(t, _))).orNull
     chainTopK(lists, seqLists, lens, idfByTerm, k1, b, avgdl, k,
-      accScored, maxEnd)
-  }
-
-  /** Span-not scoring for one shard (Lucene SpanNotQuery): the phrase
-    * chain walk of [[scoreShardPhrase]], but an occurrence only qualifies
-    * when the exclude term has NO position inside
-    * `[start − pre, end − 1 + post]` (inclusive token positions); the doc
-    * matches when ANY occurrence qualifies. The exclude list may be absent
-    * from the shard — then nothing is excluded.
-    */
-  def scoreShardSpanNot(segsByTerm: Map[String, Array[PostingSegP]],
-                        lens: ShardLens, tokenSeq: Seq[String],
-                        termsSorted: Seq[String], exclude: String,
-                        pre: Int, post: Int,
-                        idfByTerm: Map[String, Double],
-                        k1: Double, b: Double, avgdl: Double, k: Int,
-                        accScored: LongAccumulator = null,
-                        deleted: Array[Long] = Array.emptyLongArray): Iterator[Hit] = {
-    val lists: Array[PosList] =
-      termsSorted.map(t =>
-        withoutDeletedPos(decodePosList(t, segsByTerm(t)), deleted)).toArray
-    val byTerm = lists.map(l => l.term -> l).toMap
-    val seqLists = tokenSeq.map(byTerm).toArray
-    // deleted docs can't be candidates, so filtering the exclusion list is
-    // merely consistent, never semantic
-    val excl = segsByTerm.get(exclude)
-      .map(s => withoutDeletedPos(decodePosList(exclude, s), deleted)).orNull
-    chainTopK(lists, seqLists, lens, idfByTerm, k1, b, avgdl, k,
-      accScored, Int.MaxValue, excl, pre, post)
+      accScored, maxEnd, excl, pre, post)
   }
 
   /** Multi-phrase scoring for one shard (Lucene MultiPhraseQuery): each
     * query position holds a SET of alternative terms; a doc matches when
     * some run of consecutive token positions takes one alternative per
-    * slot. Implemented by merging every slot's member position lists into
-    * ONE union list (token positions of distinct terms are disjoint, so
-    * per-doc tf_slot = Σ member tf = merged-position count) and running the
-    * identical chain kernel over slot lists. Survivors score the synonym
-    * contract per distinct slot — tf summed, idf from the blended max df
-    * ([[Searcher.searchSynonym]]) — summed in ascending slot-key order.
+    * slot. `slotSeq` is the query's slots in position order, each as (slot
+    * key, live member terms); a key repeats when a slot does. Every slot's
+    * member position lists merge into ONE union list (token positions of
+    * distinct terms are disjoint, so per-doc tf_slot = Σ member tf =
+    * merged-position count) and the chain kernel runs over the slot lists.
+    * Survivors score the synonym contract per distinct slot — tf summed,
+    * idf from the blended max df, as in [[scoreShardSynonym]] — summed in
+    * ascending slot-key order.
     */
   def scoreShardMultiPhrase(segsByTerm: Map[String, Array[PostingSegP]],
                             lens: ShardLens, slotSeq: Seq[(String, Seq[String])],
                             idfBySlot: Map[String, Double],
                             k1: Double, b: Double, avgdl: Double, k: Int,
-                            accScored: LongAccumulator = null,
-                            deleted: Array[Long] = Array.emptyLongArray,
-                            maxEnd: Int = Int.MaxValue): Iterator[Hit] = {
+                            accScored: LongAccumulator,
+                            deleted: Array[Long]): Iterator[Hit] = {
     val byKey: Map[String, PosList] =
       slotSeq.groupBy(_._1).map { case (key, slots) =>
         val members = slots.head._2.filter(segsByTerm.contains)
@@ -1971,7 +1796,7 @@ object Searcher {
     val lists = byKey.keys.toArray.sorted.map(byKey)
     val seqLists = slotSeq.map(s => byKey(s._1)).toArray
     chainTopK(lists, seqLists, lens, idfBySlot, k1, b, avgdl, k,
-      accScored, maxEnd)
+      accScored, Int.MaxValue, null, 0, 0)
   }
 
   /** Ascending merge of member position lists into one slot-union PosList.
@@ -2036,17 +1861,17 @@ object Searcher {
 
   /** The shared positional chain kernel: galloping conjunctive intersection
     * over `lists` (distinct, ascending-key — the deterministic score-sum
-    * order), ordered-adjacency verification over `seqLists` (one list per
-    * query position, aliasing `lists` entries), optional span-first bound,
-    * then exact BM25 with per-list idf.
+    * order), ordered-adjacency verification ([[phraseEnds]]) over
+    * `seqLists` (one list per query position, aliasing `lists` entries),
+    * the span-first bound `maxEnd` and the span-not exclusion `excl` (may
+    * be null), then exact BM25 with per-list idf.
     */
   private def chainTopK(lists: Array[PosList], seqLists: Array[PosList],
                         lens: ShardLens, idfByTerm: Map[String, Double],
                         k1: Double, b: Double, avgdl: Double, k: Int,
                         accScored: LongAccumulator,
-                        maxEnd: Int,
-                        excl: PosList = null,
-                        exPre: Int = 0, exPost: Int = 0): Iterator[Hit] = {
+                        maxEnd: Int, excl: PosList,
+                        exPre: Int, exPost: Int): Iterator[Hit] = {
     val k1p1 = k1 + 1.0
     // candidates that survive the conjunctive intersection (i.e. reach the
     // adjacency check) — the same "scored" meaning search() reports
@@ -2071,27 +1896,7 @@ object Searcher {
       if (ok) {
         scored += 1
         lead.pos = li
-        // adjacency: cur ← (cur + 1) ∩ positions(token_j), all sorted asc
-        val l0 = seqLists(0)
-        var cur: Array[Int] =
-          java.util.Arrays.copyOfRange(l0.flat, l0.off(l0.pos), l0.off(l0.pos + 1))
-        var j = 1
-        while (cur.nonEmpty && j < seqLists.length) {
-          val lj = seqLists(j)
-          val s = lj.off(lj.pos)
-          val e = lj.off(lj.pos + 1)
-          val out = Array.newBuilder[Int]
-          var a = 0
-          var x = s
-          while (a < cur.length && x < e) {
-            val want = cur(a) + 1
-            if (lj.flat(x) < want) x += 1
-            else if (lj.flat(x) > want) a += 1
-            else { out += want; a += 1; x += 1 }
-          }
-          cur = out.result()
-          j += 1
-        }
+        val cur = phraseEnds(seqLists)
         // span-first bound (Lucene SpanFirstQuery): `cur` holds the
         // LAST-token positions of complete chains, ascending — the span's
         // exclusive end is cur(0)+1, so the earliest occurrence decides.
@@ -2124,13 +1929,11 @@ object Searcher {
           }
         if (accepted) {
           var score = 0.0
-          val dlen = lens.lens((cand - lens.firstDocId).toInt).toDouble
+          val norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
           var i = 0
           while (i < lists.length) { // term-sorted → deterministic sum order
             val l = lists(i)
-            val tf = l.tfs(l.pos).toDouble
-            score += (idfByTerm(l.term) * (tf * k1p1)) /
-              (tf + k1 * (1.0 - b + b * (dlen / avgdl)))
+            score += termScore(idfByTerm(l.term), l.tfs(l.pos), k1p1, norm)
             i += 1
           }
           if (heap.size < k) heap.enqueue(Hit(cand, score))
@@ -2155,9 +1958,8 @@ object Searcher {
                      lens: ShardLens, termsSorted: Seq[String], window: Int,
                      idfByTerm: Map[String, Double],
                      k1: Double, b: Double, avgdl: Double, k: Int,
-                     accScored: LongAccumulator = null,
-                     deleted: Array[Long] = Array.emptyLongArray,
-                     orderedSlots: Array[Int] = null): Iterator[Hit] = {
+                     accScored: LongAccumulator, deleted: Array[Long],
+                     orderedSlots: Array[Int]): Iterator[Hit] = {
     val k1p1 = k1 + 1.0
     var scored = 0L
     val lists: Array[PosList] =
@@ -2249,13 +2051,11 @@ object Searcher {
         }
         if (fits) {
           var score = 0.0
-          val dlen = lens.lens((cand - lens.firstDocId).toInt).toDouble
+          val norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
           var i = 0
           while (i < n) { // term-sorted → deterministic sum order
             val l = lists(i)
-            val tf = l.tfs(l.pos).toDouble
-            score += (idfByTerm(l.term) * (tf * k1p1)) /
-              (tf + k1 * (1.0 - b + b * (dlen / avgdl)))
+            score += termScore(idfByTerm(l.term), l.tfs(l.pos), k1p1, norm)
             i += 1
           }
           if (heap.size < k) heap.enqueue(Hit(cand, score))
@@ -2266,6 +2066,65 @@ object Searcher {
     }
     if (accScored != null) accScored.add(scored)
     heap.iterator.toArray.iterator
+  }
+
+  /** Synonym scoring for one shard (Lucene SynonymQuery): the variants'
+    * decoded lists, deleted docs removed, merge into one whose per-doc tf is
+    * the SUM of the variants' tfs (an integer sum, so order-independent),
+    * scored as a single term with the blended `idf`; emits the shard's
+    * top-k.
+    */
+  private def scoreShardSynonym(segsByTerm: Map[String, Array[PostingSeg]],
+                                lens: ShardLens, idf: Double,
+                                k1: Double, b: Double, avgdl: Double, k: Int,
+                                deleted: Array[Long]): Iterator[Hit] = {
+    val k1p1 = k1 + 1.0
+    // docId-aligned like the norms row: slot i is doc firstDocId + i
+    val tfSum = new Array[Int](lens.lens.length)
+    segsByTerm.foreach { case (t, ss) =>
+      val l = withoutDeleted(decodeTermList(t, ss, 0.0), deleted)
+      var i = 0
+      while (i < l.docs.length) {
+        tfSum((l.docs(i) - lens.firstDocId).toInt) += l.tfs(i)
+        i += 1
+      }
+    }
+    val heap = mutable.PriorityQueue.empty[Hit](Ordering.by((h: Hit) => (-h.score, h.docId)))
+    var i = 0
+    while (i < tfSum.length) {
+      if (tfSum(i) > 0) {
+        val score = termScore(idf, tfSum(i), k1p1, lengthNorm(k1, b, lens.lens(i), avgdl))
+        val cand = lens.firstDocId + i
+        if (heap.size < k) heap.enqueue(Hit(cand, score))
+        else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(cand, score)) }
+      }
+      i += 1
+    }
+    heap.iterator.toArray.iterator
+  }
+
+  /** Explain rows for one shard's hits: for each hit and each `(term, df,
+    * idf)` whose list holds the hit doc, `(docId, score, term, tf, df, idf,
+    * contribution)` with the contribution from [[termScore]] under the
+    * shard's norms row.
+    */
+  private def explainShard(segsByTerm: Map[String, Array[PostingSeg]], lens: ShardLens,
+                           hits: Array[Hit], stats: Seq[(String, Long, Double)],
+                           k1: Double, b: Double, avgdl: Double)
+      : Iterator[(Long, Double, String, Int, Long, Double, Double)] = {
+    val k1p1 = k1 + 1.0
+    val lists = stats.flatMap { case (t, df, idf) =>
+      segsByTerm.get(t).map(ss => (decodeTermList(t, ss, 0.0), df, idf))
+    }
+    hits.iterator.flatMap { h =>
+      val norm = lengthNorm(k1, b, lens.lens((h.docId - lens.firstDocId).toInt), avgdl)
+      lists.iterator.flatMap { case (l, df, idf) =>
+        val i = java.util.Arrays.binarySearch(l.docs, h.docId)
+        if (i < 0) None
+        else Some((h.docId, h.score, l.term, l.tfs(i), df, idf,
+          termScore(idf, l.tfs(i), k1p1, norm)))
+      }
+    }
   }
 
   /** Merge the (possibly several, with streaming deltas) per-part ShardLens
@@ -2439,11 +2298,10 @@ object Searcher {
     // lookup per leaf, no Option, the idf read from the slot's array
     val idfOf: Array[Double] = present.map(idfByTerm).toArray
     val hasLeaf: String => Boolean = { t => val i = byTerm.getOrElse(t, -1); i >= 0 && has(i) }
-    var denomK = 0.0
+    var norm = 0.0
     val leafScore: String => Double = { t =>
       val i = byTerm(t)
-      val tf = lists(i).tfs(lists(i).pos).toDouble
-      (idfOf(i) * (tf * k1p1)) / (tf + denomK)
+      termScore(idfOf(i), lists(i).tfs(lists(i).pos), k1p1, norm)
     }
     // tier-3 bound: each leaf present at the candidate (`has`) at its
     // current block's bound, absent leaves at 0
@@ -2469,8 +2327,7 @@ object Searcher {
         })
     // exact evaluation at `cand`; every present list's cursor sits at cand
     def evalAt(cand: Long): Unit = {
-      val dlen = lens.lens((cand - lens.firstDocId).toInt).toDouble
-      denomK = k1 * (1.0 - b + b * (dlen / avgdl))
+      norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
       val score = BoolQuery.evalScore(tree, hasLeaf, leafScore)
       if (!score.isNaN) {
         scored += 1
@@ -2666,19 +2523,18 @@ object Searcher {
     heap.iterator.toArray.iterator
   }
 
-  /** Does the token sequence occur consecutively in the candidate doc?
-    * Every member list's cursor must sit AT the candidate. The standard
-    * positional zipper (same loop as [[scoreShardPhrase]]): survivors of
-    * `cur ← (cur + 1) ∩ positions(token_j)` are the phrase end positions.
+  /** The end positions, ascending, of the consecutive occurrences of the
+    * token sequence whose lists are `seqLists` (one per position, cursors
+    * AT the candidate doc) — the positional zipper
+    * `cur ← (cur + 1) ∩ positions(token_j)`, sorted two-pointer.
     */
-  private def phraseAdjacent(ts: Vector[String], lists: Array[PosList],
-                             byTerm: Map[String, Int]): Boolean = {
-    val l0 = lists(byTerm(ts.head))
+  private def phraseEnds(seqLists: Array[PosList]): Array[Int] = {
+    val l0 = seqLists(0)
     var cur: Array[Int] =
       java.util.Arrays.copyOfRange(l0.flat, l0.off(l0.pos), l0.off(l0.pos + 1))
     var j = 1
-    while (cur.nonEmpty && j < ts.length) {
-      val lj = lists(byTerm(ts(j)))
+    while (cur.nonEmpty && j < seqLists.length) {
+      val lj = seqLists(j)
       val s = lj.off(lj.pos)
       val e = lj.off(lj.pos + 1)
       val out = Array.newBuilder[Int]
@@ -2693,7 +2549,7 @@ object Searcher {
       cur = out.result()
       j += 1
     }
-    cur.nonEmpty
+    cur
   }
 
   /** Per-shard POSITIONAL boolean-tree evaluation (exact, document-at-a-
@@ -2717,9 +2573,8 @@ object Searcher {
                         termsSorted: Seq[String], required: Seq[String],
                         idfByTerm: Map[String, Double],
                         k1: Double, b: Double, avgdl: Double, k: Int,
-                        accScored: LongAccumulator = null,
-                        deleted: Array[Long] = Array.emptyLongArray,
-                        accPruned: LongAccumulator = null): Iterator[Hit] = {
+                        accScored: LongAccumulator, deleted: Array[Long],
+                        accPruned: LongAccumulator): Iterator[Hit] = {
     val k1p1 = k1 + 1.0
     if (required.exists(t => !segsByTerm.contains(t))) return Iterator.empty
     val present = termsSorted.filter(segsByTerm.contains)
@@ -2757,13 +2612,12 @@ object Searcher {
       var i = 0
       while (i < n) {
         val l = lists(i)
-        val idfK = idfByTerm(l.term) * k1p1
+        val idf = idfByTerm(l.term)
         var m = 0.0
         var j = 0
         while (j < l.docs.length) {
-          val dlen = lens.lens((l.docs(j) - lens.firstDocId).toInt).toDouble
-          val tf = l.tfs(j).toDouble
-          val c = (idfK * tf) / (tf + k1 * (1.0 - b + b * (dlen / avgdl)))
+          val c = termScore(idf, l.tfs(j), k1p1,
+            lengthNorm(k1, b, lens.lens((l.docs(j) - lens.firstDocId).toInt), avgdl))
           if (c > m) m = c
           j += 1
         }
@@ -2803,16 +2657,14 @@ object Searcher {
           else {
             val pOk: Map[BoolQ.Phrase, Boolean] = phrases.map { p =>
               p -> (p.ts.forall(t => byTerm.get(t).exists(has)) &&
-                phraseAdjacent(p.ts, lists, byTerm))
+                phraseEnds(p.ts.map(t => lists(byTerm(t))).toArray).nonEmpty)
             }.toMap
-            val dlen = lens.lens((cand - lens.firstDocId).toInt).toDouble
-            val denomK = k1 * (1.0 - b + b * (dlen / avgdl))
+            val norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
             val score = BoolQuery.evalScore(tree,
               t => byTerm.get(t).exists(has),
               { t =>
                 val l = lists(byTerm(t))
-                val tf = l.tfs(l.pos).toDouble
-                (idfByTerm(t) * (tf * k1p1)) / (tf + denomK)
+                termScore(idfByTerm(t), l.tfs(l.pos), k1p1, norm)
               },
               pOk)
             if (!score.isNaN) {

@@ -173,9 +173,12 @@ class SearcherSpec extends AnyFunSuite {
       val sm = ranked(searcher.scoredMatches(q))
       val want = oracleAll(withId, q)
       assert(sm == want && want.nonEmpty, s"query '$q'")
-      // the match SET is exactly matchingDocs
-      val md = searcher.matchingDocs(q).collect().map(_.getLong(0)).toSet
-      assert(sm.map(_._1).toSet == md, s"query '$q'")
+      // the match SET is every doc whose raw text holds every query term
+      val terms = graft.index.Tokenize.tokenize(q).distinct
+      val brute = withId.select($"docId", graft.index.Tokenize.termsCol($"content").as("toks"))
+        .as[(Long, Seq[String])].collect()
+        .collect { case (d, toks) if terms.forall(toks.contains) => d }.toSet
+      assert(sm.map(_._1).toSet == brute, s"query '$q'")
     }
     // dead term / empty query → empty, with the right schema
     assert(searcher.scoredMatches("import zzqx_nothing").isEmpty)
@@ -284,13 +287,22 @@ class SearcherSpec extends AnyFunSuite {
       "searchOr" -> (() => s.searchOr(q2, 10).collect()),
       "searchNot" -> (() => s.searchNot(q, "util_3", 10).collect()),
       "searchWhere" -> (() => s.searchWhere(q, 10, col("lang") === "scala").collect()),
-      "no-hit AND" -> (() => assert(s.search("import zzqx_nothing", 10).isEmpty)))
+      "no-hit AND" -> (() => assert(s.search("import zzqx_nothing", 10).isEmpty)),
+      "searchCount" -> (() => s.searchCount(q)),
+      "searchFacets" -> (() => s.searchFacets(q, "lang").collect()),
+      "searchSortBy" -> (() => s.searchSortBy(q, 10, "path").collect()),
+      "searchSynonym" -> (() => s.searchSynonym(Seq("util_7", "util_17"), 10).collect()),
+      "explainHits" -> (() => s.explainHits(q, 10).collect()))
     ops.foreach(_._2()) // looks every term up and broadcasts the norms
-    // one exchange per plan: its map stage and the final top-k are the two
-    // jobs; a term absent from the dictionary exits on the driver with none
+    // one exchange per top-k plan: its map stage and the final top-k are the
+    // two jobs; a term absent from the dictionary exits on the driver with
+    // none; count, facets and sort add their aggregation or join stages on
+    // the AND kernel's match stream, explain adds its search
     val counts = ops.map { case (name, op) => name -> jobsOf(op()) }
     assert(counts == Seq("search" -> 2, "searchAfter" -> 2, "searchOr" -> 2,
-      "searchNot" -> 2, "searchWhere" -> 2, "no-hit AND" -> 0))
+      "searchNot" -> 2, "searchWhere" -> 2, "no-hit AND" -> 0,
+      "searchCount" -> 3, "searchFacets" -> 6, "searchSortBy" -> 3,
+      "searchSynonym" -> 2, "explainHits" -> 6))
     s.close()
   }
 
