@@ -210,16 +210,11 @@ object IndexBuilder {
       // Shard extents span the ORIGINAL docId range (ids are not renumbered).
       val bound = docStats.get("maxDocId").asInstanceOf[Long] + 1
       IndexFiles.docs(spark, Seq(outDir))
-        .select($"docId", $"dlen", (($"docId" / dps).cast("int")).as("shard"))
-        .as[(Long, Int, Int)]
-        .groupByKey(_._3)
-        .mapGroups { (shard, it) =>
-          val first = shard.toLong * dps
-          val size = (math.min((shard + 1).toLong * dps, bound) - first).toInt
-          val lens = new Array[Int](size)
-          it.foreach { case (docId, dlen, _) => lens((docId - first).toInt) = dlen }
-          ShardLens(shard, first, lens)
-        }
+        .select($"docId", $"dlen")
+        .as[(Long, Int)]
+        .mapPartitions(packLens(_, dps, bound))
+        .groupByKey(_.shard)
+        .mapGroups((_, it) => graft.query.Searcher.mergeLens(it))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dlens.parquet")
     }
 
@@ -650,6 +645,42 @@ object IndexBuilder {
     }
   }
 
+  /** Drafts of docId-ascending (docId, content) partitions, (term, shard)-
+    * sorted per partition for [[finalizeSegments]] / [[finalizeSegmentsP]]:
+    * after a (term, shard) hash exchange into `exchange` partitions (the
+    * build), or in place when 0 (an ingest batch: all docs in one partition).
+    */
+  private[graft] def sortedDrafts[D <: Product : Encoder](rows: Dataset[(Long, String)],
+      dps: Int, positional: Boolean, exchange: Int): Dataset[D] = {
+    val drafts = rows.mapPartitions(it =>
+      draftSegments(it, dps, positional).asInstanceOf[Iterator[D]])
+    (if (exchange > 0) drafts.repartition(exchange, col("term"), col("shard")) else drafts)
+      .sortWithinPartitions("term", "shard")
+  }
+
+  /** Pack (docId, dlen) rows into one zero-filled, docId-aligned
+    * [[ShardLens]] per shard: `min(dps, end - first)` slots, `end` bounding
+    * the index's docIds, so partial rows of one shard (partitions, base and
+    * deltas) overlay through `Searcher.mergeLens`.
+    */
+  private[graft] def packLens(rows: Iterator[(Long, Int)], dps: Int,
+                              end: Long): Iterator[ShardLens] = {
+    val m = new java.util.HashMap[Int, Array[Int]]()
+    rows.foreach { case (docId, dlen) =>
+      val shard = (docId / dps).toInt
+      val first = shard.toLong * dps
+      var arr = m.get(shard)
+      if (arr == null) {
+        arr = new Array[Int](math.min(dps.toLong, end - first).toInt)
+        m.put(shard, arr)
+      }
+      arr((docId - first).toInt) = dlen
+    }
+    import scala.jdk.CollectionConverters._
+    m.entrySet().iterator().asScala.map(e =>
+      ShardLens(e.getKey, e.getKey.toLong * dps, e.getValue))
+  }
+
   /** REDUCE-SIDE finalize over (term, shard)-sorted drafts: a single draft
     * keeps its encoded bytes verbatim (decode only to derive block-max
     * metadata); boundary straddlers — several drafts of one (term, shard) —
@@ -657,7 +688,7 @@ object IndexBuilder {
     * are bit-identical to the old row-wise reduce encode (same arrays into
     * the same [[Codec.makeSeg]] math).
     */
-  private def finalizeSegments(it: Iterator[SegDraft], k1: Double, b: Double,
+  private[graft] def finalizeSegments(it: Iterator[SegDraft], k1: Double, b: Double,
       avgdl: Double, counter: LongAccumulator): Iterator[PostingSeg] = {
     val buf = it.buffered
     new Iterator[PostingSeg] {
@@ -698,7 +729,7 @@ object IndexBuilder {
     * self-contained, so merged posBytes is the concatenation in the same
     * first-docId order.
     */
-  private def finalizeSegmentsP(it: Iterator[SegDraftP], k1: Double, b: Double,
+  private[graft] def finalizeSegmentsP(it: Iterator[SegDraftP], k1: Double, b: Double,
       avgdl: Double, counter: LongAccumulator): Iterator[PostingSegP] = {
     val buf = it.buffered
     new Iterator[PostingSegP] {
@@ -936,7 +967,6 @@ object IndexBuilder {
     // corpus stats: from this attempt's sort/observation when the stage ran,
     // else re-aggregated from the committed docs artifact (narrow scans)
     val numDocs = if (numDocsFromSort >= 0) numDocsFromSort else docsDf.count()
-    val nd = numDocs
 
     // the docId order is "the TOTAL order of the unique composite key" — a
     // duplicate key makes tie order attempt-dependent, so a kill+resume
@@ -958,26 +988,10 @@ object IndexBuilder {
       // per shard — the exchange carries a few hundred array rows instead
       // of one row per document. Order-independent: a docId writes its own
       // slot, zeros elsewhere, and mergeLens overlays non-zero slots.
-      val ndLocal = nd
       docsDf
         .select($"docId", $"dlen")
         .as[(Long, Int)]
-        .mapPartitions { it =>
-          val m = new java.util.HashMap[Int, Array[Int]]()
-          it.foreach { case (docId, dlen) =>
-            val shard = (docId / dps).toInt
-            var arr = m.get(shard)
-            if (arr == null) {
-              val first = shard.toLong * dps
-              arr = new Array[Int](math.min(dps.toLong, ndLocal - first).toInt)
-              m.put(shard, arr)
-            }
-            arr((docId - shard.toLong * dps).toInt) = dlen
-          }
-          import scala.jdk.CollectionConverters._
-          m.entrySet().iterator().asScala.map(e =>
-            ShardLens(e.getKey, e.getKey.toLong * dps, e.getValue))
-        }
+        .mapPartitions(packLens(_, dps, numDocs))
         .groupByKey(_.shard)
         .mapGroups((_, it) => graft.query.Searcher.mergeLens(it))
         .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dlens.parquet")
@@ -1034,15 +1048,10 @@ object IndexBuilder {
           finalize: (Iterator[D], LongAccumulator) => Iterator[S],
           readPart: String => Iterator[S]): Unit = {
         val positional = cfg.positions
-        val sortedDrafts = withId
-          .select($"docId", $"content")
-          .as[(Long, String)]
-          .mapPartitions(it =>
-            draftSegments(it, dps, positional).asInstanceOf[Iterator[D]])
-          .repartition(P, $"term", $"shard")
-          .sortWithinPartitions($"term", $"shard")
+        val drafts = sortedDrafts[D](withId.select($"docId", $"content").as[(Long, String)],
+          dps, positional, exchange = P)
         if (!cfg.partitionedResume) {
-          sortedDrafts
+          drafts
             .mapPartitions(it => manifested(mAcc, "postings", 1L)(
               finalize(it, segCounter)))
             .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/postings.parquet")
@@ -1058,7 +1067,7 @@ object IndexBuilder {
             System.err.println(s"[buildFast] partitioned resume: " +
               s"${committed.value.size}/$P postings partitions already " +
               "committed — re-encoding only the rest")
-          sortedDrafts.foreachPartition { (it: Iterator[D]) =>
+          drafts.foreachPartition { (it: Iterator[D]) =>
             val tc = TaskContext.get()
             if (!committed.value.contains(tc.partitionId()))
               PartStore.writePart(partsDir, tc.partitionId(), tc.taskAttemptId(),

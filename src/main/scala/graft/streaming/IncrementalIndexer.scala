@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft._
-import graft.index.{Codec, IndexBuilder, IndexConfig, IndexFiles, Metrics, Tokenize}
+import graft.index.{IndexBuilder, IndexConfig, Metrics}
 
 /** Incremental index ingest via Structured Streaming: new corpus files
   * arriving in a directory are indexed per micro-batch into self-contained
@@ -20,6 +20,9 @@ import graft.index.{Codec, IndexBuilder, IndexConfig, IndexFiles, Metrics, Token
   * cache, psi/interface.cc:281-312) extended with event-driven appends:
   *  - docIds continue densely after the base (global, deterministic given
   *    the arrival order of batches; within a batch, composite-key order)
+  *  - a batch encodes with the build's kernels (`token_count`,
+  *    `draftSegments`, `finalizeSegments[P]`, `packLens`), so a delta over
+  *    docIds [0, n) equals `IndexBuilder.buildFast` over the same docs
   *  - each batch directory is committed by its meta.json (written last);
   *    a restart recomputes the next docId from committed batches only and
   *    overwrites any uncommitted partial batch — idempotent resume, the
@@ -51,26 +54,37 @@ object IncrementalIndexer {
   }
 
   /** Index one micro-batch into `batchDir` (same artifact shape as a full
-    * index). Micro-batches are small by construction, so batch-local
-    * operations (a window for in-batch docIds, groupBy encode) are fine here
-    * — the petabyte-scale path is the batch `IndexBuilder`.
+    * index) with the build's own kernels. The batch-local unpartitioned
+    * window that numbers the batch's docs gathers them into ONE
+    * docId-ascending partition, and everything after it stays there: dlen is
+    * `token_count`, the dlens are packed by [[IndexBuilder.packLens]], the
+    * postings are map-side drafts finalized without a (term, shard)
+    * exchange (one partition holds every draft of a (term, shard)), and the
+    * dict is a streaming per-term merge of the term-sorted segments. The
+    * window's exchange is the batch's only shuffle. Micro-batches are small
+    * by construction, so one partition is fine here — the petabyte-scale
+    * path is [[IndexBuilder.buildFast]].
     *
     * The commit counts of `meta.json` are observed during the writes that
     * produce the tables (numDocs/totalTokens on the docs write, numSegments
-    * on the postings write, numTerms on the dict write), each above every
-    * exchange of its plan, so no job re-reads a table to count it.
+    * on the postings write, numTerms on the dict write), so no job re-reads
+    * a table to count it.
     */
   def indexBatch(spark: SparkSession, batch: DataFrame, batchDir: String,
                  firstDocId: Long, cfg: IndexConfig): IndexMetaLike = {
     import spark.implicits._
     val t0 = System.nanoTime()
     val dps = cfg.docsPerShard
+    graft.functions.VByteFunctions.register(spark)
     val withId = batch
       .withColumn("docId",
         (row_number().over(Window.orderBy("repo", "path", "commit")) - 1)
           .cast("long") + firstDocId)
+      // the window already yields one partition; coalesce(1) keeps it one,
+      // because finalize merges a (term, shard) only within a partition
+      .coalesce(1)
       .withColumn("sha256", sha2(col("content"), 256))
-      .withColumn("dlen", size(Tokenize.termsCol(col("content"))).cast("int"))
+      .withColumn("dlen", expr("token_count(content)"))
       .persist()
 
     val docStats = new Observation("deltaDocs")
@@ -83,71 +97,46 @@ object IncrementalIndexer {
     val totalTokens = docStats.get("totalTokens").asInstanceOf[Long]
     val globalEnd = firstDocId + numDocs
 
-    withId.select($"docId", $"dlen", (($"docId" / dps).cast("int")).as("shard"))
-      .as[(Long, Int, Int)]
-      .groupByKey(_._3)
-      .mapGroups { (shard, it) =>
-        val first = shard.toLong * dps
-        val sz = (math.min((shard + 1).toLong * dps, globalEnd) - first).toInt
-        val lens = new Array[Int](sz)
-        it.foreach { case (d, dl, _) => lens((d - first).toInt) = dl }
-        ShardLens(shard, first, lens)
-      }
+    withId.select($"docId", $"dlen").as[(Long, Int)]
+      .mapPartitions(IndexBuilder.packLens(_, dps, globalEnd))
       .write.mode("overwrite").parquet(s"$batchDir/dlens.parquet")
 
     val (k1, b) = (cfg.k1, cfg.b)
     val avgdl = totalTokens.toDouble / math.max(numDocs, 1)
+    val rows = withId.select($"docId", $"content").as[(Long, String)]
+    def encode[D <: Product : Encoder, S <: Product : Encoder](
+        finalize: Iterator[D] => Iterator[S]): DataFrame =
+      IndexBuilder.sortedDrafts[D](rows, dps, cfg.positions, exchange = 0)
+        .mapPartitions(finalize).toDF()
+    val segs = (if (!cfg.positions)
+      encode[SegDraft, PostingSeg](IndexBuilder.finalizeSegments(_, k1, b, avgdl, null))
+    else
+      encode[SegDraftP, PostingSegP](IndexBuilder.finalizeSegmentsP(_, k1, b, avgdl, null))
+    ).persist()
     val segStats = new Observation("deltaSegments")
-    if (!cfg.positions) {
-      withId
-        .select($"docId", (($"docId" / dps).cast("int")).as("shard"), $"dlen",
-          explode(Tokenize.termsCol($"content")).as("term"))
-        .groupBy("term", "docId", "shard", "dlen")
-        .agg(count(lit(1)).cast("int").as("tf"))
-        .as[(String, Long, Int, Int, Int)]
-        .groupByKey(r => (r._1, r._3))
-        .mapGroups { (key, it) =>
-          val (term, shard) = key
-          val rows = it.toArray.sortBy(_._2)
-          val da = rows.map(_._2)
-          val fa = rows.map(_._5)
-          val la = rows.map(_._4)
-          Codec.makeSeg(term, shard, da, fa, la, k1, b, avgdl)
-        }
-        .observe(segStats, count(lit(1)).as("numSegments"))
-        .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
-    } else {
-      // positional deltas: ordinals via posexplode, per-(term, doc) ascending
-      // position lists; same PostingSegP shape as the positional index build,
-      // so composite and compacted phrase search work over streamed batches
-      withId
-        .select($"docId", (($"docId" / dps).cast("int")).as("shard"), $"dlen",
-          posexplode(Tokenize.termsCol($"content")).as(Seq("ord", "term")))
-        .groupBy("term", "docId", "shard", "dlen")
-        .agg(sort_array(collect_list($"ord")).as("pos"))
-        .select($"term", $"docId", $"shard", $"dlen", $"pos")
-        .as[(String, Long, Int, Int, Array[Int])]
-        .groupByKey(r => (r._1, r._3))
-        .mapGroups { (key, it) =>
-          val (term, shard) = key
-          val rows = it.toArray.sortBy(_._2)
-          val da = rows.map(_._2)
-          val ps = rows.map(_._5)
-          val fa = ps.map(_.length)
-          val la = rows.map(_._4)
-          Codec.makeSegP(term, shard, da, fa, la, k1, b, avgdl,
-            Codec.encodePositions(ps))
-        }
-        .observe(segStats, count(lit(1)).as("numSegments"))
-        .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
-    }
+    segs.observe(segStats, count(lit(1)).as("numSegments"))
+      .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
 
     val dictStats = new Observation("deltaDict")
-    IndexFiles.postings(spark, Seq(batchDir))
-      .groupBy("term").agg(sum($"n".cast("long")).as("df"), sum($"sumTf").as("cf"))
+    segs.select($"term", $"n", $"sumTf").as[(String, Int, Long)]
+      .mapPartitions { it =>
+        val buf = it.buffered
+        new Iterator[TermStat] {
+          def hasNext: Boolean = buf.hasNext
+          def next(): TermStat = {
+            val (term, n, sumTf) = buf.next()
+            var df = n.toLong
+            var cf = sumTf
+            while (buf.hasNext && buf.head._1 == term) {
+              val (_, n2, sumTf2) = buf.next(); df += n2; cf += sumTf2
+            }
+            TermStat(term, df, cf)
+          }
+        }
+      }
       .observe(dictStats, count(lit(1)).as("numTerms"))
-      .as[TermStat]
       .write.mode("overwrite").parquet(s"$batchDir/dict.parquet")
+    segs.unpersist()
     withId.unpersist()
 
     val numTerms = dictStats.get("numTerms").asInstanceOf[Long]
@@ -169,8 +158,9 @@ object IncrementalIndexer {
     *
     * `maxFilesPerTrigger` bounds a micro-batch so a BULK drop into the watch
     * directory (a backfill, a re-sync) cannot form one giant batch: indexBatch
-    * assigns in-batch docIds with a batch-local unpartitioned window — correct
-    * but serial — so the batch size cap is what keeps that stage bounded; the
+    * runs a batch in the one partition of its batch-local unpartitioned docId
+    * window, encode included — correct but serial — so the batch size cap is
+    * what keeps that stage bounded; the
     * file source simply splits the drop into several ordinary micro-batches
     * (StreamingIndexSpec asserts a multi-batch ingest stays bit-exact vs a
     * full rebuild).

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark.jobsOf
+import graft.TestSpark.{jobsOf, shuffleWritesOf}
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.query.Searcher
@@ -47,10 +47,23 @@ class IndexFilesSpec extends AnyFunSuite {
     assert(one == three, s"1 delta: $one jobs, 3 deltas: $three jobs")
   }
 
-  test("one indexBatch launches at most 9 jobs") {
+  // the window's exchange, then one job per table write plus one to fill
+  // each of the two caches (the numbered batch and its segments)
+  test("one indexBatch launches at most 7 jobs") {
+    val first = baseDocs + 300L // the base is built outside the counted region
     val n = jobsOf(IncrementalIndexer.indexBatch(spark, slice(300L, 100L),
-      s"$work/plain/batch_3", baseDocs + 300L, IndexConfig(docsPerShard = 256)))
-    assert(n <= 9, s"indexBatch launched $n jobs")
+      s"$work/plain/batch_3", first, IndexConfig(docsPerShard = 256)))
+    assert(n <= 7, s"indexBatch launched $n jobs")
+  }
+
+  test("one indexBatch shuffles only in its docId window") {
+    val first = baseDocs + 400L // the base is built outside the recorded region
+    for (positions <- Seq(false, true)) {
+      val w = shuffleWritesOf(IncrementalIndexer.indexBatch(spark, slice(400L, 100L),
+        s"$work/shuffle_$positions/batch_0", first,
+        IndexConfig(docsPerShard = 256, positions = positions)))
+      assert(w == Seq(100L), s"positions=$positions: shuffle records written per stage $w")
+    }
   }
 
   test("a plain buildFast launches at most 22 jobs") {

@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Assertions.assert
 
@@ -38,19 +38,30 @@ object TestSpark {
     * jobs. Listener events arrive in order, so once the closing sentinel's
     * start is seen, every job of `f` has been seen too.
     */
-  def jobsOf(f: => Unit): Int = {
+  def jobsOf(f: => Unit): Int = record(f)._1
+
+  /** Shuffle records written by each stage of `f` that wrote any, in
+    * completion order (recorded between the same sentinels as [[jobsOf]]).
+    */
+  def shuffleWritesOf(f: => Unit): Seq[Long] = record(f)._2
+
+  private def record(f: => Unit): (Int, Seq[Long]) = {
     val sc = spark.sparkContext
-    val ids = ConcurrentHashMap.newKeySet[Int]()
-    val sentinels = new ConcurrentHashMap[String, Int]()
+    // written on the listener thread only, read after `closed` releases
+    var (opened, done, jobs) = (false, false, 0)
+    val writes = Seq.newBuilder[Long]
     val closed = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        ids.add(e.jobId)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith("jobs-of-sentinel-")).foreach { g =>
-            sentinels.put(g, e.jobId)
-            if (g.endsWith("close")) closed.countDown()
-          }
+          .filter(_.startsWith("jobs-of-sentinel-")) match {
+          case Some(g) if g.endsWith("open") => opened = true
+          case Some(_) => done = true; closed.countDown()
+          case None => if (opened && !done) jobs += 1
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val w = e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
+        if (opened && !done && w > 0) writes += w
       }
     }
     def sentinel(name: String): Unit = {
@@ -63,8 +74,7 @@ object TestSpark {
       f
       sentinel("close")
       assert(closed.await(60, TimeUnit.SECONDS), "listener never saw the sentinel")
-      val (lo, hi) = (sentinels.get("jobs-of-sentinel-open"), sentinels.get("jobs-of-sentinel-close"))
-      ids.toArray.map(_.asInstanceOf[Int]).count(id => id > lo && id < hi)
+      (jobs, writes.result())
     } finally sc.removeSparkListener(listener)
   }
 }
