@@ -41,9 +41,11 @@ case class IndexConfig(docsPerShard: Int = 1 << 12,
   // v3 (r5): postings schema gained the avgdl-free per-block stats
   // (blockMaxTf/blockMinDlen) — the version bump makes every pre-r5 index
   // fail the freshness/fingerprint checks loudly instead of crashing the
-  // reader on missing columns
+  // reader on missing columns. v4: dict rows gained `shards` and the dict
+  // files are term-sorted with disjoint ranges, so a half-built index of
+  // the old layout is rebuilt instead of resumed into a mixed one.
   def fingerprint: String =
-    CorpusFp.sha(s"v3|$docsPerShard|$k1|$b|$verifySha|$positions")
+    CorpusFp.sha(s"v4|$docsPerShard|$k1|$b|$verifySha|$positions")
 }
 
 private object CorpusFp {
@@ -73,7 +75,8 @@ case class IndexMeta(numDocs: Long, totalTokens: Long, avgdl: Double,
   *             psi/utils/hash_bucket_cache.cc:49-61), reduce-side finalize +
   *             per-partition lineage manifests; optionally committed per
   *             reduce partition (`partitionedResume`)
-  *   dict      term dictionary (df, cf) derived from the postings
+  *   dict      term dictionary (df, cf, shard list) derived from the
+  *             postings, term-range-partitioned ([[writeDict]])
   *
   * `meta.json`, written last, is the publish marker.
   */
@@ -147,8 +150,8 @@ object IndexBuilder {
     * standalone index: per-(term, shard) posting runs are merged in docId
     * order and re-encoded, block-max metadata is recomputed against the
     * COMBINED corpus avgdl (so query-time pruning is admissible again), the
-    * dictionary and per-shard dlens are re-aggregated. The analog of the
-    * reference regenerating its server cache after appends
+    * dictionary ([[writeDict]]) and per-shard dlens are re-aggregated. The
+    * analog of the reference regenerating its server cache after appends
     * (UB-PSI OFFLINE_GEN_CACHE, psi/interface.cc:281-312).
     *
     * With `tombstonePath` set, compaction additionally APPLIES DELETES
@@ -332,24 +335,17 @@ object IndexBuilder {
           }
         }.toDF()
     }
-    // numSegments is observed ABOVE the range exchange: the range
-    // partitioner's sampling pass re-executes the cogroup below it, which
-    // would double-count an observation (or accumulator) placed there
+    // postings and dict share term ranges drawn from the input segments, so
+    // no range sampler re-runs the merge cogroup
+    val bounds = termBounds(postingsIn, P, metas.map(_.numSegments).sum)
     val segObs = new org.apache.spark.sql.Observation("compactSegments")
-    merged
-      .repartitionByRange(P, $"term", $"shard")
-      .sortWithinPartitions("term", "shard")
+    byTermRange(merged, P, bounds)
       .observe(segObs, count(lit(1)).as("numSegments"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/postings.parquet")
     val numSegments = segObs.get("numSegments").asInstanceOf[Long]
 
-    val dictObs = new org.apache.spark.sql.Observation("compactDict")
-    IndexFiles.postings(spark, Seq(outDir))
-      .groupBy("term").agg(sum($"n".cast("long")).as("df"), sum($"sumTf").as("cf"))
-      .observe(dictObs, count(lit(1)).as("numTerms"))
-      .as[TermStat]
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict.parquet")
-    val numTerms = dictObs.get("numTerms").asInstanceOf[Long]
+    val numTerms = writeDict(byTermRange(IndexFiles.postings(spark, Seq(outDir)), P, bounds),
+      s"$outDir/dict.parquet")
     tombstoneDf.foreach(_.unpersist())
     val meta = IndexMeta(numDocs, totalTokens, avgdl, k1, b, base.docsPerShard,
       numTerms, numSegments, base.fingerprint)
@@ -370,6 +366,108 @@ object IndexBuilder {
       if (fs.exists(bak)) fs.delete(bak, true)
     }
     meta
+  }
+
+  /** The dict writer of every index writer (`buildFast`, `compact` and
+    * `IncrementalIndexer.indexBatch`): one [[TermStat]] per term, streamed
+    * out of segments sorted on (term, shard) within each partition, no term
+    * in two partitions (see [[byTermRange]]; an ingest batch's one sorted
+    * partition needs no exchange) — df = Σn, cf = ΣsumTf, shards = the
+    * segments' shards. Every dict file is then term-sorted, and no two files
+    * overlap in term range: `IndexFiles.DictReader` picks files by range,
+    * and parquet min/max statistics prune the expansion paths' `startsWith`
+    * / range scans. Pages are written in parquet's v2 format, whose
+    * DELTA_BYTE_ARRAY encoding front-codes the sorted terms, and hold at
+    * most 1,000 rows, so a lookup's column-index filter decodes one small
+    * page per term: on the 2,000-doc test index a two-term driver lookup
+    * took about 16 ms of CPU with one 20,000-row page per file and 4–5 ms
+    * with 1,000-row pages, for 10% more dict bytes. Returns the number of
+    * terms, observed on the write.
+    */
+  private[graft] def writeDict(segs: DataFrame, out: String): Long = {
+    val spark = segs.sparkSession
+    import spark.implicits._
+    val obs = new org.apache.spark.sql.Observation("dict")
+    segs.select($"term", $"shard", $"n", $"sumTf").as[(String, Int, Int, Long)]
+      .mapPartitions { it =>
+        val buf = it.buffered
+        new Iterator[TermStat] {
+          def hasNext: Boolean = buf.hasNext
+          def next(): TermStat = {
+            val (term, shard, n, sumTf) = buf.next()
+            var (df, cf) = (n.toLong, sumTf)
+            val shards = Array.newBuilder[Int]
+            shards += shard
+            var last = shard
+            while (buf.hasNext && buf.head._1 == term) {
+              val (_, s, n2, sumTf2) = buf.next()
+              df += n2; cf += sumTf2
+              if (s != last) { shards += s; last = s }
+            }
+            TermStat(term, df, cf, shards.result())
+          }
+        }
+      }
+      .observe(obs, count(lit(1)).as("numTerms"))
+      .write.mode(SaveMode.Overwrite).option("parquet.writer.version", "v2")
+      .option("parquet.page.row.count.limit", "1000").parquet(out)
+    obs.get("numTerms").asInstanceOf[Long]
+  }
+
+  /** `df` range-exchanged on `term` into `parts` partitions over `bounds`
+    * ([[termBounds]]) and sorted on (term, shard) within each: no term
+    * lands in two partitions, and partition i holds the i-th term range.
+    */
+  private def byTermRange(df: DataFrame, parts: Int,
+                          bounds: Array[Array[Byte]]): DataFrame = {
+    val keys = partitionKeys(parts)
+    val range = udf { (t: Array[Byte]) =>
+      var (lo, hi) = (0, bounds.length) // index of the first bound above t
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (java.util.Arrays.compareUnsigned(bounds(mid), t) <= 0) lo = mid + 1 else hi = mid
+      }
+      keys(lo)
+    }
+    df.repartition(parts, range(col("term").cast("binary")))
+      .sortWithinPartitions("term", "shard")
+  }
+
+  /** Up to `parts` − 1 ascending split terms (UTF-8 bytes) for
+    * [[byTermRange]], drawn from the terms of `segs` themselves: the
+    * distinct terms of a fixed hash slice (about 100 of the `numSegments`
+    * rows per part) at even ranks. The same segments give the same bounds
+    * whatever their row order or file layout — a range exchange's own
+    * sampler draws by row position with a seed taken from the RDD id, so
+    * its bounds, and every dict file's bytes, moved between two builds of
+    * one corpus. Sampling its input also spares a range exchange's second
+    * run of the plan below it.
+    */
+  private def termBounds(segs: DataFrame, parts: Int, numSegments: Long): Array[Array[Byte]] = {
+    val stride = math.max(1L, numSegments / (100L * parts))
+    val sample = segs.where(pmod(xxhash64(col("term")), lit(stride)) === 0)
+      .select("term").as(Encoders.STRING).collect().distinct
+      .map(_.getBytes(StandardCharsets.UTF_8))
+      .sortWith(java.util.Arrays.compareUnsigned(_, _) < 0)
+    (1 until parts).map(i => sample(i * sample.length / parts)).distinct.toArray
+  }
+
+  /** `keys(p)` is an int that `repartition(n, key)` sends to partition p:
+    * the smallest found by evaluating the exchange's own partition-id
+    * expression (Spark's hash partitioning), so a key column built from
+    * these routes each term range to its own partition.
+    */
+  private def partitionKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var (found, x) = (0, 0)
+    while (found < n) {
+      val p = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
+        Seq(org.apache.spark.sql.catalyst.expressions.Literal(x)), n)
+        .partitionIdExpression.eval().asInstanceOf[Int]
+      if (keys(p) < 0) { keys(p) = x; found += 1 }
+      x += 1
+    }
+    keys
   }
 
   /** Wrap a posting-segment iterator so its partition emits one
@@ -1112,27 +1210,20 @@ object IndexBuilder {
     unpersistSorted()
     if (stages.stopped) return null
 
+    val numSegments =
+      // partitionedResume: the accumulator misses partitions skipped on a
+      // resume, so count the published artifact (a metadata-only scan)
+      if (stages.ranStages.contains("postings") && !cfg.partitionedResume)
+        segCounter.value.longValue()
+      else IndexFiles.postings(spark, Seq(indexDir)).count()
+
     // dictionary derived from the compressed segments (no second tokenize);
     // numTerms observed during the same write
     var numTermsObserved = -1L
     stages.run("dict") {
-      val dictObs = new org.apache.spark.sql.Observation("dictstats")
-      IndexFiles.postings(spark, Seq(indexDir))
-        .groupBy("term")
-        .agg(sum($"n".cast("long")).as("df"), sum($"sumTf").as("cf"))
-        // r6: term-RANGE-sorted dictionary files — every expansion path
-        // (prefix/wildcard/regex-literal-prefix/term-range) filters the dict
-        // with `startsWith`/range predicates, and parquet min/max row-group
-        // stats only prune when files cover disjoint term ranges (guide §6).
-        // The range sampler re-executes the aggregate subtree once — a small
-        // build-side cost paid back on every expansion query. `observe`
-        // sits ABOVE the sort so the sampling pass cannot double-count it.
-        .repartitionByRange(P, $"term")
-        .sortWithinPartitions("term")
-        .observe(dictObs, count(lit(1)).as("numTerms"))
-        .as[TermStat]
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/dict.parquet")
-      numTermsObserved = dictObs.get("numTerms").asInstanceOf[Long]
+      val segs = IndexFiles.postings(spark, Seq(indexDir))
+      numTermsObserved = writeDict(byTermRange(segs, P, termBounds(segs, P, numSegments)),
+        s"$indexDir/dict.parquet")
       phase("dict-write")
     }
     if (stages.stopped) return null
@@ -1140,12 +1231,6 @@ object IndexBuilder {
     val numTerms =
       if (numTermsObserved >= 0) numTermsObserved
       else IndexFiles.dict(spark, Seq(indexDir)).count()
-    val numSegments =
-      // partitionedResume: the accumulator misses partitions skipped on a
-      // resume, so count the published artifact (a metadata-only scan)
-      if (stages.ranStages.contains("postings") && !cfg.partitionedResume)
-        segCounter.value.longValue()
-      else IndexFiles.postings(spark, Seq(indexDir)).count()
     val meta = IndexMeta(numDocs, totalTokens, avgdl, cfg.k1, cfg.b,
       cfg.docsPerShard, numTerms, numSegments, cfg.fingerprint)
     Metrics.writeMetaJson(s"$indexDir/meta.json", meta)

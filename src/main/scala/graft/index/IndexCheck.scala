@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ShardLens
@@ -21,7 +22,9 @@ import graft.ShardLens
   *    own pass — needs the dlens join); the avgdl-free pruning bounds
   *    derive from these, so an error here is silently-inadmissible pruning
   *  - dictionary df/cf == the per-term sums over segments (both directions:
-  *    no missing dict row, no orphan dict row)
+  *    no missing dict row, no orphan dict row); dict shards == the sorted,
+  *    distinct shards of the term's segments; every dict file term-sorted,
+  *    and no two files' term ranges overlap
   *  - dlens rows: firstDocId == shard·docsPerShard, length ≤ docsPerShard,
   *    every docs-table row's dlen equals its shard slot
   *  - docs table: docIds dense 0..numDocs-1, unique
@@ -151,10 +154,13 @@ object IndexCheck {
 
     // ---- dictionary consistency (segment sums vs dict, both directions) --
     val fromSegs = raw.groupBy("term")
-      .agg(sum($"n".cast("long")).as("seg_df"), sum($"sumTf").as("seg_cf"))
-    val dict = spark.read.parquet(s"$indexDir/dict.parquet")
-      .groupBy("term").agg(sum($"df").as("df"), sum($"cf").as("cf"))
-    val dictViolations = fromSegs.join(dict, Seq("term"), "full_outer")
+      .agg(sum($"n".cast("long")).as("seg_df"), sum($"sumTf").as("seg_cf"),
+        sort_array(collect_set($"shard")).as("seg_shards"))
+    val dictRaw = spark.read.parquet(s"$indexDir/dict.parquet")
+    val dict = if (dictRaw.columns.contains("shards")) dictRaw
+               else dictRaw.withColumn("shards", lit(null).cast("array<int>"))
+    val dictJoined = fromSegs.join(dict, Seq("term"), "full_outer")
+    val dictViolations = dictJoined
       .filter($"seg_df".isNull || $"df".isNull ||
         $"seg_df" =!= $"df" || $"seg_cf" =!= $"cf")
       .select($"term",
@@ -165,6 +171,34 @@ object IndexCheck {
       .as[(String, String, String)]
       .map { case (t, s, d) =>
         Violation("dict-mismatch", s"term='$t'", s"segments df/cf=$s dict df/cf=$d") }
+    // the shard list a query plans its shards from: exactly the sorted,
+    // distinct shards of the term's segments
+    val shardViolations = dictJoined
+      .filter($"seg_df".isNotNull && $"df".isNotNull && !($"seg_shards" <=> $"shards"))
+      .select($"term", $"seg_shards".cast("string"),
+        coalesce($"shards".cast("string"), lit("missing")))
+      .as[(String, String, String)]
+      .map { case (t, s, d) =>
+        Violation("dict-shards", s"term='$t'", s"segments' shards=$s dict shards=$d") }
+    // every dict file term-sorted, and no two files' term ranges overlap:
+    // the driver's term lookup picks files by their footer range
+    val dictRows = dictRaw.select(col("_metadata.file_path").as("file"),
+      col("_metadata.row_index").as("row"), $"term")
+    val orderViolations = dictRows
+      .withColumn("prev", lag($"term", 1).over(Window.partitionBy("file").orderBy("row")))
+      .filter($"prev" >= $"term")
+      .select($"file", $"row", $"prev", $"term").as[(String, Long, String, String)]
+      .map { case (f, r, p, t) =>
+        Violation("dict-order", s"file=$f row=$r", s"term '$t' after '$p'") }
+    val rangeViolations = dictRows.groupBy("file")
+      .agg(min($"term").as("lo"), max($"term").as("hi"))
+      .withColumn("prevFile", lag($"file", 1).over(Window.orderBy("lo", "hi")))
+      .withColumn("prevHi", lag($"hi", 1).over(Window.orderBy("lo", "hi")))
+      .filter($"prevHi" >= $"lo")
+      .select($"prevFile", $"file", $"prevHi", $"lo").as[(String, String, String, String)]
+      .map { case (pf, f, ph, lo) =>
+        Violation("dict-ranges", s"files $pf, $f",
+          s"term ranges overlap: one ends at '$ph', the other starts at '$lo'") }
 
     // ---- docs table: dense unique ids; dlens slot alignment --------------
     val docs = spark.read.parquet(s"$indexDir/docs.parquet")
@@ -267,6 +301,9 @@ object IndexCheck {
     val sampled =
       segViolations.take(MaxSamples) ++
       dictViolations.take(MaxSamples) ++
+      shardViolations.take(MaxSamples) ++
+      orderViolations.take(MaxSamples) ++
+      rangeViolations.take(MaxSamples) ++
       lensShapeViolations.take(MaxSamples) ++
       slotViolations.take(MaxSamples) ++
       minDlenViolations.take(MaxSamples) ++

@@ -1,10 +1,21 @@
 package graft.index
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, PathFilter}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveComparator
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
@@ -23,6 +34,10 @@ import graft._
   * which picks its schema.
   *
   * `IndexCheck` keeps schema inference on purpose: it is the verifier.
+  *
+  * [[DictReader]] answers term lookups (df and shard list) on the driver
+  * with parquet-mr: it picks the dict files whose footer term range covers a
+  * term and reads them with a `term` filter, launching no Spark job.
   */
 object IndexFiles {
 
@@ -73,6 +88,90 @@ object IndexFiles {
     spark.read.schema(schema).parquet(tables: _*)
   }
 
+  /** Term lookups in the dict tables of `dirs` (a base and its deltas),
+    * answered on the driver with no Spark job. The footers of every dict
+    * part file are read once, on the first lookup, and checked for the dict
+    * columns. A lookup reads only the files whose footer term range covers a
+    * wanted term, with an `IN` filter on `term` that prunes row groups by
+    * statistics and pages by the column index. Per term, df and cf are
+    * summed and the shard lists merged over the dirs; a term in no dict is
+    * absent from the result. Safe to call from several threads.
+    */
+  private[graft] final class DictReader(spark: SparkSession, dirs: Seq[String]) {
+    private val conf = spark.sparkContext.hadoopConfiguration
+
+    /** One dict part file: its footer and the term range its row groups
+      * span (null bounds when a row group has no range statistics: then
+      * every lookup reads the file).
+      */
+    private case class Part(file: HadoopInputFile, footer: ParquetMetadata,
+                            lo: Binary, hi: Binary) {
+      def covers(t: Binary): Boolean =
+        lo == null || (termOrder.lteq(lo, t) && termOrder.lteq(t, hi))
+    }
+
+    private lazy val parts: Seq[Part] = dirs.flatMap { d =>
+      partFilesOf(conf, s"$d/dict.parquet").flatMap { path =>
+        val file = HadoopInputFile.fromPath(path, conf)
+        val reader = ParquetFileReader.open(file)
+        val footer = try reader.getFooter finally reader.close()
+        requireColumns(path.toString, footer.getFileMetaData.getSchema.getFields.asScala
+          .map(_.getName).toSet, dictSchema)
+        val stats = footer.getBlocks.asScala.filter(_.getRowCount > 0).map(
+          _.getColumns.asScala.find(_.getPath.toDotString == "term").get.getStatistics)
+        if (stats.isEmpty) None
+        else if (!stats.forall(_.hasNonNullValue)) Some(Part(file, footer, null, null))
+        else Some(Part(file, footer,
+          stats.map(_.genericGetMin.asInstanceOf[Binary]).min(termOrder),
+          stats.map(_.genericGetMax.asInstanceOf[Binary]).max(termOrder)))
+      }
+    }
+
+    def lookup(terms: Seq[String]): Map[String, TermStat] = {
+      val want = terms.distinct.map(Binary.fromString)
+      val found = mutable.Map.empty[String, TermStat]
+      for (p <- parts; in = want.filter(p.covers) if in.nonEmpty; r <- read(p, in.toSet))
+        found(r.term) = found.get(r.term).fold(r)(f => TermStat(r.term, f.df + r.df,
+          f.cf + r.cf, (f.shards ++ r.shards).distinct.sorted))
+      found.toMap
+    }
+
+    /** The rows of one part file whose term is in `terms`. */
+    private def read(p: Part, terms: Set[Binary]): Seq[TermStat] = {
+      val filter = FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("term"), terms.asJava))
+      val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
+      val reader = new ParquetFileReader(p.file, p.footer, options, p.file.newStream())
+      val schema = p.footer.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      val out = Seq.newBuilder[TermStat]
+      try {
+        var pages = reader.readNextFilteredRowGroup()
+        while (pages != null) {
+          val records = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
+          var i = 0L
+          while (i < pages.getRowCount) {
+            val g = records.read()
+            if (g != null && !records.shouldSkipCurrentRecord()) out += {
+              val list = g.getGroup("shards", 0)
+              TermStat(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
+                Array.tabulate(list.getFieldRepetitionCount(0))(j =>
+                  list.getGroup(0, j).getInteger(0, 0)))
+            }
+            i += 1
+          }
+          pages = reader.readNextFilteredRowGroup()
+        }
+      } finally reader.close()
+      out.result()
+    }
+  }
+
+  /** The order of parquet's statistics on a string column: unsigned bytes
+    * of the UTF-8 encoding, which is also Spark's string order.
+    */
+  private val termOrder: Ordering[Binary] =
+    Ordering.comparatorToOrdering(PrimitiveComparator.UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR)
+
   private def requireColumns(table: String, cols: Set[String],
                              schema: StructType): Unit = {
     val missing = schema.fieldNames.filterNot(cols.contains)
@@ -84,15 +183,19 @@ object IndexFiles {
     p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
       !p.getName.startsWith(".")
 
+  /** The part files of `table`, in name order. */
+  private def partFilesOf(conf: Configuration, table: String): Seq[Path] = {
+    val dir = new Path(table)
+    dir.getFileSystem(conf).listStatus(dir, partFiles).map(_.getPath).sortBy(_.getName).toSeq
+  }
+
   /** Top-level columns in the footer of the first part file of `table` —
     * one listing and one footer read on the driver; None when the table has
     * no part file (then there are no rows to read).
     */
   private def footerColumns(spark: SparkSession, table: String): Option[Set[String]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(table)
-    val parts = dir.getFileSystem(conf).listStatus(dir, partFiles)
-    parts.map(_.getPath).sortBy(_.getName).headOption.map { first =>
+    partFilesOf(conf, table).headOption.map { first =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
       try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
         .map(_.getName).toSet

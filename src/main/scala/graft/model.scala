@@ -94,8 +94,13 @@ case class SegDraftP(term: String, shard: Int, n: Int, sumTf: Long,
 
 /** Term dictionary row (df = doc frequency, cf = collection frequency) — the
   * analog of KeyInfo's per-key dup counts (psi/utils/table_utils.cc:280-374).
+  * `shards` is the ascending, distinct list of docId shards whose postings
+  * hold the term, so a query learns where a term lives from the dictionary
+  * alone. Every dict part file is term-sorted and the files cover disjoint
+  * term ranges, so the driver answers a term lookup from the one file whose
+  * footer range covers it (`IndexFiles.DictReader`).
   */
-case class TermStat(term: String, df: Long, cf: Long)
+case class TermStat(term: String, df: Long, cf: Long, shards: Array[Int])
 
 /** Per-shard document lengths, docId-aligned: lens(i) is dlen of docId
   * firstDocId + i. Kept as one compact row per shard so query-time scoring

@@ -233,15 +233,16 @@ class Searcher(spark: SparkSession, indexDir: String,
     * for the lifetime of a Searcher, so caching is sound — this is the
     * in-memory term dictionary every native engine keeps (the reference
     * holds its small side wholly in memory the same way,
-    * psi/utils/ec_point_store.cc:441-460). One light Spark job per batch of
-    * UNSEEN terms, reading only the (term, shard, n) metadata columns of the
-    * postings parquet with `term IN (...)` pushed to the scan; repeat
-    * queries over known terms launch no dictionary job at all.
+    * psi/utils/ec_point_store.cc:441-460). UNSEEN terms are read from the
+    * dictionary on the driver, with no Spark job (`IndexFiles.DictReader`:
+    * the dict rows carry each term's shard list, and a lookup reads only
+    * the dict files whose footer term range covers the term); absent terms
+    * are cached too, with df 0.
     *
     * Bounded LRU (access-order, cap `termCacheCap`, default 1M entries):
     * a long-lived query service over an adversarial/unbounded query stream
     * must not grow the driver heap without limit; an evicted term simply
-    * pays one metadata scan again. Entry cost ~100 B → the default cap is
+    * pays one dictionary read again. Entry cost ~100 B → the default cap is
     * ~100 MB worst case.
     */
   private val termInfoCache = java.util.Collections.synchronizedMap(
@@ -253,24 +254,22 @@ class Searcher(spark: SparkSession, indexDir: String,
 
   private[graft] def termCacheSize: Int = termInfoCache.size()
 
-  private def lookupTerms(terms: Seq[String]): Map[String, Searcher.TermInfo] = {
+  private val dictReader = new IndexFiles.DictReader(spark, allDirs)
+
+  private[graft] def lookupTerms(terms: Seq[String]): Map[String, Searcher.TermInfo] = {
     // snapshot hits locally — never re-read the cache after the puts below,
     // so a concurrent eviction between put and re-get cannot surface a null
     val found = terms.flatMap(t => Option(termInfoCache.get(t)).map(t -> _)).toMap
     val missing = terms.filterNot(found.contains)
     if (missing.isEmpty) found
     else {
-      val rows = postings.filter($"term".isin(missing: _*))
-        .select($"term", $"shard", $"n".cast("long"))
-        .as[(String, Int, Long)].collect()
-      val byTerm = rows.groupBy(_._1)
-      val fetched = missing.map { t =>
-        val rs = byTerm.getOrElse(t, Array.empty[(String, Int, Long)])
-        val info = Searcher.TermInfo(rs.map(_._3).sum, rs.map(_._2).distinct.sorted)
+      val rows = dictReader.lookup(missing)
+      found ++ missing.map { t =>
+        val info = rows.get(t).fold(Searcher.TermInfo(0L, Array.emptyIntArray))(r =>
+          Searcher.TermInfo(r.df, r.shards))
         termInfoCache.put(t, info)
         t -> info
-      }.toMap
-      found ++ fetched
+      }
     }
   }
 
@@ -1599,7 +1598,7 @@ object Searcher {
   /** Cached per-term metadata: global doc frequency and the sorted shard set
     * holding the term (df == 0 ⇔ term absent from the index).
     */
-  private[query] case class TermInfo(df: Long, shards: Array[Int])
+  private[graft] case class TermInfo(df: Long, shards: Array[Int])
 
   /** Intersection of two sorted int arrays (two-cursor merge). */
   private[query] def intersectSorted(a: Array[Int], b: Array[Int]): Array[Int] = {

@@ -60,7 +60,8 @@ object IncrementalIndexer {
     * `token_count`, the dlens are packed by [[IndexBuilder.packLens]], the
     * postings are map-side drafts finalized without a (term, shard)
     * exchange (one partition holds every draft of a (term, shard)), and the
-    * dict is a streaming per-term merge of the term-sorted segments. The
+    * dict is [[IndexBuilder.writeDict]]'s per-term merge of the term-sorted
+    * segments, with no exchange. The
     * window's exchange is the batch's only shuffle. Micro-batches are small
     * by construction, so one partition is fine here — the petabyte-scale
     * path is [[IndexBuilder.buildFast]].
@@ -116,31 +117,12 @@ object IncrementalIndexer {
     val segStats = new Observation("deltaSegments")
     segs.observe(segStats, count(lit(1)).as("numSegments"))
       .write.mode("overwrite").parquet(s"$batchDir/postings.parquet")
+    val numSegments = segStats.get("numSegments").asInstanceOf[Long]
 
-    val dictStats = new Observation("deltaDict")
-    segs.select($"term", $"n", $"sumTf").as[(String, Int, Long)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[TermStat] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): TermStat = {
-            val (term, n, sumTf) = buf.next()
-            var df = n.toLong
-            var cf = sumTf
-            while (buf.hasNext && buf.head._1 == term) {
-              val (_, n2, sumTf2) = buf.next(); df += n2; cf += sumTf2
-            }
-            TermStat(term, df, cf)
-          }
-        }
-      }
-      .observe(dictStats, count(lit(1)).as("numTerms"))
-      .write.mode("overwrite").parquet(s"$batchDir/dict.parquet")
+    val numTerms = IndexBuilder.writeDict(segs, s"$batchDir/dict.parquet")
     segs.unpersist()
     withId.unpersist()
 
-    val numTerms = dictStats.get("numTerms").asInstanceOf[Long]
-    val numSegments = segStats.get("numSegments").asInstanceOf[Long]
     val elapsedMs = (System.nanoTime() - t0) / 1000000
     Metrics.writeJson(s"$batchDir/manifests/batch.json",
       Seq(PartitionManifest("delta", 0, numDocs, totalTokens, 0, "", elapsedMs)))

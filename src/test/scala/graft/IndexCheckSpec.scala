@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{IndexBuilder, IndexCheck, Metrics}
 
 /** Index fsck: a fresh index passes every invariant; each class of
-  * corruption (segment bytes, dictionary stats, shard-length slots, meta
-  * counts) is detected and named.
+  * corruption (segment bytes, dictionary stats, shard lists and file order,
+  * shard-length slots, meta counts) is detected and named.
   */
 class IndexCheckSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -70,6 +70,34 @@ class IndexCheckSpec extends AnyFunSuite {
     val r = IndexCheck.check(spark, dir)
     assert(!r.ok)
     assert(r.violations.exists(_.check == "dict-mismatch"), r.render)
+  }
+
+  test("tampered dictionary shard list is detected") {
+    val dir = copyIndex("dictshards")
+    val dict = spark.read.parquet(s"$indexDir/dict.parquet")
+    val victim = dict.filter(size($"shards") > 1).orderBy(asc("term")).select("term").head()
+    rewrite(dict.withColumn("shards",
+      when(col("term") === victim.getString(0), slice(col("shards"), 2, 1000))
+        .otherwise(col("shards"))),
+      s"$dir/dict.parquet")
+    val r = IndexCheck.check(spark, dir)
+    assert(r.violations.map(_.check).toSet == Set("dict-shards"), r.render)
+  }
+
+  test("a dictionary file out of term order is detected") {
+    val dir = copyIndex("dictorder")
+    rewrite(spark.read.parquet(s"$indexDir/dict.parquet").repartition(1)
+      .sortWithinPartitions(desc("term")), s"$dir/dict.parquet")
+    val r = IndexCheck.check(spark, dir)
+    assert(r.violations.map(_.check).toSet == Set("dict-order"), r.render)
+  }
+
+  test("dictionary files with overlapping term ranges are detected") {
+    val dir = copyIndex("dictranges")
+    rewrite(spark.read.parquet(s"$indexDir/dict.parquet").repartition(2, col("term"))
+      .sortWithinPartitions("term"), s"$dir/dict.parquet")
+    val r = IndexCheck.check(spark, dir)
+    assert(r.violations.map(_.check).toSet == Set("dict-ranges"), r.render)
   }
 
   test("tampered dlens slot is detected") {

@@ -66,11 +66,11 @@ class IndexFilesSpec extends AnyFunSuite {
     }
   }
 
-  test("a plain buildFast launches at most 22 jobs") {
+  test("a plain buildFast launches at most 21 jobs") {
     val (corpusDir, _) = TestSpark.builtIndex
     val n = jobsOf(IndexBuilder.buildFast(spark, corpusDir, s"$work/build_jobs",
       IndexConfig(docsPerShard = 256)))
-    assert(n <= 22, s"buildFast launched $n jobs")
+    assert(n <= 21, s"buildFast launched $n jobs")
   }
 
   test("a Searcher over a positional-ness mix fails loudly") {
@@ -106,5 +106,35 @@ class IndexFilesSpec extends AnyFunSuite {
     // the intact delta still opens and answers
     assert(new Searcher(spark, indexDir, Seq(src)).search("import def", 3)
       .collect().length == 3)
+  }
+
+  test("a Searcher over a dict without shard lists fails loudly, naming the column") {
+    val src = deltas.head
+    val old = s"$work/old_dict/batch_0"
+    for (t <- Seq("docs", "dlens", "postings"))
+      spark.read.parquet(s"$src/$t.parquet").write.mode("overwrite")
+        .parquet(s"$old/$t.parquet")
+    spark.read.parquet(s"$src/dict.parquet").drop("shards")
+      .write.mode("overwrite").parquet(s"$old/dict.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$src/meta.json"),
+      java.nio.file.Paths.get(s"$old/meta.json"))
+    val ex = intercept[IllegalArgumentException] {
+      new Searcher(spark, indexDir, Seq(old)).search("import def", 3)
+    }
+    assert(ex.getMessage.contains("lacks column(s) shards"), ex.getMessage)
+  }
+
+  test("two builds of one corpus write byte-identical dict files") {
+    val (corpusDir, _) = TestSpark.builtIndex
+    def dictFiles(dir: String): Seq[Seq[Byte]] = {
+      val d = new java.io.File(s"$dir/dict.parquet")
+      d.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+        .map(f => java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+    }
+    val again = s"$work/rebuild"
+    IndexBuilder.buildFast(spark, corpusDir, again, IndexConfig(docsPerShard = 256))
+    val (a, b) = (dictFiles(indexDir), dictFiles(again))
+    assert(a.size > 1 && a == b, s"${a.size} and ${b.size} dict files, " +
+      s"sizes ${a.map(_.size)} and ${b.map(_.size)}")
   }
 }

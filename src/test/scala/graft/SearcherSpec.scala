@@ -306,6 +306,21 @@ class SearcherSpec extends AnyFunSuite {
     s.close()
   }
 
+  test("fresh-term queries read the dictionary on the driver: Spark job counts pinned") {
+    val s = new Searcher(spark, indexDir)
+    s.search("import def", 10).collect() // broadcasts the norms
+    // rare terms this Searcher has not looked up yet
+    val Array(t1, t2) = spark.read.parquet(s"$indexDir/dict.parquet")
+      .filter($"df".between(2, 5) && $"term".startsWith("sym_")).orderBy("term")
+      .select("term").as[String].head(2)
+    // the map stage and the final top-k; the lookup itself launches none
+    val hits = jobsOf(assert(s.search(t1, 10).collect().nonEmpty))
+    // one term is absent from the dictionary: the AND exits on the driver
+    val noHit = jobsOf(assert(s.search(s"$t2 zzqx_fresh_absent", 10).isEmpty))
+    assert((hits, noHit) == (2, 0))
+    s.close()
+  }
+
   test("close destroys the norms broadcast; later queries fail with IllegalStateException") {
     val s = new Searcher(spark, indexDir)
     val q = "import val"

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{IndexBuilder, IndexConfig, Tokenize, Tombstones}
+import graft.index.{IndexBuilder, IndexConfig, IndexFiles, Tokenize, Tombstones}
 import graft.oracle.OracleBm25
 import graft.query.Searcher
 import graft.streaming.IncrementalIndexer
@@ -154,6 +154,65 @@ class ShardHarnessSpec extends AnyFunSuite {
     }
     broadcastPlan.close()
     cogroupPlan.close()
+  }
+
+  /** Per term of the postings of `dirs`: summed n and the sorted, distinct
+    * shards — what a dictionary lookup must answer.
+    */
+  private def postingsOracle(dirs: Seq[String]): Map[String, (Long, Seq[Int])] =
+    spark.read.parquet(dirs.map(d => s"$d/postings.parquet"): _*)
+      .groupBy("term").agg(sum($"n".cast("long")), sort_array(collect_set($"shard")))
+      .as[(String, Long, Seq[Int])].collect().map(r => r._1 -> (r._2, r._3)).toMap
+
+  private def driverLookup(dirs: Seq[String], terms: Seq[String]): Map[String, (Long, Seq[Int])] =
+    new IndexFiles.DictReader(spark, dirs).lookup(terms)
+      .map { case (t, r) => t -> (r.df, r.shards.toSeq) }
+
+  test("driver dictionary lookup equals the postings aggregate, before and after compaction") {
+    val (base, deltas, tombs, _) = env
+    // sort before the first dict term, after the last one, and in between
+    val absent = Seq("\u0001", "!!", "zzqx_nothing", "\uffff\uffff", "~")
+    val compacted = s"${TestSpark.workDir}/harness/compacted"
+    // compaction retires the tombstone file it applies: give it a copy
+    val tombsCopy = s"${TestSpark.workDir}/harness/tombstones_copy.parquet"
+    spark.read.parquet(tombs).write.mode("overwrite").parquet(tombsCopy)
+    IndexBuilder.compact(spark, base, deltas, compacted, Some(tombsCopy))
+    for (dirs <- Seq(base +: deltas, Seq(compacted))) {
+      val want = postingsOracle(dirs)
+      val straddle = (baseN / dps).toInt
+      assert(want.values.exists(_._2.contains(straddle)))
+      val got = driverLookup(dirs, want.keys.toSeq ++ absent)
+      assert(got.keySet == want.keySet, s"$dirs: ${(got.keySet -- want.keySet).take(5)} " +
+        s"${(want.keySet -- got.keySet).take(5)}")
+      val wrong = want.filter { case (t, w) => got(t) != w }
+      assert(wrong.isEmpty, s"$dirs: ${wrong.take(5).map(w => (w, got(w._1)))}")
+    }
+  }
+
+  test("concurrent fresh-term lookups on one Searcher equal the serial lookups") {
+    val (base, deltas, _, _) = env
+    val terms = postingsOracle(base +: deltas).keys.toSeq.sorted
+    val batches = (terms.grouped(97).toSeq :+ Seq("zzqx_nothing", "\u0001")).take(40)
+    val serial = searcher()
+    val want = batches.map(b => serial.lookupTerms(b).map { case (t, i) => t -> (i.df, i.shards.toSeq) })
+    serial.close()
+    val shared = searcher()
+    val threads = 4
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val futures = (0 until threads).map { t =>
+        pool.submit(new Callable[Seq[(Int, Map[String, (Long, Seq[Int])])]] {
+          def call(): Seq[(Int, Map[String, (Long, Seq[Int])])] =
+            batches.indices.map(i => (i + t * 7) % batches.size).map { j =>
+              j -> shared.lookupTerms(batches(j)).map { case (x, i) => x -> (i.df, i.shards.toSeq) }
+            }
+        })
+      }
+      futures.foreach(_.get(10, TimeUnit.MINUTES).foreach { case (j, got) =>
+        assert(got == want(j), s"lookup batch $j differs under concurrency")
+      })
+    } finally pool.shutdownNow()
+    shared.close()
   }
 
   test("concurrent mixed queries on one Searcher equal their serial results") {
