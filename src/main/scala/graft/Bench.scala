@@ -930,7 +930,7 @@ object Bench {
         timed(phraseSearcher.searchSpanFirst(p, 10, 16).collect())._2).sorted
       qsecs("bm25_spanfirst_p50") = pct(lat, 0.50)
     }
-    // multi-phrase (r5): slot-union merge + the same chain kernel — tracks
+    // multi-phrase (r5): slot-union merge + the same positional kernel — tracks
     // bm25_phrase_p50 plus the per-slot k-way position merge
     locally {
       val mps = Seq(

@@ -1132,7 +1132,7 @@ object SparkEntry {
     * of each slot's alternative set; survivors score the synonym contract
     * per distinct slot (tf summed over members, idf from the blended max
     * member df), summed in ascending slot-key order — the kernel's exact
-    * accumulation (Searcher.scoreShardMultiPhrase).
+    * accumulation (Searcher.scoreShardBoolPos over the multi-phrase span).
     */
   private def multiPhraseOracleSql(slots: Seq[Seq[String]], k: Int): String = {
     val slotTerms = slots.map(_.distinct.sorted)
@@ -1316,7 +1316,7 @@ object SparkEntry {
     // span-not (Lucene SpanNotQuery): an occurrence starting at p0.ord
     // spans ords [p0.ord, p0.ord + m - 1]; it is dropped when the exclude
     // term occurs in [p0.ord - pre, p0.ord + m - 1 + post] (same window
-    // arithmetic as the engine's chain kernel, shift-invariant so 1-based
+    // arithmetic as the engine's span chain walk, shift-invariant so 1-based
     // SQL ords need no adjustment)
     val exBound = exclude.map { case (ex, pre, post) =>
       s""" AND NOT EXISTS (SELECT 1 FROM ptoks x

@@ -325,13 +325,18 @@ object OracleBm25 {
       dfByTerm.keys.toSeq.sorted.map(t => (t, idf(numDocs, dfByTerm(t))))
         .toDF("term", "idf"))
     // phrase leaves: the adjacency doc set per phrase, derived with the
-    // same chain-join as topKPhrase (independent of the engine's zipper)
-    val phraseDocs: Map[graft.query.BoolQ.Phrase, Set[Long]] =
-      BoolQuery.phraseLeaves(tree).map { p =>
+    // same chain-join as topKPhrase (independent of the engine's chain walk)
+    val phraseDocs: Map[graft.query.BoolQ.Span, Set[Long]] =
+      BoolQuery.spanLeaves(tree).map { p =>
+        val ts = p match {
+          case graft.query.BoolQ.Phrase(ts) => ts
+          case _ => throw new IllegalArgumentException(
+            s"topKBool checks phrase leaves only, got the span $p")
+        }
         val ptoks = withId.select($"docId",
           posexplode(Tokenize.termsCol($"content")).as(Seq("ord", "term")))
-        var cand = ptoks.filter($"term" === p.ts.head).select($"docId", $"ord")
-        p.ts.zipWithIndex.drop(1).foreach { case (t, j) =>
+        var cand = ptoks.filter($"term" === ts.head).select($"docId", $"ord")
+        ts.zipWithIndex.drop(1).foreach { case (t, j) =>
           val next = ptoks.filter($"term" === t)
             .select($"docId".as("d2"), $"ord".as("o2"))
           cand = cand.join(next,

@@ -68,19 +68,63 @@ object BoolQ {
       s"DISMAX tie must be in [0,1], got $tie")
   }
 
-  /** Exact-phrase leaf (`"a b"` in quotes — the Lucene classic-parser
-    * phrase-inside-BooleanQuery composition): matches documents where the
-    * token sequence occurs CONSECUTIVELY; scores the sum of the DISTINCT
-    * member terms' BM25 contributions in ascending-term order — the same
-    * contract as [[graft.query.Searcher.searchPhrase]], so a one-leaf tree
-    * is bit-identical to the flat phrase query. Adjacency needs positions,
-    * so phrase-bearing trees route through the positional boolean kernel
-    * ([[graft.query.Searcher.scoreShardBoolPos]]); presence-only algebra
-    * (satisfiability, required terms, bounds) treats the phrase as the AND
-    * of its members, which is sound (adjacency only shrinks the match set).
+  /** Positional span leaf (Lucene SpanNearQuery over SpanOr slots): every
+    * slot holds its sorted alternative terms, and a document matches when
+    * some occurrence takes one alternative per slot within `window`
+    * consecutive positions — in slot order when `ordered` (a greedy chain),
+    * in any order otherwise (a min cover). A quoted phrase is the ordered
+    * span of singleton slots with `window = #slots` ([[Phrase]]), near
+    * queries are spans of their terms, multi-phrase and phrase-prefix
+    * queries carry several alternatives in a slot.
+    *
+    * Phrase-shaped spans may also bound the occurrence: it must end within
+    * the first `end` positions (Lucene SpanFirstQuery; 0-based positions,
+    * end exclusive), and with `exclude = (t, pre, post)` no `t` may occur
+    * in `[start − pre, end − 1 + post]` (Lucene SpanNotQuery). The exclude
+    * term filters only: it is never required, positive or scored.
+    *
+    * A slot is keyed by its member, or `a|b` when it has several (the
+    * synonym contract: tf summed over the members, idf from their max df).
+    * A matched span scores the sum of its DISTINCT slot keys' BM25 in
+    * ascending key order, so a one-leaf tree is bit-identical to the flat
+    * phrase / near / multi-phrase query. Presence-only algebra treats a
+    * slot as the OR of its members and the span as the AND of its slots,
+    * which is sound (position checks only shrink the match set). Spans need
+    * positions, so span-bearing trees run through
+    * [[graft.query.Searcher.scoreShardBoolPos]].
     */
-  final case class Phrase(ts: Vector[String]) extends BoolQ {
-    require(ts.length >= 2, s"phrase needs at least 2 tokens, got $ts")
+  final case class Span(slots: Vector[Vector[String]], window: Int, ordered: Boolean,
+                        end: Int = Int.MaxValue,
+                        exclude: Option[(String, Int, Int)] = None) extends BoolQ {
+    require(slots.nonEmpty && slots.forall(s => s.nonEmpty && s == s.distinct.sorted),
+      s"span slots must be non-empty sorted distinct alternatives, got $slots")
+    require(window >= slots.length, s"span window $window is below its ${slots.length} slots")
+    /** The slots' keys, in slot order. */
+    val keys: Vector[String] = slots.map(_.mkString("|"))
+    /** The distinct keys in ascending order: the span's score-sum order. */
+    val distinctKeys: Vector[String] = keys.distinct.sorted
+    require(ordered || keys.distinct.length == keys.length,
+      s"an unordered span needs distinct slots, got $slots")
+    require((end == Int.MaxValue && exclude.isEmpty) || (ordered && window == slots.length),
+      s"span-first and span-not bounds need a phrase-shaped span, got $this")
+  }
+
+  /** Exact-phrase leaf (`"a b"` in quotes — the Lucene classic-parser
+    * phrase-inside-BooleanQuery composition): the ordered [[Span]] of
+    * singleton slots whose window is the token count, so the tokens occur
+    * CONSECUTIVELY.
+    */
+  object Phrase {
+    def apply(ts: Vector[String]): Span = {
+      require(ts.length >= 2, s"phrase needs at least 2 tokens, got $ts")
+      Span(ts.map(Vector(_)), ts.length, ordered = true)
+    }
+
+    /** The tokens of a plain phrase span: no span-first or span-not bound. */
+    def unapply(s: Span): Option[Vector[String]] =
+      if (s.ordered && s.window == s.slots.length && s.slots.forall(_.length == 1) &&
+          s.end == Int.MaxValue && s.exclude.isEmpty) Some(s.slots.map(_.head))
+      else None
   }
 
   /** Minimum-should-match (Lucene
@@ -431,7 +475,7 @@ object BoolQuery {
       case Wild(p) => leafOr(expandWild(p))
       case Fuzzy(t, e) => leafOr(expandFuzzy(t, e))
       case t: Term => RwNode(t)
-      case p: Phrase => RwNode(p)
+      case s: Span => RwNode(s)
       case And(xs) =>
         val ks = xs.map(walk)
         if (ks.contains(RwNone)) RwNone
@@ -503,10 +547,12 @@ object BoolQuery {
   private def unexpanded(q: BoolQ): Nothing = throw new IllegalStateException(
     s"unexpanded multi-term leaf $q — rewriteMultiTerm must run first")
 
-  /** Distinct leaf terms in ascending order (both polarities — all are
-    * needed for presence tests).
+  /** Distinct leaf keys in ascending order (both polarities — all are
+    * needed for presence tests): each term leaf, each span slot's key and
+    * each span's exclude term. The positional kernel holds one list per
+    * key.
     */
-  def leafTerms(q: BoolQ): Seq[String] = {
+  def leafKeys(q: BoolQ): Seq[String] = {
     def walk(q: BoolQ): Iterator[String] = q match {
       case Term(t) => Iterator.single(t)
       case And(xs) => xs.iterator.flatMap(walk)
@@ -516,16 +562,22 @@ object BoolQuery {
       case DisMax(xs, _) => xs.iterator.flatMap(walk)
       case Msm(xs, _) => xs.iterator.flatMap(walk)
       case Const(x, _) => walk(x)
-      case Phrase(ts) => ts.iterator
+      case s: Span => s.keys.iterator ++ s.exclude.map(_._1)
       case q @ (Wild(_) | Fuzzy(_, _)) => unexpanded(q)
     }
     walk(q).toVector.distinct.sorted
   }
 
-  /** All phrase leaves of the tree (depth-first, distinct). */
-  def phraseLeaves(q: BoolQ): Vector[Phrase] = {
-    def walk(q: BoolQ): Iterator[Phrase] = q match {
-      case p: Phrase => Iterator.single(p)
+  /** The member terms of a leaf key: `a|b` → `a`, `b`. */
+  def keyTerms(key: String): Seq[String] = key.split('|').toSeq
+
+  /** Distinct leaf terms in ascending order: the members of [[leafKeys]]. */
+  def leafTerms(q: BoolQ): Seq[String] = leafKeys(q).flatMap(keyTerms).distinct.sorted
+
+  /** All span leaves of the tree (depth-first, distinct). */
+  def spanLeaves(q: BoolQ): Vector[Span] = {
+    def walk(q: BoolQ): Iterator[Span] = q match {
+      case s: Span => Iterator.single(s)
       case Term(_) => Iterator.empty
       case And(xs) => xs.iterator.flatMap(walk)
       case Or(xs) => xs.iterator.flatMap(walk)
@@ -544,27 +596,20 @@ object BoolQuery {
     * lists and is rejected by [[Searcher.searchBool]].
     */
   def matchesEmptyDoc(q: BoolQ): Boolean =
-    matches(q, _ => false, _ => false) // a phrase can't match an empty doc
+    matches(q, _ => false, _ => false) // a span can't match an empty doc
 
-  /** Exact boolean match given per-term presence. Trees with phrase leaves
-    * must use the 3-arg overload (adjacency is not a presence function).
-    */
-  def matches(q: BoolQ, has: String => Boolean): Boolean =
-    matches(q, has, p => throw new IllegalStateException(
-      s"phrase leaf $p requires a positional evaluation path"))
-
-  /** Exact boolean match given per-term presence AND per-phrase adjacency. */
+  /** Exact boolean match given per-key presence AND per-span matches. */
   def matches(q: BoolQ, has: String => Boolean,
-              phraseOk: Phrase => Boolean): Boolean = q match {
+              spanOk: Span => Boolean): Boolean = q match {
     case Term(t) => has(t)
-    case And(xs) => xs.forall(matches(_, has, phraseOk))
-    case Or(xs) => xs.exists(matches(_, has, phraseOk))
-    case Not(x) => !matches(x, has, phraseOk)
-    case Boost(x, _) => matches(x, has, phraseOk)
-    case DisMax(xs, _) => xs.exists(matches(_, has, phraseOk))
-    case Msm(xs, m) => xs.count(matches(_, has, phraseOk)) >= m
-    case Const(x, _) => matches(x, has, phraseOk)
-    case p: Phrase => phraseOk(p)
+    case And(xs) => xs.forall(matches(_, has, spanOk))
+    case Or(xs) => xs.exists(matches(_, has, spanOk))
+    case Not(x) => !matches(x, has, spanOk)
+    case Boost(x, _) => matches(x, has, spanOk)
+    case DisMax(xs, _) => xs.exists(matches(_, has, spanOk))
+    case Msm(xs, m) => xs.count(matches(_, has, spanOk)) >= m
+    case Const(x, _) => matches(x, has, spanOk)
+    case s: Span => spanOk(s)
     case q @ (Wild(_) | Fuzzy(_, _)) => unexpanded(q)
   }
 
@@ -587,22 +632,23 @@ object BoolQuery {
     // never pessimistic, which is all soundness needs)
     case Msm(xs, m) => xs.count(satisfiable(_, mayHave)) >= m
     case Const(x, _) => satisfiable(x, mayHave)
-    // presence of every member is NECESSARY for adjacency — sound, and
-    // exact at the presence level (adjacency only shrinks further)
-    case Phrase(ts) => ts.forall(mayHave)
+    // a member of every slot is NECESSARY for an occurrence — sound, and
+    // exact at the presence level (positions only shrink further)
+    case s: Span => s.slots.forall(_.exists(mayHave))
     case q @ (Wild(_) | Fuzzy(_, _)) => unexpanded(q)
   }
 
-  /** Terms REQUIRED in every matching document: the positive direct Term
-    * children of a root AND (and of nested ANDs reached only through ANDs).
-    * The rarest of these leads the per-shard traversal — same
-    * smallest-list-leads discipline as the conjunctive kernel.
+  /** Keys REQUIRED in every matching document: the positive direct Term
+    * and span children of a root AND (and of nested ANDs reached only
+    * through ANDs) — a span requires each slot's key. The rarest of these
+    * leads the per-shard traversal — same smallest-list-leads discipline
+    * as the conjunctive kernel.
     */
   def requiredTerms(q: BoolQ): Seq[String] = q match {
     case Term(t) => Seq(t)
     case And(xs) => xs.flatMap(requiredTerms).distinct
     case Boost(x, _) => requiredTerms(x)
-    case Phrase(ts) => ts.distinct // every member must be present to match
+    case s: Span => s.distinctKeys // every slot must be present to match
     // m = all clauses ⇒ behaves as AND; any smaller m requires nothing
     case Msm(xs, m) if m == xs.length => xs.flatMap(requiredTerms).distinct
     case Const(x, _) => requiredTerms(x) // match logic delegates unchanged
@@ -610,10 +656,11 @@ object BoolQuery {
     case _ => Seq.empty
   }
 
-  /** Leaf terms with at least one POSITIVE-polarity occurrence (an even
-    * number of `Not` ancestors). Every matching document contains at least
-    * one of these: `matches` is antitone in the presence of odd-polarity-
-    * only terms, so a document whose present tree-terms are all
+  /** Leaf keys with at least one POSITIVE-polarity occurrence (an even
+    * number of `Not` ancestors; a span's exclude term never is one). Every
+    * matching document contains at least one of these: `matches` is
+    * antitone in the presence of odd-polarity-only terms, so a document
+    * whose present tree-terms are all
     * negative-only matches no better than the empty document — and
     * match-all trees are rejected up front. Candidate generation therefore
     * only needs the positive lists (negative lists are consulted for the
@@ -631,7 +678,7 @@ object BoolQuery {
       // argument above extends through it unchanged
       case Msm(xs, _) => xs.iterator.flatMap(walk(_, neg))
       case Const(x, _) => walk(x, neg)
-      case Phrase(ts) => if (neg) Iterator.empty else ts.iterator
+      case s: Span => if (neg) Iterator.empty else s.keys.iterator
       case q @ (Wild(_) | Fuzzy(_, _)) => unexpanded(q)
     }
     walk(q, neg = false).toSet
@@ -679,10 +726,10 @@ object BoolQuery {
       if (tie == 0.0) maxU
       else if (tie == 1.0) sumU
       else (1.0 - tie) * maxU + tie * sumU
-    case Phrase(ts) =>
-      // phrase score = sum of distinct member scores ≤ sum of their bounds
+    case sp: Span =>
+      // span score = sum of distinct slot-key scores ≤ sum of their bounds
       var s = 0.0
-      ts.distinct.foreach(t => s += leafUb(t))
+      sp.distinctKeys.foreach(key => s += leafUb(key))
       s
     case Msm(xs, _) =>
       // actual = sum over a MATCHED SUBSET of children; every child bound
@@ -700,7 +747,7 @@ object BoolQuery {
     * bound is LINEAR in the per-leaf ceilings —
     * `upperBound(q, ub) = Σ_t w(t)·ub(t) + c` for every ub — because every
     * remaining node is a sum (And/Or/Msm), a scale (Boost), a constant
-    * (Const → v, Not → 0), or a leaf (Term / Phrase members each weight 1;
+    * (Const → v, Not → 0), or a leaf (Term / span slot keys each weight 1;
     * a term reached through several leaves/paths accumulates its weights).
     * Returns None when the tree holds a DisMax (its max is not affine) —
     * callers keep the generic tree walk there. The per-shard kernels use
@@ -718,7 +765,7 @@ object BoolQuery {
       }
     def walk(q: BoolQ): Option[(Map[String, Double], Double)] = q match {
       case Term(t) => Some(Map(t -> 1.0) -> 0.0)
-      case Phrase(ts) => Some(ts.distinct.map(_ -> 1.0).toMap -> 0.0)
+      case s: Span => Some(s.distinctKeys.map(_ -> 1.0).toMap -> 0.0)
       case And(xs) => traverse(xs).map(merge)
       case Or(xs) => traverse(xs).map(merge)
       case Msm(xs, _) => traverse(xs).map(merge)
@@ -773,7 +820,7 @@ object BoolQuery {
       }
     def walk(q: BoolQ): Option[Vector[Form]] = q match {
       case Term(t) => Some(Vector(Map(t -> 1.0) -> 0.0))
-      case Phrase(ts) => Some(Vector(ts.distinct.map(_ -> 1.0).toMap -> 0.0))
+      case s: Span => Some(Vector(s.distinctKeys.map(_ -> 1.0).toMap -> 0.0))
       case And(xs) => traverse(xs).flatMap(cross)
       case Or(xs) => traverse(xs).flatMap(cross)
       case Msm(xs, _) => traverse(xs).flatMap(cross)
@@ -815,20 +862,21 @@ object BoolQuery {
     */
   def evalScore(q: BoolQ, has: String => Boolean,
                 score: String => Double): Double =
-    evalScore(q, has, score, p => throw new IllegalStateException(
-      s"phrase leaf $p requires a positional evaluation path"))
+    evalScore(q, has, score, s => throw new IllegalStateException(
+      s"span leaf $s requires a positional evaluation path"))
 
-  /** [[evalScore]] with per-phrase adjacency for phrase-bearing trees.
-    * A matched phrase scores the sum of its DISTINCT members' scores in
-    * ascending-term order (the flat phrase query's contract).
+  /** [[evalScore]] with per-span matches for span-bearing trees; `spanOk`
+    * is asked only when every slot key is present. A matched span scores
+    * the sum of its DISTINCT slot keys' scores in ascending key order (the
+    * flat phrase, near and multi-phrase queries' contract).
     */
   def evalScore(q: BoolQ, has: String => Boolean, score: String => Double,
-                phraseOk: Phrase => Boolean): Double = q match {
-    case p @ Phrase(ts) =>
-      if (!ts.forall(has) || !phraseOk(p)) Double.NaN
+                spanOk: Span => Boolean): Double = q match {
+    case sp: Span =>
+      if (!sp.keys.forall(has) || !spanOk(sp)) Double.NaN
       else {
         var s = 0.0
-        ts.distinct.sorted.foreach(t => s += score(t))
+        sp.distinctKeys.foreach(key => s += score(key))
         s
       }
     case Term(t) => if (has(t)) score(t) else Double.NaN
@@ -836,7 +884,7 @@ object BoolQuery {
       var s = 0.0
       var i = 0
       while (i < xs.length) {
-        val c = evalScore(xs(i), has, score, phraseOk)
+        val c = evalScore(xs(i), has, score, spanOk)
         if (c.isNaN) return Double.NaN
         s += c
         i += 1
@@ -847,15 +895,15 @@ object BoolQuery {
       var any = false
       var i = 0
       while (i < xs.length) {
-        val c = evalScore(xs(i), has, score, phraseOk)
+        val c = evalScore(xs(i), has, score, spanOk)
         if (!c.isNaN) { any = true; s += c }
         i += 1
       }
       if (any) s else Double.NaN
     case Not(x) =>
-      if (evalScore(x, has, score, phraseOk).isNaN) 0.0 else Double.NaN
+      if (evalScore(x, has, score, spanOk).isNaN) 0.0 else Double.NaN
     case Boost(x, f) =>
-      val c = evalScore(x, has, score, phraseOk)
+      val c = evalScore(x, has, score, spanOk)
       if (c.isNaN) Double.NaN else c * f
     case DisMax(xs, tie) =>
       // Lucene DisjunctionMaxScorer accounting: running left-to-right sum
@@ -867,7 +915,7 @@ object BoolQuery {
       var any = false
       var i = 0
       while (i < xs.length) {
-        val c = evalScore(xs(i), has, score, phraseOk)
+        val c = evalScore(xs(i), has, score, spanOk)
         if (!c.isNaN) { any = true; sum += c; if (c > mx) mx = c }
         i += 1
       }
@@ -879,14 +927,14 @@ object BoolQuery {
       var cnt = 0
       var i = 0
       while (i < xs.length) {
-        val c = evalScore(xs(i), has, score, phraseOk)
+        val c = evalScore(xs(i), has, score, spanOk)
         if (!c.isNaN) { cnt += 1; s += c }
         i += 1
       }
       if (cnt >= m) s else Double.NaN
     case Const(x, v) =>
       // match logic delegates; the score is the constant itself
-      if (evalScore(x, has, score, phraseOk).isNaN) Double.NaN else v
+      if (evalScore(x, has, score, spanOk).isNaN) Double.NaN else v
     case q @ (Wild(_) | Fuzzy(_, _)) => unexpanded(q)
   }
 }

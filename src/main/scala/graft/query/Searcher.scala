@@ -16,7 +16,9 @@ import graft.index.{Codec, IndexBuilder, IndexFiles, IndexMeta, Tokenize, Tombst
   * prefix / regex / wildcard / fuzzy / term-range expansions, more-like-this
   * and boolean trees — compiles to a [[BoolQ]] tree and runs through one
   * per-shard harness and one kernel, [[Searcher.scoreShardBool]]; phrase,
-  * span and near queries keep their positional kernels.
+  * span and near queries compile to a [[BoolQ.Span]] leaf and run through
+  * the same harness and the one positional kernel,
+  * [[Searcher.scoreShardBoolPos]].
   *
   * The PSI analog: a query is a multi-list intersection — the same dataflow as
   * the reference's per-bucket dense-map probe
@@ -153,7 +155,7 @@ class Searcher(spark: SparkSession, indexDir: String,
     * merged norms row and its sorted deleted docIds. A shard where some
     * group of `need` has no segment cannot match: it is skipped before the
     * kernel and not counted in `shardsTouched`. `S` is the schema the
-    * kernel decodes: [[PostingSegP]] for the positional kernels,
+    * kernel decodes: [[PostingSegP]] for the positional kernel,
     * [[PostingSeg]] for the others.
     *
     * Norms come from the broadcast cache when they fit (one grouped input),
@@ -328,15 +330,22 @@ class Searcher(spark: SparkSession, indexDir: String,
   private def topK(hits: Option[Dataset[Hit]], k: Int): Dataset[Hit] =
     hits.fold(spark.emptyDataset[Hit])(_.orderBy($"score".desc, $"docId".asc).limit(k))
 
-  /** The per-shard harness of every non-positional BM25 mode: a boolean
-    * tree's UNORDERED per-shard hit stream — each candidate shard emits its
-    * own top-k (after the cursor, when one is given) from
-    * [[Searcher.scoreShardBool]]; the caller orders and cuts. `None` when
-    * the tree cannot match (a multi-term leaf expands to nothing where a
-    * match needs it, a required term is absent from the dictionary, no
-    * shard can satisfy the tree), decided on the driver with no Spark job.
-    * With `k = Int.MaxValue` the stream is the FULL match set with exact
-    * scores, at most `docsPerShard` rows per shard.
+  /** The per-shard harness of every BM25 tree mode: a boolean tree's
+    * UNORDERED per-shard hit stream — each candidate shard emits its own
+    * top-k (after the cursor, when one is given) from
+    * [[Searcher.scoreShardBool]], or from [[Searcher.scoreShardBoolPos]]
+    * when the tree holds a span leaf (phrase, span and near queries); the
+    * caller orders and cuts. `None` when the tree cannot match (a
+    * multi-term leaf expands to nothing where a match needs it, a required
+    * term is absent from the dictionary, no shard can satisfy the tree),
+    * decided on the driver with no Spark job. With `k = Int.MaxValue` the
+    * stream is the FULL match set with exact scores, at most
+    * `docsPerShard` rows per shard.
+    *
+    * The kernels hold one list per leaf key ([[BoolQuery.leafKeys]]): a
+    * term's own, or for a span slot `a|b` with several alternatives the
+    * union of its members' lists, whose idf comes from the members' max
+    * df (the synonym contract).
     *
     * `filter` (searchWhere) is the docs-table predicate behind the tree's
     * [[Searcher.FilterTerm]] leaf: its docId list is packed per shard into
@@ -364,11 +373,12 @@ class Searcher(spark: SparkSession, indexDir: String,
     // (psi/utils/bucket.cc:54-60).
     if (!BoolQuery.satisfiable(tree, t => isFilter(t) || info(t).df > 0L)) return None
     val dictLive = dictTerms.filter(t => info(t).df > 0L)
-    // FilterTerm (leading space) sorts before every real token
-    val live = if (filter.nonEmpty) Searcher.FilterTerm +: dictLive else dictLive
-    val idfByTerm: Map[String, Double] =
-      dictLive.map(t => t -> idf(meta.numDocs, info(t).df)).toMap ++
-        filter.map(_ => Searcher.FilterTerm -> 0.0)
+    def df(key: String): Long =
+      BoolQuery.keyTerms(key).map(t => info.get(t).fold(0L)(_.df)).max
+    // the filter's zero-idf key (FilterTerm's leading space sorts it first)
+    val live = BoolQuery.leafKeys(tree).filter(t => isFilter(t) || df(t) > 0L)
+    val idfByTerm: Map[String, Double] = live.map(t =>
+      t -> (if (isFilter(t)) 0.0 else idf(meta.numDocs, df(t)))).toMap
     // per-shard prune by the tree's own satisfiability over the cached
     // per-term shard sets, driver-side with no Spark job
     val shardSets: Map[String, Array[Int]] =
@@ -380,23 +390,23 @@ class Searcher(spark: SparkSession, indexDir: String,
       }
     if (candShards.isEmpty) return None
     val required = BoolQuery.requiredTerms(tree).filter(live.contains).sorted
-    // a shard missing a required list (the filter's too: a shard with no
-    // passing doc has no filter segment) cannot match
-    val need = required.map(Seq(_))
+    // a shard missing a member of every required key (the filter's too: a
+    // shard with no passing doc has no filter segment) cannot match
+    val need = required.map(BoolQuery.keyTerms)
     val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
     val (pruning, reB) = (usePruning, needReBound)
     val (accS, accP) = (candidatesScored, candidatesPruned)
-    // Phrase leaves ("a b" quoted) need adjacency, so those trees decode
-    // positions and run [[Searcher.scoreShardBoolPos]], which prunes on
-    // exact per-list score ceilings; the others keep the block-max kernel.
-    if (BoolQuery.phraseLeaves(tree).nonEmpty) {
+    // span leaves need positions, so those trees decode them and run
+    // [[Searcher.scoreShardBoolPos]], which prunes on exact per-list score
+    // ceilings; the others keep the block-max kernel
+    if (BoolQuery.spanLeaves(tree).nonEmpty) {
       require(positional,
         "phrase leaves in a boolean query require a positional index " +
           "(IndexConfig(positions = true))")
       Some(perShard[PostingSegP, Hit](dictLive, candShards, need) {
         (segsByTerm, lens, deleted) =>
           Searcher.scoreShardBoolPos(segsByTerm, lens, tree, live, required,
-            idfByTerm, k1, b, avgdl, k, accS, deleted, accP)
+            idfByTerm, k1, b, avgdl, k, accS, accP, pruning, deleted)
       })
     } else Some(perShard[PostingSeg, Hit](dictLive, candShards, need,
         filter.map(filterSegs(_, candShards))) {
@@ -477,16 +487,17 @@ class Searcher(spark: SparkSession, indexDir: String,
   }
 
   /** Exact-phrase top-k BM25 — requires a positional index
-    * (`IndexConfig(positions = true)`). Candidates must contain ALL phrase
-    * terms (the same galloping conjunctive intersection as `search`), then
-    * the ordered-adjacency check runs over the decoded per-doc position
-    * lists (`cur ← (cur + 1) ∩ positions(token_j)`, sorted two-pointer);
-    * surviving docs are scored by BM25 over the phrase's DISTINCT terms with
-    * the identical determinism contract as `search` (ascending-term
+    * (`IndexConfig(positions = true)`). The phrase is the ordered
+    * [[BoolQ.Span]] of its tokens with window = #tokens, so its tokens must
+    * occur at consecutive positions; the span runs through the one
+    * positional tree kernel ([[Searcher.scoreShardBoolPos]]): galloping
+    * intersection of the terms' lists, the greedy position chain per
+    * candidate, then BM25 over the phrase's DISTINCT terms with the
+    * identical determinism contract as `search` (ascending-term
     * accumulation, (score desc, docId asc) tiebreak).
     */
   def searchPhrase(phrase: String, k: Int): Dataset[Hit] =
-    searchPhraseImpl(phrase, k, Int.MaxValue)
+    topK(phraseSpan(phrase).flatMap(treeHits(_, k)), k)
 
   /** Span-first top-k (Lucene SpanFirstQuery analog): the exact phrase —
     * one token or several consecutive ones — must occur with its span
@@ -497,11 +508,12 @@ class Searcher(spark: SparkSession, indexDir: String,
     * match" heuristic for documents whose lead tokens matter most.
     * Survivors score plain conjunctive BM25 over the distinct members —
     * the same contract as [[searchPhrase]], which is exactly this query
-    * with an unbounded `end`. Requires a positional index.
+    * with an unbounded `end`: the phrase span with its `end` set. Requires
+    * a positional index.
     */
   def searchSpanFirst(phrase: String, k: Int, end: Int): Dataset[Hit] = {
     require(end >= 1, s"span-first end must be >= 1, got $end")
-    searchPhraseImpl(phrase, k, end)
+    topK(phraseSpan(phrase, end).flatMap(treeHits(_, k)), k)
   }
 
   /** Span-not top-k (Lucene SpanNotQuery with pre/post slack): documents
@@ -511,9 +523,9 @@ class Searcher(spark: SparkSession, indexDir: String,
     * exclusion — and a single-word phrase can then never overlap a
     * DIFFERENT word, the Lucene identity). Survivors keep the phrase
     * query's bit-identical scores (the include span decides the score;
-    * the exclusion only filters — Lucene's rule). An `exclude` term
-    * absent from the dictionary excludes nothing: ≡ [[searchPhrase]].
-    * Requires a positional index.
+    * the exclusion only filters — Lucene's rule): the phrase span with its
+    * `exclude` set. An `exclude` term absent from the dictionary excludes
+    * nothing: ≡ [[searchPhrase]]. Requires a positional index.
     */
   def searchSpanNot(phrase: String, exclude: String, k: Int,
                     pre: Int = 0, post: Int = 0): Dataset[Hit] = {
@@ -522,56 +534,36 @@ class Searcher(spark: SparkSession, indexDir: String,
     val exToks = Tokenize.tokenize(exclude)
     require(exToks.length == 1,
       s"span-not exclude must normalize to one token, got ${exToks.toSeq} from '$exclude'")
-    searchPhraseImpl(phrase, k, Int.MaxValue, Some(exToks.head), pre, post)
+    topK(phraseSpan(phrase, exclude = Some((exToks.head, pre, post))).flatMap(treeHits(_, k)), k)
   }
 
-  /** The idf of each of `terms` and the shards that hold all of them; None
-    * when a term is absent from the dictionary or no shard holds them all.
+  /** The phrase's ordered span, ending within `end` positions and with the
+    * span-not `exclude`; None when the phrase has no token or cannot end
+    * within `end`.
     */
-  private def conjunction(terms: Seq[String]): Option[(Map[String, Double], Seq[Int])] = {
-    val info = lookupTerms(terms)
-    if (terms.exists(t => info(t).df == 0L)) return None
-    val candShards = terms.map(t => info(t).shards).reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) None
-    else Some((terms.map(t => t -> idf(meta.numDocs, info(t).df)).toMap, candShards.toSeq))
-  }
-
-  /** The phrase query ending within `maxEnd` positions, or with no
-    * `exclude` occurrence within `pre` / `post` positions (span-not).
-    */
-  private def searchPhraseImpl(phrase: String, k: Int, maxEnd: Int,
-                               exclude: Option[String] = None,
-                               pre: Int = 0, post: Int = 0): Dataset[Hit] = {
-    val tokenSeq = Tokenize.tokenize(phrase).toSeq
-    if (tokenSeq.isEmpty || maxEnd < tokenSeq.length)
-      return spark.emptyDataset[Hit]
-    require(positional,
-      "phrase and span search require a positional index (IndexConfig(positions = true))")
-    val terms = tokenSeq.distinct.sorted
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val accS = candidatesScored
-    // candidate shards come from the PHRASE terms only — an exclusion can
-    // only shrink the match set, never add shards
-    topK(conjunction(terms).map { case (idfByTerm, candShards) =>
-      perShard[PostingSegP, Hit]((terms ++ exclude).distinct, candShards,
-          terms.map(Seq(_))) { (segsByTerm, lens, deleted) =>
-        Searcher.scoreShardPhrase(segsByTerm, lens, tokenSeq, terms, idfByTerm,
-          k1, b, avgdl, k, accS, deleted, maxEnd, exclude, pre, post)
-      }
-    }, k)
+  private def phraseSpan(phrase: String, end: Int = Int.MaxValue,
+                         exclude: Option[(String, Int, Int)] = None): Option[BoolQ] = {
+    val ts = Tokenize.tokenize(phrase).toVector
+    if (ts.isEmpty || end < ts.length) None
+    else {
+      require(positional,
+        "phrase and span search require a positional index (IndexConfig(positions = true))")
+      Some(BoolQ.Span(ts.map(Vector(_)), ts.length, ordered = true, end, exclude))
+    }
   }
 
   /** Multi-phrase top-k (Lucene MultiPhraseQuery): a phrase whose every
     * position holds a SET of alternative terms — `Seq(Seq("import"),
     * Seq("def", "class"))` matches "import def" OR "import class" runs.
-    * Matching is the exact positional chain over per-slot UNION position
-    * lists; survivors score the synonym contract per distinct slot (tf
-    * summed over present members, idf from the blended max member df —
-    * [[searchSynonym]]), summed in ascending slot-key order. Degenerate
-    * forms are bit-exact: all-singleton slots ≡ [[searchPhrase]], one
-    * multi-term slot ≡ [[searchSynonym]]. A slot whose every alternative
-    * is absent from the dictionary cannot match (the Lucene rule).
-    * Requires a positional index.
+    * It is the phrase span whose slots hold the live alternatives: a slot
+    * matches at the union of its members' positions, and survivors score
+    * the synonym contract per distinct slot (tf summed over present
+    * members, idf from the blended max member df — [[searchSynonym]]),
+    * summed in ascending slot-key order. Degenerate forms are bit-exact:
+    * all-singleton slots ≡ [[searchPhrase]], one multi-term slot ≡
+    * [[searchSynonym]]. A slot whose every alternative is absent from the
+    * dictionary cannot match (the Lucene rule). Requires a positional
+    * index.
     */
   def searchMultiPhrase(slots: Seq[Seq[String]], k: Int): Dataset[Hit] = {
     val slotTerms: Seq[Seq[String]] =
@@ -580,30 +572,12 @@ class Searcher(spark: SparkSession, indexDir: String,
       s"every multi-phrase slot needs at least one token: $slots")
     require(positional,
       "multi-phrase search requires a positional index (IndexConfig(positions = true))")
-    val allTerms = slotTerms.flatten.distinct.sorted
-    val info = lookupTerms(allTerms)
+    val info = lookupTerms(slotTerms.flatten.distinct.sorted)
     // a dead alternative is dropped; a slot with NO live alternative is
     // unsatisfiable (every chain needs one member at that position)
-    val liveSlots = slotTerms.map(_.filter(t => info(t).df > 0L))
+    val liveSlots = slotTerms.map(_.filter(t => info(t).df > 0L).toVector).toVector
     if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[Hit]
-    val slotKeys = liveSlots.map(_.mkString("|"))
-    val idfBySlot: Map[String, Double] =
-      slotKeys.zip(liveSlots).toMap.map { case (key, members) =>
-        key -> idf(meta.numDocs, members.map(t => info(t).df).max)
-      }
-    val candShards: Array[Int] = liveSlots
-      .map(_.map(t => info(t).shards).reduce(Searcher.unionSorted))
-      .reduce(Searcher.intersectSorted)
-    if (candShards.isEmpty) return spark.emptyDataset[Hit]
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    val slotSeq = slotKeys.zip(liveSlots)
-    val accS = candidatesScored
-    // every slot needs a live member IN THIS SHARD to chain
-    topK(Some(perShard[PostingSegP, Hit](liveSlots.flatten.distinct.sorted,
-        candShards.toSeq, liveSlots) { (segsByTerm, lens, deleted) =>
-      Searcher.scoreShardMultiPhrase(segsByTerm, lens, slotSeq, idfBySlot,
-        k1, b, avgdl, k, accS, deleted)
-    }), k)
+    topK(treeHits(BoolQ.Span(liveSlots, liveSlots.length, ordered = true), k), k)
   }
 
   /** Phrase-prefix top-k (Lucene MultiPhrasePrefixQuery / Elasticsearch
@@ -630,45 +604,36 @@ class Searcher(spark: SparkSession, indexDir: String,
     * least one occurrence of EVERY distinct term — the classic MIN-COVER
     * check (Lucene's unordered SpanNearQuery semantics), swept in O(total
     * positions) per candidate over the decoded position lists (advance the
-    * minimum head; cover = max − min + 1). Survivors are scored by plain
-    * conjunctive BM25 with the identical determinism contract as `search`
-    * (ascending-term accumulation, (score desc, docId asc) tiebreak), so
-    * survivor scores are bit-identical to the unwindowed query: a huge
-    * `window` degenerates to `search`, `window < #distinct terms` is
-    * unsatisfiable, and a single-term query matches wherever the term does.
-    * Requires a positional index (`IndexConfig(positions = true)`).
+    * minimum head; cover = max − min + 1). It is the unordered span of the
+    * distinct terms. Survivors are scored by plain conjunctive BM25 with
+    * the identical determinism contract as `search` (ascending-term
+    * accumulation, (score desc, docId asc) tiebreak), so survivor scores
+    * are bit-identical to the unwindowed query: a huge `window` degenerates
+    * to `search`, `window < #distinct terms` is unsatisfiable, and a
+    * single-term query matches wherever the term does. Requires a
+    * positional index (`IndexConfig(positions = true)`).
     *
-    * `ordered = true` is Lucene's `inOrder` SpanNearQuery: the occurrence
-    * chain must follow the QUERY's token order (duplicates meaningful —
-    * `a b a` needs three strictly increasing positions), checked by a
-    * greedy monotone-cursor chain sweep in O(total positions) per
-    * candidate; the span rule (max − min + 1 ≤ window) and the survivor
-    * scoring contract are unchanged, so `ordered` with window = #tokens
-    * is EXACTLY the phrase query (a strictly increasing chain of m
-    * positions inside a span of m is consecutive). Unsatisfiable when
-    * `window < #query tokens` (slots, not distinct terms).
+    * `ordered = true` is Lucene's `inOrder` SpanNearQuery, the ordered span
+    * of the query's tokens: the occurrence chain must follow the QUERY's
+    * token order (duplicates meaningful — `a b a` needs three strictly
+    * increasing positions), checked by a greedy monotone-cursor chain sweep
+    * in O(total positions) per candidate; the span rule (max − min + 1 ≤
+    * window) and the survivor scoring contract are unchanged, so `ordered`
+    * with window = #tokens is EXACTLY the phrase query (a strictly
+    * increasing chain of m positions inside a span of m is consecutive).
+    * Unsatisfiable when `window < #query tokens` (slots, not distinct
+    * terms).
     */
   def searchNear(query: String, k: Int, window: Int,
                  ordered: Boolean = false): Dataset[Hit] = {
-    val seq = Tokenize.tokenize(query)
-    val terms = seq.distinct.sorted.toSeq
+    val seq = Tokenize.tokenize(query).toVector
+    val terms = seq.distinct.sorted
     if (terms.isEmpty || window < (if (ordered) seq.length else terms.length))
       return spark.emptyDataset[Hit]
     require(positional,
       "proximity search requires a positional index (IndexConfig(positions = true))")
-    val (k1, b, avgdl) = (meta.k1, meta.b, meta.avgdl)
-    // ordered mode: the query's token slots as indices into terms — the
-    // kernel's list array is terms-ordered, duplicates keep their own slot
-    val slots: Array[Int] =
-      if (ordered) seq.map(t => terms.indexOf(t)).toArray else null
-    val accS = candidatesScored
-    topK(conjunction(terms).map { case (idfByTerm, candShards) =>
-      perShard[PostingSegP, Hit](terms, candShards, terms.map(Seq(_))) {
-        (segsByTerm, lens, deleted) =>
-          Searcher.scoreShardNear(segsByTerm, lens, terms, window,
-            idfByTerm, k1, b, avgdl, k, accS, deleted, slots)
-      }
-    }, k)
+    val slots = (if (ordered) seq else terms).map(Vector(_))
+    topK(treeHits(BoolQ.Span(slots, window, ordered), k), k)
   }
 
   /** Top-k hits with a SNIPPET: the 2·window+1-token context around the
@@ -1738,71 +1703,11 @@ object Searcher {
     }
   }
 
-  /** Phrase scoring for one shard: conjunctive galloping intersection, then
-    * ordered-adjacency verification over position lists, then exact BM25
-    * over the distinct terms. An occurrence must end within the first
-    * `maxEnd` positions (span-first) and, with an `exclude` term (Lucene
-    * SpanNotQuery), have NO exclude position inside
-    * `[start − pre, end − 1 + post]` (inclusive token positions); the doc
-    * matches when ANY occurrence qualifies. An exclude list absent from the
-    * shard excludes nothing.
-    */
-  def scoreShardPhrase(segsByTerm: Map[String, Array[PostingSegP]],
-                       lens: ShardLens, tokenSeq: Seq[String],
-                       termsSorted: Seq[String], idfByTerm: Map[String, Double],
-                       k1: Double, b: Double, avgdl: Double, k: Int,
-                       accScored: LongAccumulator, deleted: Array[Long],
-                       maxEnd: Int, exclude: Option[String],
-                       pre: Int, post: Int): Iterator[Hit] = {
-    def decode(t: String, ss: Array[PostingSegP]) =
-      withoutDeletedPos(decodePosList(t, ss), deleted)
-    val lists: Array[PosList] = termsSorted.map(t => decode(t, segsByTerm(t))).toArray
-    val byTerm = lists.map(l => l.term -> l).toMap
-    val seqLists = tokenSeq.map(byTerm).toArray
-    // its own decode (its own cursor), even when it is a phrase term;
-    // deleted docs can't be candidates, so filtering it is merely consistent
-    val excl = exclude.flatMap(t => segsByTerm.get(t).map(decode(t, _))).orNull
-    chainTopK(lists, seqLists, lens, idfByTerm, k1, b, avgdl, k,
-      accScored, maxEnd, excl, pre, post)
-  }
-
-  /** Multi-phrase scoring for one shard (Lucene MultiPhraseQuery): each
-    * query position holds a SET of alternative terms; a doc matches when
-    * some run of consecutive token positions takes one alternative per
-    * slot. `slotSeq` is the query's slots in position order, each as (slot
-    * key, live member terms); a key repeats when a slot does. Every slot's
-    * member position lists merge into ONE union list (token positions of
-    * distinct terms are disjoint, so per-doc tf_slot = Σ member tf =
-    * merged-position count) and the chain kernel runs over the slot lists.
-    * Survivors score the synonym contract per distinct slot — tf summed,
-    * idf from the blended max df, as in [[scoreShardSynonym]] — summed in
-    * ascending slot-key order.
-    */
-  def scoreShardMultiPhrase(segsByTerm: Map[String, Array[PostingSegP]],
-                            lens: ShardLens, slotSeq: Seq[(String, Seq[String])],
-                            idfBySlot: Map[String, Double],
-                            k1: Double, b: Double, avgdl: Double, k: Int,
-                            accScored: LongAccumulator,
-                            deleted: Array[Long]): Iterator[Hit] = {
-    val byKey: Map[String, PosList] =
-      slotSeq.groupBy(_._1).map { case (key, slots) =>
-        val members = slots.head._2.filter(segsByTerm.contains)
-        key -> mergeSlotLists(key, members.map(t =>
-          withoutDeletedPos(decodePosList(t, segsByTerm(t)), deleted)).toArray)
-      }
-    // a slot with no live member in this shard (or all members deleted)
-    // cannot chain — the empty merged list makes the lead walk a no-op
-    val lists = byKey.keys.toArray.sorted.map(byKey)
-    val seqLists = slotSeq.map(s => byKey(s._1)).toArray
-    chainTopK(lists, seqLists, lens, idfBySlot, k1, b, avgdl, k,
-      accScored, Int.MaxValue, null, 0, 0)
-  }
-
   /** Ascending merge of member position lists into one slot-union PosList.
     * Docs are the union; per-doc positions are the k-way ascending merge
     * (disjoint across distinct terms, so no dedup); per-doc tf is the
-    * merged count. `key` becomes the list's term so the chain kernel's
-    * idf lookup and deterministic ordering work unchanged.
+    * merged count. `key` becomes the list's term, so the positional
+    * kernel looks its idf up by the slot key.
     */
   private[graft] def mergeSlotLists(key: String,
                                     members: Array[PosList]): PosList = {
@@ -1856,215 +1761,6 @@ object Searcher {
     }
     val tfs = tfsB.result()
     PosList(key, docsB.result(), tfs, flatB.result(), Codec.prefixSums(tfs))
-  }
-
-  /** The shared positional chain kernel: galloping conjunctive intersection
-    * over `lists` (distinct, ascending-key — the deterministic score-sum
-    * order), ordered-adjacency verification ([[phraseEnds]]) over
-    * `seqLists` (one list per query position, aliasing `lists` entries),
-    * the span-first bound `maxEnd` and the span-not exclusion `excl` (may
-    * be null), then exact BM25 with per-list idf.
-    */
-  private def chainTopK(lists: Array[PosList], seqLists: Array[PosList],
-                        lens: ShardLens, idfByTerm: Map[String, Double],
-                        k1: Double, b: Double, avgdl: Double, k: Int,
-                        accScored: LongAccumulator,
-                        maxEnd: Int, excl: PosList,
-                        exPre: Int, exPost: Int): Iterator[Hit] = {
-    val k1p1 = k1 + 1.0
-    // candidates that survive the conjunctive intersection (i.e. reach the
-    // adjacency check) — the same "scored" meaning search() reports
-    var scored = 0L
-    val byLen = lists.sortBy(_.docs.length)
-    val lead = byLen(0)
-    val others = byLen.drop(1)
-    val heap = mutable.PriorityQueue.empty[Hit](Ordering.by((h: Hit) => (-h.score, h.docId)))
-    var li = 0
-    var advanced = true
-    while (li < lead.docs.length && advanced) {
-      val cand = lead.docs(li)
-      var ok = true
-      var oi = 0
-      while (ok && oi < others.length) {
-        val ol = others(oi)
-        ol.pos = gallop(ol.docs, ol.pos, cand)
-        if (ol.pos >= ol.docs.length) { ok = false; advanced = false }
-        else if (ol.docs(ol.pos) != cand) ok = false
-        oi += 1
-      }
-      if (ok) {
-        scored += 1
-        lead.pos = li
-        val cur = phraseEnds(seqLists)
-        // span-first bound (Lucene SpanFirstQuery): `cur` holds the
-        // LAST-token positions of complete chains, ascending — the span's
-        // exclusive end is cur(0)+1, so the earliest occurrence decides.
-        // span-not (Lucene SpanNotQuery): an occurrence qualifies when the
-        // exclude term has no position in [last − spanLen + 1 − pre,
-        // last + post]; chain ends ascend, so one monotone exclusion
-        // cursor serves every occurrence of the doc.
-        val accepted =
-          if (cur.isEmpty) false
-          else if (excl == null) cur(0) + 1 <= maxEnd
-          else {
-            excl.pos = gallop(excl.docs, excl.pos, cand)
-            if (excl.pos >= excl.docs.length || excl.docs(excl.pos) != cand)
-              true // exclude term absent from this doc
-            else {
-              val spanLen = seqLists.length
-              val ee = excl.off(excl.pos + 1)
-              var x = excl.off(excl.pos)
-              var ci = 0
-              var qualified = false
-              while (!qualified && ci < cur.length) {
-                val last = cur(ci)
-                val lo = last - spanLen + 1 - exPre
-                while (x < ee && excl.flat(x) < lo) x += 1
-                qualified = x >= ee || excl.flat(x) > last + exPost
-                ci += 1
-              }
-              qualified
-            }
-          }
-        if (accepted) {
-          var score = 0.0
-          val norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
-          var i = 0
-          while (i < lists.length) { // term-sorted → deterministic sum order
-            val l = lists(i)
-            score += termScore(idfByTerm(l.term), l.tfs(l.pos), k1p1, norm)
-            i += 1
-          }
-          if (heap.size < k) heap.enqueue(Hit(cand, score))
-          else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(cand, score)) }
-        }
-      }
-      li += 1
-    }
-    if (accScored != null) accScored.add(scored)
-    heap.iterator.toArray.iterator
-  }
-
-  /** Proximity scoring for one shard: conjunctive galloping intersection,
-    * then a MIN-COVER sweep over the distinct terms' per-doc position lists
-    * (repeatedly advance the smallest head; the cover ending there is
-    * max − min + 1; early-exit the moment a cover fits the window), then
-    * exact BM25 over the distinct terms — survivors keep scores
-    * bit-identical to the conjunctive query's ([[scoreShardBool]] over the
-    * AND of the same terms).
-    */
-  def scoreShardNear(segsByTerm: Map[String, Array[PostingSegP]],
-                     lens: ShardLens, termsSorted: Seq[String], window: Int,
-                     idfByTerm: Map[String, Double],
-                     k1: Double, b: Double, avgdl: Double, k: Int,
-                     accScored: LongAccumulator, deleted: Array[Long],
-                     orderedSlots: Array[Int]): Iterator[Hit] = {
-    val k1p1 = k1 + 1.0
-    var scored = 0L
-    val lists: Array[PosList] =
-      termsSorted.map(t =>
-        withoutDeletedPos(decodePosList(t, segsByTerm(t)), deleted)).toArray
-    val n = lists.length
-    val byLen = lists.sortBy(_.docs.length)
-    val lead = byLen(0)
-    val others = byLen.drop(1)
-    val heap = mutable.PriorityQueue.empty[Hit](Ordering.by((h: Hit) => (-h.score, h.docId)))
-    val ptr = new Array[Int](n)
-    val end = new Array[Int](n)
-    var li = 0
-    var advanced = true
-    while (li < lead.docs.length && advanced) {
-      val cand = lead.docs(li)
-      var ok = true
-      var oi = 0
-      while (ok && oi < others.length) {
-        val ol = others(oi)
-        ol.pos = gallop(ol.docs, ol.pos, cand)
-        if (ol.pos >= ol.docs.length) { ok = false; advanced = false }
-        else if (ol.docs(ol.pos) != cand) ok = false
-        oi += 1
-      }
-      if (ok) {
-        scored += 1
-        lead.pos = li
-        var fits = false
-        if (orderedSlots != null) {
-          // ordered (inOrder SpanNear) chain sweep: per query SLOT a cursor
-          // into its term's positions for this doc (duplicate terms get
-          // independent cursors); starts iterate slot 0's positions
-          // ascending, later slots greedily take the first position > the
-          // previous slot's — cursors are monotone across starts (each
-          // start's chain values dominate the previous start's), so the
-          // whole doc costs O(total positions). A later slot exhausting
-          // ends the doc: no larger start can complete a chain either.
-          val m = orderedSlots.length
-          val sp = new Array[Int](m)
-          val se = new Array[Int](m)
-          var s0 = 0
-          while (s0 < m) {
-            val ls = lists(orderedSlots(s0))
-            sp(s0) = ls.off(ls.pos); se(s0) = ls.off(ls.pos + 1)
-            s0 += 1
-          }
-          val lead0 = lists(orderedSlots(0))
-          var go = true
-          while (go && !fits) {
-            if (sp(0) >= se(0)) go = false
-            else {
-              val start = lead0.flat(sp(0))
-              var prev = start
-              var s = 1
-              while (go && s < m) {
-                val ls = lists(orderedSlots(s))
-                while (sp(s) < se(s) && ls.flat(sp(s)) <= prev) sp(s) += 1
-                if (sp(s) >= se(s)) go = false
-                else { prev = ls.flat(sp(s)); s += 1 }
-              }
-              if (go && s == m && prev - start + 1 <= window) fits = true
-              sp(0) += 1
-            }
-          }
-        } else {
-        var i = 0
-        while (i < n) {
-          ptr(i) = lists(i).off(lists(i).pos)
-          end(i) = lists(i).off(lists(i).pos + 1)
-          i += 1
-        }
-        var go = true
-        while (go && !fits) {
-          var mn = Int.MaxValue
-          var mx = Int.MinValue
-          var mnIdx = -1
-          i = 0
-          while (i < n) {
-            val v = lists(i).flat(ptr(i))
-            if (v < mn) { mn = v; mnIdx = i }
-            if (v > mx) mx = v
-            i += 1
-          }
-          fits = mx - mn + 1 <= window
-          ptr(mnIdx) += 1
-          if (ptr(mnIdx) >= end(mnIdx)) go = false
-        }
-        }
-        if (fits) {
-          var score = 0.0
-          val norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
-          var i = 0
-          while (i < n) { // term-sorted → deterministic sum order
-            val l = lists(i)
-            score += termScore(idfByTerm(l.term), l.tfs(l.pos), k1p1, norm)
-            i += 1
-          }
-          if (heap.size < k) heap.enqueue(Hit(cand, score))
-          else if (score > heap.head.score) { heap.dequeue(); heap.enqueue(Hit(cand, score)) }
-        }
-      }
-      li += 1
-    }
-    if (accScored != null) accScored.add(scored)
-    heap.iterator.toArray.iterator
   }
 
   /** Synonym scoring for one shard (Lucene SynonymQuery): the variants'
@@ -2522,75 +2218,112 @@ object Searcher {
     heap.iterator.toArray.iterator
   }
 
-  /** The end positions, ascending, of the consecutive occurrences of the
-    * token sequence whose lists are `seqLists` (one per position, cursors
-    * AT the candidate doc) — the positional zipper
-    * `cur ← (cur + 1) ∩ positions(token_j)`, sorted two-pointer.
+  /** Does span `s` occur in the candidate doc? `sl` holds its slots' lists
+    * and `ex` its exclude term's (null when the doc lacks the term), every
+    * cursor AT the candidate. Ordered spans walk the greedy chain: per
+    * start position of slot 0, ascending, each later slot takes its first
+    * position after the previous slot's — the occurrence with the least
+    * end for that start. Per-slot cursors only move forward (a later
+    * start's chain dominates an earlier one's), so a doc costs O(its
+    * positions); a phrase is the chain with window = #slots, whose
+    * occurrences are exactly the consecutive runs. An occurrence counts
+    * when it fits the window, ends within `end` and has no exclude position
+    * in `[start − pre, end − 1 + post]` (starts ascend, so one exclusion
+    * cursor serves the doc). Unordered spans sweep the min cover: advance
+    * the least head; the cover ending there is max − min + 1.
     */
-  private def phraseEnds(seqLists: Array[PosList]): Array[Int] = {
-    val l0 = seqLists(0)
-    var cur: Array[Int] =
-      java.util.Arrays.copyOfRange(l0.flat, l0.off(l0.pos), l0.off(l0.pos + 1))
-    var j = 1
-    while (cur.nonEmpty && j < seqLists.length) {
-      val lj = seqLists(j)
-      val s = lj.off(lj.pos)
-      val e = lj.off(lj.pos + 1)
-      val out = Array.newBuilder[Int]
-      var a = 0
-      var x = s
-      while (a < cur.length && x < e) {
-        val want = cur(a) + 1
-        if (lj.flat(x) < want) x += 1
-        else if (lj.flat(x) > want) a += 1
-        else { out += want; a += 1; x += 1 }
+  private def spanMatches(s: BoolQ.Span, sl: Array[PosList], ex: PosList): Boolean = {
+    val m = sl.length
+    val cur = new Array[Int](m)
+    val lim = new Array[Int](m)
+    var i = 0
+    while (i < m) { cur(i) = sl(i).off(sl(i).pos); lim(i) = sl(i).off(sl(i).pos + 1); i += 1 }
+    var found = false
+    var go = true
+    if (s.ordered) {
+      val (pre, post) = s.exclude.fold((0, 0))(e => (e._2, e._3))
+      var x = if (ex == null) 0 else ex.off(ex.pos)
+      val xe = if (ex == null) 0 else ex.off(ex.pos + 1)
+      while (go && !found && cur(0) < lim(0)) {
+        val start = sl(0).flat(cur(0))
+        var last = start
+        var j = 1
+        while (go && j < m) {
+          val l = sl(j)
+          while (cur(j) < lim(j) && l.flat(cur(j)) <= last) cur(j) += 1
+          if (cur(j) >= lim(j)) go = false // no later start completes a chain
+          else { last = l.flat(cur(j)); j += 1 }
+        }
+        if (go && last >= s.end) go = false // later starts end later still
+        else if (go && last - start + 1 <= s.window) {
+          while (x < xe && ex.flat(x) < start - pre) x += 1
+          found = x >= xe || ex.flat(x) > last + post
+        }
+        cur(0) += 1
       }
-      cur = out.result()
-      j += 1
+    } else {
+      while (go && !found) {
+        var mn = Int.MaxValue; var mx = Int.MinValue; var mnIdx = -1
+        i = 0
+        while (i < m) {
+          val v = sl(i).flat(cur(i))
+          if (v < mn) { mn = v; mnIdx = i }
+          if (v > mx) mx = v
+          i += 1
+        }
+        found = mx - mn + 1 <= s.window
+        cur(mnIdx) += 1
+        go = cur(mnIdx) < lim(mnIdx)
+      }
     }
-    cur
+    found
   }
 
   /** Per-shard POSITIONAL boolean-tree evaluation (exact, document-at-a-
-    * time) for phrase-bearing trees: candidates come from the rarest
-    * required list (phrase members are required wherever their phrase is)
-    * or, for disjunctive roots, the sorted-distinct union of the positive
-    * lists; every list gallops to the candidate, each phrase leaf is
-    * decided by the positional zipper over its members' lists, and the
-    * tree scores through [[BoolQuery.evalScore]] with the per-candidate
-    * adjacency answers. Pruning uses EXACT per-list score ceilings (the
-    * max BM25 contribution actually attained in the shard, one O(postings)
-    * pass after decode — positional lists carry no block metadata):
-    * presence-level tree bounds over these ceilings are admissible for
-    * phrase leaves too, because a phrase scores the sum of its members and
-    * adjacency only SHRINKS the match set — so a candidate (or the whole
-    * remaining shard) whose presence bound can't beat θ is skipped before
-    * paying the positional zipper, with results exact by construction.
+    * time): the one kernel of every phrase, span and near query and of
+    * boolean trees with phrase leaves. Each leaf key gets one position
+    * list — its term's, or for a span slot `a|b` the union of its members'
+    * present in the shard ([[mergeSlotLists]]). Candidates come from the
+    * rarest required list (a required span requires each slot key) or, for
+    * disjunctive roots, the sorted-distinct union of the positive lists;
+    * every list gallops to the candidate, each span leaf whose slot keys
+    * are all present is decided by [[spanMatches]], and the tree scores
+    * through [[BoolQuery.evalScore]].
+    *
+    * Pruning uses EXACT per-list score ceilings (the max BM25 contribution
+    * actually attained in the shard, one O(postings) pass after decode —
+    * positional lists carry no block metadata): presence-level tree bounds
+    * over these ceilings are admissible for span leaves too, because a span
+    * scores the sum of its slot keys and the position check only SHRINKS
+    * the match set — so a candidate (or the whole remaining shard) whose
+    * presence bound can't beat θ is skipped before paying the position
+    * check, with results exact by construction. `pruning = false` (the
+    * `forcePruningOff` test hook) makes every bound +∞. `accScored` counts
+    * the candidates that match the tree and are scored, `accPruned` those
+    * skipped on their presence bound.
     */
   def scoreShardBoolPos(segsByTerm: Map[String, Array[PostingSegP]],
                         lens: ShardLens, tree: BoolQ,
-                        termsSorted: Seq[String], required: Seq[String],
-                        idfByTerm: Map[String, Double],
+                        keysSorted: Seq[String], required: Seq[String],
+                        idfByKey: Map[String, Double],
                         k1: Double, b: Double, avgdl: Double, k: Int,
-                        accScored: LongAccumulator, deleted: Array[Long],
-                        accPruned: LongAccumulator): Iterator[Hit] = {
+                        accScored: LongAccumulator, accPruned: LongAccumulator,
+                        pruning: Boolean, deleted: Array[Long]): Iterator[Hit] = {
     val k1p1 = k1 + 1.0
-    if (required.exists(t => !segsByTerm.contains(t))) return Iterator.empty
-    val present = termsSorted.filter(segsByTerm.contains)
-    val lists: Array[PosList] = present.map(t =>
-      withoutDeletedPos(decodePosList(t, segsByTerm(t)), deleted)).toArray
-    val byTerm: Map[String, Int] = present.zipWithIndex.toMap
+    val members: Map[String, Seq[String]] = keysSorted.map(key =>
+      key -> BoolQuery.keyTerms(key).filter(segsByTerm.contains)).toMap
+    val present = keysSorted.filter(members(_).nonEmpty)
+    val lists: Array[PosList] = present.map(key => mergeSlotLists(key,
+      members(key).map(t => withoutDeletedPos(decodePosList(t, segsByTerm(t)), deleted))
+        .toArray)).toArray
+    val byKey: Map[String, Int] = present.zipWithIndex.toMap
+    val idfOf: Array[Double] = present.map(idfByKey).toArray
     val n = lists.length
-    if (n == 0) return Iterator.empty
-    if (required.exists(t => lists(byTerm(t)).docs.isEmpty)) return Iterator.empty
-    val phrases = BoolQuery.phraseLeaves(tree)
-    // phrases whose members are all present in this shard — others are
-    // decided false without a zipper
-    val candDocs: Iterator[Long] =
-      if (required.nonEmpty) {
-        val leadIdx = required.map(byTerm).minBy(i => lists(i).docs.length)
-        lists(leadIdx).docs.iterator
-      } else {
+    if (n == 0 || required.exists(t => byKey.get(t).forall(lists(_).docs.isEmpty)))
+      return Iterator.empty
+    val candDocs: Array[Long] =
+      if (required.nonEmpty) lists(required.map(byKey).minBy(i => lists(i).docs.length)).docs
+      else {
         val posSet = BoolQuery.positiveTerms(tree)
         val arrays = present.zipWithIndex
           .collect { case (t, i) if posSet.contains(t) => lists(i).docs }
@@ -2601,42 +2334,65 @@ object Searcher {
         arrays.foreach { a => System.arraycopy(a, 0, all, o, a.length); o += a.length }
         java.util.Arrays.sort(all)
         all.iterator.zipWithIndex
-          .collect { case (d, i) if i == 0 || all(i - 1) != d => d }
+          .collect { case (d, i) if i == 0 || all(i - 1) != d => d }.toArray
       }
     // exact per-list ceilings: the max BM25 contribution any posting of the
     // list attains in THIS shard (uses the true per-doc dlens, so the
-    // ceiling is tight — not a block bound, a list bound)
-    val ceiling = new Array[Double](n)
-    locally {
-      var i = 0
-      while (i < n) {
-        val l = lists(i)
-        val idf = idfByTerm(l.term)
-        var m = 0.0
-        var j = 0
-        while (j < l.docs.length) {
-          val c = termScore(idf, l.tfs(j), k1p1,
-            lengthNorm(k1, b, lens.lens((l.docs(j) - lens.firstDocId).toInt), avgdl))
-          if (c > m) m = c
-          j += 1
-        }
-        ceiling(i) = m
-        i += 1
+    // ceiling is tight — not a block bound, a list bound); computed once
+    // the heap is full, as no bound prunes before
+    lazy val ceiling: Array[Double] = Array.tabulate(n) { i =>
+      val l = lists(i)
+      var m = 0.0
+      var j = 0
+      while (j < l.docs.length) {
+        m = math.max(m, termScore(idfOf(i), l.tfs(j), k1p1,
+          lengthNorm(k1, b, lens.lens((l.docs(j) - lens.firstDocId).toInt), avgdl)))
+        j += 1
       }
+      m
     }
-    val constUb = BoolQuery.upperBound(tree,
-      t => byTerm.get(t).map(ceiling).getOrElse(0.0))
+    val has = new Array[Boolean](n)
+    // the tree bound with present leaves at their ceilings (all, for the
+    // shard-constant exit), absent ones at 0; +∞ with pruning off
+    def bound(all: Boolean): Double =
+      if (!pruning) Double.PositiveInfinity
+      else BoolQuery.upperBound(tree, t => byKey.get(t) match {
+        case Some(j) if all || has(j) => ceiling(j)
+        case _ => 0.0
+      })
+    lazy val constUb = bound(all = true)
+    // with every positive key required, an admitted candidate's presence
+    // bound is the shard's constant one, already tested
+    val boundVaries = !BoolQuery.positiveTerms(tree).forall(required.contains)
+    // per span leaf: its slots' lists and its exclude term's list index
+    val spans: Map[BoolQ.Span, (Array[PosList], Int)] =
+      BoolQuery.spanLeaves(tree).map { s =>
+        s -> (s.keys.map(key => byKey.get(key).map(lists).orNull).toArray,
+          s.exclude.flatMap(e => byKey.get(e._1)).getOrElse(-1))
+      }.toMap
+    val spanOk: BoolQ.Span => Boolean = { s =>
+      val (sl, ex) = spans(s)
+      spanMatches(s, sl, if (ex >= 0 && has(ex)) lists(ex) else null)
+    }
+    var norm = 0.0
+    val keyScore: String => Double = { t =>
+      val i = byKey(t)
+      termScore(idfOf(i), lists(i).tfs(lists(i).pos), k1p1, norm)
+    }
+    val hasKey: String => Boolean = t => byKey.get(t).exists(has(_))
+    val reqIdx = required.map(byKey).toArray
     val heap = mutable.PriorityQueue.empty[Hit](
       Ordering.by((h: Hit) => (-h.score, h.docId)))
     var scored = 0L
     var pruned = 0L
-    def theta: Double = if (heap.size >= k) heap.head.score else Double.NegativeInfinity
-    val has = new Array[Boolean](n)
+    // can no candidate bounded by `ub` beat the k-th heap score θ?
+    def beaten(ub: => Double): Boolean = heap.size >= k && ub <= heap.head.score
     var done = false
-    val it = candDocs
-    while (!done && it.hasNext) {
-      val cand = it.next()
-      if (constUb <= theta) done = true // shard exhausted for this θ
+    var ci = 0
+    while (!done && ci < candDocs.length) {
+      val cand = candDocs(ci)
+      ci += 1
+      if (beaten(constUb)) done = true // shard exhausted for this θ
       else {
         var i = 0
         while (i < n) {
@@ -2645,27 +2401,11 @@ object Searcher {
           has(i) = l.pos < l.docs.length && l.docs(l.pos) == cand
           i += 1
         }
-        if (required.forall(t => has(byTerm(t)))) {
-          // presence bound over the candidate's PRESENT lists' ceilings —
-          // admissible (phrase ≤ sum of members; adjacency only shrinks)
-          val ub = BoolQuery.upperBound(tree, t => byTerm.get(t) match {
-            case Some(j) if has(j) => ceiling(j)
-            case _ => 0.0
-          })
-          if (ub <= theta) pruned += 1
+        if (reqIdx.forall(has(_))) {
+          if (boundVaries && beaten(bound(all = false))) pruned += 1
           else {
-            val pOk: Map[BoolQ.Phrase, Boolean] = phrases.map { p =>
-              p -> (p.ts.forall(t => byTerm.get(t).exists(has)) &&
-                phraseEnds(p.ts.map(t => lists(byTerm(t))).toArray).nonEmpty)
-            }.toMap
-            val norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
-            val score = BoolQuery.evalScore(tree,
-              t => byTerm.get(t).exists(has),
-              { t =>
-                val l = lists(byTerm(t))
-                termScore(idfByTerm(t), l.tfs(l.pos), k1p1, norm)
-              },
-              pOk)
+            norm = lengthNorm(k1, b, lens.lens((cand - lens.firstDocId).toInt), avgdl)
+            val score = BoolQuery.evalScore(tree, hasKey, keyScore, spanOk)
             if (!score.isNaN) {
               scored += 1
               if (heap.size < k) heap.enqueue(Hit(cand, score))

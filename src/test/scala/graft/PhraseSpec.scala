@@ -354,6 +354,50 @@ class PhraseSpec extends AnyFunSuite {
     assert(ph.subsetOf(near2))
   }
 
+  /** Every positional entry point (and a bool tree with a phrase leaf),
+    * named, at a given k.
+    */
+  private def positionalModes: Seq[(String, (Searcher, Int) => Seq[Hit])] = Seq(
+    "phrase" -> ((s, k) => s.searchPhrase("import def", k).collect().toSeq),
+    "span-first" -> ((s, k) => s.searchSpanFirst("import def", k, 40).collect().toSeq),
+    "span-not" -> ((s, k) => s.searchSpanNot("import def", "class", k, 1, 1).collect().toSeq),
+    "multi-phrase" -> ((s, k) =>
+      s.searchMultiPhrase(Seq(Seq("import"), Seq("def", "class")), k).collect().toSeq),
+    "phrase-prefix" -> ((s, k) => s.searchPhrasePrefix("import util_1", k).collect().toSeq),
+    "near" -> ((s, k) => s.searchNear("import util_7", k, 8).collect().toSeq),
+    "ordered near" -> ((s, k) =>
+      s.searchNear("import util_7", k, 8, ordered = true).collect().toSeq),
+    "bool with a phrase" -> ((s, k) =>
+      s.searchBool("(\"import def\" OR util_3) val", k).collect().toSeq))
+
+  test("positional modes over already-looked-up terms: Spark job counts pinned") {
+    val s = new Searcher(spark, posIndex)
+    positionalModes.foreach(_._2(s, 10)) // looks every term up, broadcasts the norms
+    // the map stage and the final top-k; phrase-prefix adds the job of its
+    // dictionary expansion
+    val counts = positionalModes.map { case (name, run) =>
+      name -> TestSpark.jobsOf(run(s, 10)) }
+    assert(counts == Seq("phrase" -> 2, "span-first" -> 2, "span-not" -> 2,
+      "multi-phrase" -> 2, "phrase-prefix" -> 3, "near" -> 2, "ordered near" -> 2,
+      "bool with a phrase" -> 2))
+    s.close()
+  }
+
+  test("positional modes: pruning on and off give bit-identical hits") {
+    val on = new Searcher(spark, posIndex)
+    val off = new Searcher(spark, posIndex)
+    off.forcePruningOff = true
+    for ((mode, run) <- positionalModes; k <- Seq(3, 10, 1000)) {
+      val want = run(off, k)
+      assert(run(on, k) == want && want.nonEmpty, s"$mode k=$k")
+    }
+    // the hook reaches the positional kernel, which prunes when it is off
+    assert(off.candidatesPruned.value == 0 && on.candidatesPruned.value > 0,
+      s"pruned: on=${on.candidatesPruned.value} off=${off.candidatesPruned.value}")
+    on.close()
+    off.close()
+  }
+
   test("non-positional index refuses proximity search with a clear error") {
     val (_, plainIndex) = TestSpark.builtIndex
     val e = intercept[IllegalArgumentException] {

@@ -13,8 +13,8 @@ import graft.query.Searcher
 import graft.streaming.IncrementalIndexer
 
 /** The per-shard harness over a positional base + delta + tombstone index:
-  * synonym and explain against the union-corpus oracle, and concurrent
-  * queries on one `Searcher`.
+  * synonym, explain and every positional mode against the union-corpus
+  * oracle, and concurrent queries on one `Searcher`.
   */
 class ShardHarnessSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -93,6 +93,39 @@ class ShardHarnessSpec extends AnyFunSuite {
     s.close()
   }
 
+  test("positional modes over base + delta + tombstones equal the union-corpus oracles minus deleted docs") {
+    val full = env._4
+    val s = searcher()
+    val mphrase = Seq(Seq("import"), Seq("def", "class"))
+    // (mode, engine top-k, union-corpus oracle top-k)
+    val modes: Seq[(String, Int => Seq[(Long, Double)], Int => DataFrame)] = Seq(
+      ("phrase", k => hits(s.searchPhrase("import def", k)),
+        k => OracleBm25.topKPhrase(full, "import def", k)),
+      ("span-first", k => hits(s.searchSpanFirst("import def", k, 40)),
+        k => OracleBm25.topKPhrase(full, "import def", k, maxEnd = 40)),
+      ("span-not", k => hits(s.searchSpanNot("import def", "class", k, 1, 1)),
+        k => OracleBm25.topKSpanNot(full, "import def", "class", k, 1, 1)),
+      ("multi-phrase", k => hits(s.searchMultiPhrase(mphrase, k)),
+        k => OracleBm25.topKMultiPhrase(full, mphrase, k)),
+      ("phrase-prefix", k => hits(s.searchPhrasePrefix("import util_1", k)),
+        k => OracleBm25.topKMultiPhrase(full, Seq(Seq("import"), s.expandPrefix("util_1")), k)),
+      ("near", k => hits(s.searchNear("import util_7", k, 8)),
+        k => OracleBm25.topKNear(full, "import util_7", 8, k)),
+      ("ordered near", k => hits(s.searchNear("import util_7", k, 8, ordered = true)),
+        k => OracleBm25.topKNearOrdered(full, "import util_7", 8, k)))
+    val ks = Seq(10, 300)
+    for ((mode, engine, oracle) <- modes) {
+      // Lucene delete semantics: score over the whole corpus, then drop
+      val ranked = oracle(ks.max + deleted.size).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).filterNot(h => deleted(h._1)).toSeq
+      for (k <- ks) {
+        val want = ranked.take(k)
+        assert(engine(k) == want && want.nonEmpty, s"$mode k=$k")
+      }
+    }
+    s.close()
+  }
+
   test("explain over a shard straddling base and delta: contributions sum to the hit scores") {
     val s = searcher()
     val q = "def import"
@@ -140,9 +173,13 @@ class ShardHarnessSpec extends AnyFunSuite {
       "NOT" -> (_.searchNot("import def", "util_1", 10).collect().toSeq),
       "filtered" -> (_.searchWhere("import def", 10, $"lang" =!= "py").collect().toSeq),
       "phrase" -> (_.searchPhrase("import def", 10).collect().toSeq),
+      "span-first" -> (_.searchSpanFirst("import def", 10, 40).collect().toSeq),
+      "span-not" -> (_.searchSpanNot("import def", "class", 10, 1, 1).collect().toSeq),
       "near" -> (_.searchNear("import util_7", 10, 8).collect().toSeq),
+      "ordered near" -> (_.searchNear("import util_7", 10, 8, ordered = true).collect().toSeq),
       "multi-phrase" -> (_.searchMultiPhrase(Seq(Seq("import"), Seq("def", "class")), 10)
         .collect().toSeq),
+      "phrase-prefix" -> (_.searchPhrasePrefix("import util_1", 10).collect().toSeq),
       "bool with a phrase leaf" -> (_.searchBool("\"import def\" OR util_3", 10).collect().toSeq),
       "synonym" -> (_.searchSynonym(Seq("util_7", "util_17"), 10).collect().toSeq),
       "explain" -> (_.explainHits(q, 10).collect().toSeq),
