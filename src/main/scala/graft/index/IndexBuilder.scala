@@ -368,50 +368,56 @@ object IndexBuilder {
     meta
   }
 
-  /** The dict writer of every index writer (`buildFast`, `compact` and
-    * `IncrementalIndexer.indexBatch`): one [[TermStat]] per term, streamed
-    * out of segments sorted on (term, shard) within each partition, no term
-    * in two partitions (see [[byTermRange]]; an ingest batch's one sorted
-    * partition needs no exchange) — df = Σn, cf = ΣsumTf, shards = the
-    * segments' shards. Every dict file is then term-sorted, and no two files
+  /** The dict writer of `buildFast` and `compact`: one [[TermStat]] per
+    * term ([[mergeTermStats]]), streamed out of segments sorted on (term,
+    * shard) within each partition, no term in two partitions (see
+    * [[byTermRange]]). Every dict file is then term-sorted, and no two files
     * overlap in term range: `IndexFiles.DictReader` picks files by range,
     * and parquet min/max statistics prune the expansion paths' `startsWith`
     * / range scans. Pages are written in parquet's v2 format, whose
     * DELTA_BYTE_ARRAY encoding front-codes the sorted terms, and hold at
-    * most 1,000 rows, so a lookup's column-index filter decodes one small
-    * page per term: on the 2,000-doc test index a two-term driver lookup
-    * took about 16 ms of CPU with one 20,000-row page per file and 4–5 ms
-    * with 1,000-row pages, for 10% more dict bytes. Returns the number of
-    * terms, observed on the write.
+    * most `IndexFiles.DictPageRows` (1,000) rows, so a lookup's column-index
+    * filter decodes one small page per term: on the 2,000-doc test index a
+    * two-term driver lookup took about 16 ms of CPU with one 20,000-row page
+    * per file and 4–5 ms with 1,000-row pages, for 10% more dict bytes. An
+    * ingest batch writes its one dict file with the same settings through
+    * `IndexFiles.TableWriter`. Returns the number of terms, observed on the
+    * write.
     */
   private[graft] def writeDict(segs: DataFrame, out: String): Long = {
     val spark = segs.sparkSession
     import spark.implicits._
     val obs = new org.apache.spark.sql.Observation("dict")
     segs.select($"term", $"shard", $"n", $"sumTf").as[(String, Int, Int, Long)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[TermStat] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): TermStat = {
-            val (term, shard, n, sumTf) = buf.next()
-            var (df, cf) = (n.toLong, sumTf)
-            val shards = Array.newBuilder[Int]
-            shards += shard
-            var last = shard
-            while (buf.hasNext && buf.head._1 == term) {
-              val (_, s, n2, sumTf2) = buf.next()
-              df += n2; cf += sumTf2
-              if (s != last) { shards += s; last = s }
-            }
-            TermStat(term, df, cf, shards.result())
-          }
-        }
-      }
+      .mapPartitions(mergeTermStats)
       .observe(obs, count(lit(1)).as("numTerms"))
       .write.mode(SaveMode.Overwrite).option("parquet.writer.version", "v2")
-      .option("parquet.page.row.count.limit", "1000").parquet(out)
+      .option("parquet.page.row.count.limit", IndexFiles.DictPageRows.toString).parquet(out)
     obs.get("numTerms").asInstanceOf[Long]
+  }
+
+  /** The dict rows of (term, shard, n, sumTf) segment stats sorted on
+    * (term, shard): per term df = Σn, cf = ΣsumTf and shards = the distinct
+    * shards in order.
+    */
+  private[graft] def mergeTermStats(it: Iterator[(String, Int, Int, Long)]): Iterator[TermStat] = {
+    val buf = it.buffered
+    new Iterator[TermStat] {
+      def hasNext: Boolean = buf.hasNext
+      def next(): TermStat = {
+        val (term, shard, n, sumTf) = buf.next()
+        var (df, cf) = (n.toLong, sumTf)
+        val shards = Array.newBuilder[Int]
+        shards += shard
+        var last = shard
+        while (buf.hasNext && buf.head._1 == term) {
+          val (_, s, n2, sumTf2) = buf.next()
+          df += n2; cf += sumTf2
+          if (s != last) { shards += s; last = s }
+        }
+        TermStat(term, df, cf, shards.result())
+      }
+    }
   }
 
   /** `df` range-exchanged on `term` into `parts` partitions over `bounds`
@@ -663,17 +669,17 @@ object IndexBuilder {
     * working map holds ONE shard's terms at a time (bounded by shard
     * geometry, not partition size).
     */
-  private def draftSegments(rows: Iterator[(Long, String)], dps: Int,
-                            positional: Boolean): Iterator[Product] = {
+  private[graft] def draftSegments(rows: Iterator[(Long, String)], dps: Int,
+                                   positional: Boolean): Iterator[Segment] = {
     val in = rows.buffered
-    new Iterator[Product] {
-      private var out: Iterator[Product] = Iterator.empty
+    new Iterator[Segment] {
+      private var out: Iterator[Segment] = Iterator.empty
       private var prevId = Long.MinValue
       def hasNext: Boolean = {
         while (!out.hasNext && in.hasNext) out = nextShard()
         out.hasNext
       }
-      def next(): Product = {
+      def next(): Segment = {
         if (!hasNext) throw new NoSuchElementException
         out.next()
       }
@@ -681,7 +687,7 @@ object IndexBuilder {
       // the doc's token count is known) — reused across docs
       private val touched = new java.util.ArrayList[RunBuilder](256)
 
-      private def nextShard(): Iterator[Product] = {
+      private def nextShard(): Iterator[Segment] = {
         val shard = (in.head._1 / dps).toInt
         val m = new TokenTable(positional)
         while (in.hasNext && (in.head._1 / dps).toInt == shard) {
@@ -722,7 +728,7 @@ object IndexBuilder {
           var t = 0
           while (t < touched.size()) { touched.get(t).patchDlen(dlen); t += 1 }
         }
-        val out = scala.collection.mutable.ArrayBuffer.empty[Product]
+        val out = scala.collection.mutable.ArrayBuffer.empty[Segment]
         m.foreachEntry { (term, b) =>
           val da = java.util.Arrays.copyOf(b.docs, b.n)
           val fa = java.util.Arrays.copyOf(b.tfs, b.n)
@@ -741,19 +747,6 @@ object IndexBuilder {
         out.iterator
       }
     }
-  }
-
-  /** Drafts of docId-ascending (docId, content) partitions, (term, shard)-
-    * sorted per partition for [[finalizeSegments]] / [[finalizeSegmentsP]]:
-    * after a (term, shard) hash exchange into `exchange` partitions (the
-    * build), or in place when 0 (an ingest batch: all docs in one partition).
-    */
-  private[graft] def sortedDrafts[D <: Product : Encoder](rows: Dataset[(Long, String)],
-      dps: Int, positional: Boolean, exchange: Int): Dataset[D] = {
-    val drafts = rows.mapPartitions(it =>
-      draftSegments(it, dps, positional).asInstanceOf[Iterator[D]])
-    (if (exchange > 0) drafts.repartition(exchange, col("term"), col("shard")) else drafts)
-      .sortWithinPartitions("term", "shard")
   }
 
   /** Pack (docId, dlen) rows into one zero-filled, docId-aligned
@@ -1052,9 +1045,11 @@ object IndexBuilder {
     var totalTokensObserved = -1L
     stages.run("docs") {
       val docsObs = new org.apache.spark.sql.Observation("docstats")
+      // dlen is non-null, as in DocRow, so this table's parquet schema is
+      // the one an ingest batch's writer derives from DocRow
       withId
         .select($"docId", $"repo", $"path", $"commit", $"lang",
-          expr("token_count(content)").as("dlen"), $"sha256")
+          coalesce(expr("token_count(content)"), lit(0)).as("dlen"), $"sha256")
         .observe(docsObs, sum($"dlen".cast("long")).as("totalTokens"))
         .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/docs.parquet")
       totalTokensObserved = docsObs.get("totalTokens").asInstanceOf[Long]
@@ -1146,8 +1141,10 @@ object IndexBuilder {
           finalize: (Iterator[D], LongAccumulator) => Iterator[S],
           readPart: String => Iterator[S]): Unit = {
         val positional = cfg.positions
-        val drafts = sortedDrafts[D](withId.select($"docId", $"content").as[(Long, String)],
-          dps, positional, exchange = P)
+        val drafts = withId.select($"docId", $"content").as[(Long, String)]
+          .mapPartitions(it => draftSegments(it, dps, positional).asInstanceOf[Iterator[D]])
+          .repartition(P, col("term"), col("shard"))
+          .sortWithinPartitions("term", "shard")
         if (!cfg.partitionedResume) {
           drafts
             .mapPartitions(it => manifested(mAcc, "postings", 1L)(

@@ -6,17 +6,21 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, PathFilter}
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ParquetProperties.WriterVersion
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveComparator
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 import graft._
@@ -38,6 +42,8 @@ import graft._
   * [[DictReader]] answers term lookups (df and shard list) on the driver
   * with parquet-mr: it picks the dict files whose footer term range covers a
   * term and reads them with a `term` filter, launching no Spark job.
+  * [[lens]] reads the norms rows the same way, and [[TableWriter]] is the
+  * writer twin an ingest batch's one task writes its four tables with.
   */
 object IndexFiles {
 
@@ -88,6 +94,75 @@ object IndexFiles {
     spark.read.schema(schema).parquet(tables: _*)
   }
 
+  /** The dlens rows of `dirs`, read on the driver with parquet-mr — no
+    * Spark job — after the footer column check of every part file.
+    */
+  private[graft] def lens(spark: SparkSession, dirs: Seq[String]): Seq[ShardLens] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dirs.flatMap(d => partFilesOf(conf, s"$d/dlens.parquet")).flatMap { path =>
+      val file = HadoopInputFile.fromPath(path, conf)
+      val footer = footerOf(file)
+      requireColumns(path.toString, columnsOf(footer), dlensSchema)
+      readRecords(file, footer, conf, FilterCompat.NOOP)(g =>
+        ShardLens(g.getInteger("shard", 0), g.getLong("firstDocId", 0), ints(g, "lens")))
+    }
+  }
+
+  /** Rows per page of a dict file, whose pages are parquet v2 (see
+    * `IndexBuilder.writeDict`).
+    */
+  val DictPageRows = 1000
+
+  /** One index table written from inside a task as the single part file of
+    * the table directory `table`, with parquet-mr. The parquet schema is
+    * Spark's own conversion of the table's row schema and the compression is
+    * SNAPPY, as in Spark's writes, so the file's footer schema equals that
+    * of the same table written by Spark. A dict table (`dict = true`) gets
+    * the dict's page settings: v2 pages of at most [[DictPageRows]] rows.
+    */
+  private[graft] final class TableWriter(table: String, schema: StructType,
+                                         conf: Configuration, dict: Boolean = false) {
+    private val messageType = new SparkToParquetSchemaConverter().convert(schema)
+    private val groups = new SimpleGroupFactory(messageType)
+    private val writer = {
+      val b = ExampleParquetWriter.builder(new Path(table, "part-00000.snappy.parquet"))
+        .withConf(conf).withType(messageType)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      (if (dict) b.withWriterVersion(WriterVersion.PARQUET_2_0).withPageRowCountLimit(DictPageRows)
+       else b).build()
+    }
+    private var rows = 0L
+
+    /** Writes `row`, a case class of the table's row type. */
+    def write(row: Product): Unit = {
+      val g = groups.newGroup()
+      var i = 0
+      while (i < row.productArity) { add(g, i, row.productElement(i)); i += 1 }
+      writer.write(g)
+      rows += 1
+    }
+
+    /** Closes the file and returns the number of rows written. */
+    def close(): Long = { writer.close(); rows }
+  }
+
+  /** `v` as field `i` of `g`: a null stays absent, and an array becomes the
+    * three-level LIST group Spark writes (a repeated `list` group holding
+    * one `element` each).
+    */
+  private def add(g: Group, i: Int, v: Any): Unit = v match {
+    case null =>
+    case s: String => g.add(i, s)
+    case x: Int => g.add(i, x)
+    case x: Long => g.add(i, x)
+    case x: Float => g.add(i, x)
+    case b: Array[Byte] => g.add(i, Binary.fromConstantByteArray(b))
+    case a: Array[_] =>
+      val list = g.addGroup(i)
+      a.foreach(x => add(list.addGroup(0), 0, x))
+  }
+
   /** Term lookups in the dict tables of `dirs` (a base and its deltas),
     * answered on the driver with no Spark job. The footers of every dict
     * part file are read once, on the first lookup, and checked for the dict
@@ -113,10 +188,8 @@ object IndexFiles {
     private lazy val parts: Seq[Part] = dirs.flatMap { d =>
       partFilesOf(conf, s"$d/dict.parquet").flatMap { path =>
         val file = HadoopInputFile.fromPath(path, conf)
-        val reader = ParquetFileReader.open(file)
-        val footer = try reader.getFooter finally reader.close()
-        requireColumns(path.toString, footer.getFileMetaData.getSchema.getFields.asScala
-          .map(_.getName).toSet, dictSchema)
+        val footer = footerOf(file)
+        requireColumns(path.toString, columnsOf(footer), dictSchema)
         val stats = footer.getBlocks.asScala.filter(_.getRowCount > 0).map(
           _.getColumns.asScala.find(_.getPath.toDotString == "term").get.getStatistics)
         if (stats.isEmpty) None
@@ -139,32 +212,52 @@ object IndexFiles {
     /** The rows of one part file whose term is in `terms`. */
     private def read(p: Part, terms: Set[Binary]): Seq[TermStat] = {
       val filter = FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("term"), terms.asJava))
-      val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
-      val reader = new ParquetFileReader(p.file, p.footer, options, p.file.newStream())
-      val schema = p.footer.getFileMetaData.getSchema
-      val io = new ColumnIOFactory().getColumnIO(schema)
-      val out = Seq.newBuilder[TermStat]
-      try {
-        var pages = reader.readNextFilteredRowGroup()
-        while (pages != null) {
-          val records = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val g = records.read()
-            if (g != null && !records.shouldSkipCurrentRecord()) out += {
-              val list = g.getGroup("shards", 0)
-              TermStat(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
-                Array.tabulate(list.getFieldRepetitionCount(0))(j =>
-                  list.getGroup(0, j).getInteger(0, 0)))
-            }
-            i += 1
-          }
-          pages = reader.readNextFilteredRowGroup()
-        }
-      } finally reader.close()
-      out.result()
+      readRecords(p.file, p.footer, conf, filter)(g =>
+        TermStat(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
+          ints(g, "shards")))
     }
   }
+
+  /** The records of one part file that pass `filter` (row groups pruned by
+    * statistics, pages by the column index), each converted by `row`.
+    */
+  private def readRecords[T](file: HadoopInputFile, footer: ParquetMetadata,
+                             conf: Configuration, filter: FilterCompat.Filter)(
+                             row: Group => T): Seq[T] = {
+    val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
+    val reader = new ParquetFileReader(file, footer, options, file.newStream())
+    val schema = footer.getFileMetaData.getSchema
+    val io = new ColumnIOFactory().getColumnIO(schema)
+    val out = Seq.newBuilder[T]
+    try {
+      var pages = reader.readNextFilteredRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, new GroupRecordConverter(schema), filter)
+        var i = 0L
+        while (i < pages.getRowCount) {
+          val g = records.read()
+          if (g != null && !records.shouldSkipCurrentRecord()) out += row(g)
+          i += 1
+        }
+        pages = reader.readNextFilteredRowGroup()
+      }
+    } finally reader.close()
+    out.result()
+  }
+
+  /** The int array in the LIST column `field` of `g`. */
+  private def ints(g: Group, field: String): Array[Int] = {
+    val list = g.getGroup(field, 0)
+    Array.tabulate(list.getFieldRepetitionCount(0))(j => list.getGroup(0, j).getInteger(0, 0))
+  }
+
+  private def footerOf(file: HadoopInputFile): ParquetMetadata = {
+    val reader = ParquetFileReader.open(file)
+    try reader.getFooter finally reader.close()
+  }
+
+  private def columnsOf(footer: ParquetMetadata): Set[String] =
+    footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
 
   /** The order of parquet's statistics on a string column: unsigned bytes
     * of the UTF-8 encoding, which is also Spark's string order.
@@ -195,11 +288,7 @@ object IndexFiles {
     */
   private def footerColumns(spark: SparkSession, table: String): Option[Set[String]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    partFilesOf(conf, table).headOption.map { first =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
-      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSet
-      finally reader.close()
-    }
+    partFilesOf(conf, table).headOption.map(first =>
+      columnsOf(footerOf(HadoopInputFile.fromPath(first, conf))))
   }
 }

@@ -41,13 +41,15 @@ case class PostingSeg(term: String, shard: Int, n: Int, sumTf: Long,
                       blockFirst: Array[Long], blockMaxTfn: Array[Float],
                       blockMaxTf: Array[Int], blockMinDlen: Array[Int]) extends Segment
 
-/** The fields a plain and a positional posting segment share: enough to
-  * group segments by shard and term and to decode their docIds.
+/** The fields plain and positional posting segments and their drafts
+  * share: enough to group segments by shard and term, to decode their
+  * docIds and to sum their dict stats.
   */
 trait Segment {
   def term: String
   def shard: Int
   def n: Int
+  def sumTf: Long
   def docBytes: Array[Byte]
 }
 
@@ -82,7 +84,7 @@ case class PostingSegP(term: String, shard: Int, n: Int, sumTf: Long,
   */
 case class SegDraft(term: String, shard: Int, n: Int, sumTf: Long,
                     docBytes: Array[Byte], tfBytes: Array[Byte],
-                    dlenBytes: Array[Byte])
+                    dlenBytes: Array[Byte]) extends Segment
 
 /** Positional twin of [[SegDraft]]: `posBytes` as in [[PostingSegP]] —
   * per-doc lists are self-contained, so boundary merges concatenate them in
@@ -90,7 +92,7 @@ case class SegDraft(term: String, shard: Int, n: Int, sumTf: Long,
   */
 case class SegDraftP(term: String, shard: Int, n: Int, sumTf: Long,
                      docBytes: Array[Byte], tfBytes: Array[Byte],
-                     dlenBytes: Array[Byte], posBytes: Array[Byte])
+                     dlenBytes: Array[Byte], posBytes: Array[Byte]) extends Segment
 
 /** Term dictionary row (df = doc frequency, cf = collection frequency) — the
   * analog of KeyInfo's per-key dup counts (psi/utils/table_utils.cc:280-374).

@@ -92,7 +92,8 @@ class Searcher(spark: SparkSession, indexDir: String,
     else dict.groupBy("term").agg(sum($"df").as("df"))
 
   /** In-memory per-shard document-length rows (the Lucene norms-in-RAM
-    * analog), loaded lazily and broadcast ONCE per Searcher when the whole
+    * analog), read on the driver with no Spark job (`IndexFiles.lens`) and
+    * broadcast ONCE per Searcher when the whole
     * corpus's norms fit a fixed byte cap (numDocs × 4 B ≤ 64 MB, i.e.
     * ≤ ~16.7M docs): every query then runs as ONE grouped input instead of
     * a two-sided cogroup — no per-query dlens scan and no second exchange
@@ -127,7 +128,7 @@ class Searcher(spark: SparkSession, indexDir: String,
         if (dlensCacheBc == null) dlensCacheBc =
           if (meta.numDocs * 4L > DlensCacheMaxBytes) None
           else {
-            val merged = dlens.as[ShardLens].collect().groupBy(_.shard)
+            val merged = IndexFiles.lens(spark, allDirs).groupBy(_.shard)
               .map { case (s, rs) => s -> Searcher.mergeLens(rs.iterator) }
             Some(spark.sparkContext.broadcast(merged))
           }

@@ -1,11 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark.{jobsOf, shuffleWritesOf}
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{IndexBuilder, IndexConfig, IndexFiles, Tombstones}
 import graft.query.Searcher
 import graft.streaming.IncrementalIndexer
 
@@ -47,13 +52,80 @@ class IndexFilesSpec extends AnyFunSuite {
     assert(one == three, s"1 delta: $one jobs, 3 deltas: $three jobs")
   }
 
-  // the window's exchange, then one job per table write plus one to fill
-  // each of the two caches (the numbered batch and its segments)
-  test("one indexBatch launches at most 7 jobs") {
+  // the window's exchange, then the one task that encodes the batch and
+  // writes all four tables
+  test("one indexBatch launches at most 2 jobs") {
     val first = baseDocs + 300L // the base is built outside the counted region
-    val n = jobsOf(IncrementalIndexer.indexBatch(spark, slice(300L, 100L),
-      s"$work/plain/batch_3", first, IndexConfig(docsPerShard = 256)))
-    assert(n <= 7, s"indexBatch launched $n jobs")
+    for (positions <- Seq(false, true)) {
+      val n = jobsOf(IncrementalIndexer.indexBatch(spark, slice(300L, 100L),
+        s"$work/jobs_$positions/batch_0", first,
+        IndexConfig(docsPerShard = 256, positions = positions)))
+      assert(n <= 2, s"positions=$positions: indexBatch launched $n jobs")
+    }
+  }
+
+  test("an empty batch commits nothing and creates no batch dir") {
+    val dir = s"$work/empty/batch_0"
+    val got = IncrementalIndexer.indexBatch(spark, slice(0L, 10L).limit(0), dir,
+      baseDocs, IndexConfig(docsPerShard = 256))
+    assert(got == IncrementalIndexer.IndexMetaLike(0L, 0L))
+    assert(!Files.exists(Paths.get(dir)), s"$dir was created")
+    assert(IncrementalIndexer.deltaDirs(s"$work/empty").isEmpty)
+  }
+
+  test("a batch dir holding a stale attempt and partial tables is fully replaced") {
+    val cfg = IndexConfig(docsPerShard = 256)
+    val first = baseDocs + 500L
+    val clean = s"$work/clean/batch_0"
+    IncrementalIndexer.indexBatch(spark, slice(500L, 100L), clean, first, cfg)
+    // an earlier run died before meta.json: a staged attempt, an old
+    // attempt's dir and tables of other docs (Spark-written part files)
+    val dirty = s"$work/dirty/batch_0"
+    for (a <- Seq(0, 123456789); t <- Seq("docs", "postings"))
+      slice(600L, 5L).write.mode("overwrite").parquet(s"$dirty/_attempt-$a/$t.parquet")
+    slice(600L, 50L).write.mode("overwrite").parquet(s"$dirty/docs.parquet")
+    spark.read.parquet(s"${deltas.head}/postings.parquet").write.mode("overwrite")
+      .parquet(s"$dirty/postings.parquet")
+    IncrementalIndexer.indexBatch(spark, slice(500L, 100L), dirty, first, cfg)
+
+    def listing(dir: String): Seq[String] = {
+      val root = Paths.get(dir)
+      val s = Files.walk(root)
+      try s.iterator().asScala.map(root.relativize(_).toString)
+        .filterNot(_.endsWith(".crc")).toSeq.sorted
+      finally s.close()
+    }
+    assert(listing(dirty) == listing(clean))
+    assert(!listing(dirty).exists(_.startsWith("_attempt-")))
+    assert(IndexBuilder.readMeta(dirty) == IndexBuilder.readMeta(clean))
+    for (t <- Seq("docs", "dlens", "postings", "dict")) {
+      def rows(dir: String) = spark.read.parquet(s"$dir/$t.parquet").collect()
+        .map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toList
+          case b: Array[Byte] => b.toSeq
+          case x => x
+        }).toSet
+      assert(rows(dirty) == rows(clean), s"$t differs from a clean run")
+    }
+  }
+
+  test("applyDeletes over a base and three deltas launches at most 3 jobs") {
+    val ds = deltas // committed outside the counted region
+    val dirs = indexDir +: ds
+    val path = s"$work/tombstones_jobs.parquet"
+    def keys(m: Int) = IndexFiles.docs(spark, dirs)
+      .filter(col("docId") % m === 0).select("repo", "path", "commit")
+    val create = jobsOf(Tombstones.applyDeletes(spark, keys(11), dirs, path))
+    val merge = jobsOf(Tombstones.applyDeletes(spark, keys(13), dirs, path))
+    assert(create <= 3 && merge <= 3, s"first call $create jobs, merging call $merge jobs")
+  }
+
+  test("the first query on a fresh Searcher launches as many jobs as the second") {
+    val ds = deltas // committed outside the counted region
+    val s = new Searcher(spark, indexDir, ds)
+    val first = jobsOf(s.search("import def", 3).collect())
+    val second = jobsOf(s.search("import def", 3).collect())
+    assert(first == second, s"first query $first jobs, second $second")
   }
 
   test("one indexBatch shuffles only in its docId window") {

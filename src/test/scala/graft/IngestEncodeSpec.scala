@@ -1,17 +1,24 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
-import graft.index.{IndexBuilder, IndexCheck, IndexConfig}
+import graft.index.{IndexBuilder, IndexCheck, IndexConfig, IndexMeta}
 import graft.oracle.OracleBm25
 import graft.query.Searcher
 import graft.streaming.IncrementalIndexer
 
 /** An ingest batch encodes with the build's kernels: a delta over docIds
-  * [0, n) is row-identical to a build of the same docs, a batch whose first
+  * [0, n) is row-identical to a build of the same docs and its tables have
+  * the build's parquet schemas, a batch whose first
   * shard is shared with its base passes the index fsck and composite search,
   * and dictionary expansion over base + deltas equals it on their compaction.
   */
@@ -43,21 +50,67 @@ class IngestEncodeSpec extends AnyFunSuite {
     }).toSet
   }
 
+  /** (build, delta, the build's meta) of the 300-doc corpus, per
+    * positional-ness: 3 build partitions of ~100 docs split 64-doc shards,
+    * so the build merges boundary drafts the one-task batch never has.
+    */
+  private val pairs = scala.collection.mutable.Map.empty[Boolean, (String, String, IndexMeta)]
+  private def pair(positions: Boolean): (String, String, IndexMeta) = pairs.getOrElseUpdate(positions, {
+    val cfg = IndexConfig(docsPerShard = dps, buildPartitions = 3, positions = positions)
+    val built = s"$work/built_$positions"
+    val delta = s"$work/delta_$positions"
+    val bm = IndexBuilder.buildFast(spark, corpus, built, cfg)
+    IncrementalIndexer.indexBatch(spark, spark.read.parquet(s"$corpus/files.parquet"),
+      delta, 0L, cfg)
+    (built, delta, bm)
+  })
+
+  private val tables = Seq("docs", "dlens", "postings", "dict")
+
   for (positions <- Seq(false, true))
     test(s"a delta over docIds [0, n) equals buildFast over the same docs (positions=$positions)") {
-      // 3 build partitions of ~100 docs split 64-doc shards, so the build
-      // merges boundary drafts the one-partition batch never has
-      val cfg = IndexConfig(docsPerShard = dps, buildPartitions = 3, positions = positions)
-      val built = s"$work/built_$positions"
-      val delta = s"$work/delta_$positions"
-      val bm = IndexBuilder.buildFast(spark, corpus, built, cfg)
-      IncrementalIndexer.indexBatch(spark, spark.read.parquet(s"$corpus/files.parquet"),
-        delta, 0L, cfg)
-      for (t <- Seq("docs", "dlens", "postings", "dict")) {
+      val (built, delta, bm) = pair(positions)
+      for (t <- tables) {
         val (d, b) = (rows(delta, t), rows(built, t))
         assert(d.nonEmpty && d == b, s"$t: ${(d -- b).size} delta-only, ${(b -- d).size} build-only rows")
       }
       assert(IndexBuilder.readMeta(delta) == bm)
+    }
+
+  /** A reader of each of a table's part files. */
+  private def readers(dir: String, table: String): Seq[ParquetFileReader] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(s"$dir/$table.parquet").listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .sortBy(_.getName).toSeq.map(f =>
+        ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), conf)))
+  }
+
+  /** The footers of a table's part files. */
+  private def footers(dir: String, table: String): Seq[ParquetMetadata] =
+    readers(dir, table).map(r => try r.getFooter finally r.close())
+
+  for (positions <- Seq(false, true))
+    test(s"a delta's parquet schemas equal buildFast's; dict pages hold at most 1,000 rows (positions=$positions)") {
+      val (built, delta, _) = pair(positions)
+      for (t <- tables) {
+        val Seq(d) = footers(delta, t)
+        val schemas = footers(built, t).map(_.getFileMetaData.getSchema).distinct
+        assert(schemas == Seq(d.getFileMetaData.getSchema), s"$t:\n delta ${d.getFileMetaData
+          .getSchema}\n build $schemas")
+      }
+      val Seq(reader) = readers(delta, "dict")
+      try {
+        val pageRows = reader.getFooter.getBlocks.asScala.toSeq.flatMap { block =>
+          val term = block.getColumns.asScala.find(_.getPath.toDotString == "term").get
+          val idx = reader.readOffsetIndex(term)
+          (0 until idx.getPageCount).map(i =>
+            (if (i + 1 < idx.getPageCount) idx.getFirstRowIndex(i + 1) else block.getRowCount) -
+              idx.getFirstRowIndex(i))
+        }
+        assert(pageRows.sum == IndexBuilder.readMeta(delta).numTerms && pageRows.size > 1 &&
+          pageRows.forall(_ <= 1000), s"rows per dict page: $pageRows")
+      } finally reader.close()
     }
 
   /** Base = the 300-doc corpus (its last shard, docIds 256..299, is
