@@ -221,21 +221,10 @@ object IndexBuilder {
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dlens.parquet")
     }
 
-    // tombstones ride the same cogroup as the posting segments, one
-    // exclusion row per shard under DeletedTerm (same trick as query time)
-    def exclusionSegs: Dataset[PostingSeg] = tombstoneDf match {
-      case None => spark.emptyDataset[PostingSeg]
-      case Some(ts) =>
-        ts.select($"docId", $"shard").as[(Long, Int)]
-          .groupByKey(_._2)
-          .mapGroups { (shard, it) =>
-            val ids = it.map(_._1).toArray.sorted
-            PostingSeg(graft.query.Searcher.DeletedTerm, shard, ids.length, 0L,
-              Codec.encodeDeltas(ids),
-              Codec.encodeInts(Array.fill(ids.length)(1)),
-              Array(ids.head), Array(0.0f), Array(0), Array(0))
-          }
-    }
+    // tombstones ride the same cogroup as the posting segments, as the
+    // query path's exclusion runs under DeletedTerm
+    def exclusionSegs: Dataset[PostingSeg] = tombstoneDf
+      .fold(spark.emptyDataset[PostingSeg])(graft.query.Searcher.deletedRuns)
 
     val mergedLens = IndexFiles.dlens(spark, Seq(outDir)).as[ShardLens]
     val merged: DataFrame = if (!positional) {

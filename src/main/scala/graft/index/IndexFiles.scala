@@ -2,6 +2,7 @@ package graft.index
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, PathFilter}
@@ -42,8 +43,10 @@ import graft._
   * [[DictReader]] answers term lookups (df and shard list) on the driver
   * with parquet-mr: it picks the dict files whose footer term range covers a
   * term and reads them with a `term` filter, launching no Spark job.
-  * [[lens]] reads the norms rows the same way, and [[TableWriter]] is the
-  * writer twin an ingest batch's one task writes its four tables with.
+  * [[lens]] reads the norms rows the same way, [[tombstoneIds]] the docIds
+  * of a tombstone generation, and [[TableWriter]] is the writer twin an
+  * ingest batch's one task writes its four tables with (and `applyDeletes`
+  * its tombstone generation).
   */
 object IndexFiles {
 
@@ -105,6 +108,21 @@ object IndexFiles {
       requireColumns(path.toString, columnsOf(footer), dlensSchema)
       readRecords(file, footer, conf, FilterCompat.NOOP)(g =>
         ShardLens(g.getInteger("shard", 0), g.getLong("firstDocId", 0), ints(g, "lens")))
+    }
+  }
+
+  /** The docIds of the tombstone generation `table`, read on the driver with
+    * parquet-mr — no Spark job — from every part file, after the footer
+    * column check of each, in file order: a generation Spark wrote in
+    * several parts is neither sorted nor distinct across them.
+    */
+  private[graft] def tombstoneIds(spark: SparkSession, table: String): Array[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    partFilesOf(conf, table).toArray.flatMap { path =>
+      val file = HadoopInputFile.fromPath(path, conf)
+      val footer = footerOf(file)
+      requireColumns(path.toString, columnsOf(footer), tombstoneSchema)
+      readRecords(file, footer, conf, FilterCompat.NOOP)(_.getLong("docId", 0))
     }
   }
 
@@ -214,21 +232,21 @@ object IndexFiles {
       val filter = FilterCompat.get(FilterApi.in(FilterApi.binaryColumn("term"), terms.asJava))
       readRecords(p.file, p.footer, conf, filter)(g =>
         TermStat(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
-          ints(g, "shards")))
+          ints(g, "shards"))).toSeq
     }
   }
 
   /** The records of one part file that pass `filter` (row groups pruned by
     * statistics, pages by the column index), each converted by `row`.
     */
-  private def readRecords[T](file: HadoopInputFile, footer: ParquetMetadata,
-                             conf: Configuration, filter: FilterCompat.Filter)(
-                             row: Group => T): Seq[T] = {
+  private def readRecords[T: ClassTag](file: HadoopInputFile, footer: ParquetMetadata,
+                                       conf: Configuration, filter: FilterCompat.Filter)(
+                                       row: Group => T): Array[T] = {
     val options = HadoopReadOptions.builder(conf).withRecordFilter(filter).build()
     val reader = new ParquetFileReader(file, footer, options, file.newStream())
     val schema = footer.getFileMetaData.getSchema
     val io = new ColumnIOFactory().getColumnIO(schema)
-    val out = Seq.newBuilder[T]
+    val out = Array.newBuilder[T]
     try {
       var pages = reader.readNextFilteredRowGroup()
       while (pages != null) {

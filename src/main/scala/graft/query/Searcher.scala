@@ -218,17 +218,7 @@ class Searcher(spark: SparkSession, indexDir: String,
   private def exclusionSegs(candShards: Seq[Int]): Dataset[PostingSeg] =
     tombstoneDf match {
       case None => spark.emptyDataset[PostingSeg]
-      case Some(ts) =>
-        // r6: runs are packed per scan partition after a LOCAL sort — no
-        // groupByKey exchange. A shard split across partitions yields
-        // several partial runs; [[Searcher.decodeDeleted]] merges arbitrary
-        // partials (distinct + sort), so correctness is unconditional.
-        ts.filter($"shard".isin(candShards: _*))
-          .select($"docId", $"shard")
-          .sortWithinPartitions($"shard", $"docId")
-          .as[(Long, Int)]
-          .mapPartitions(it =>
-            Searcher.packRuns(Searcher.DeletedTerm, it, sumTfPerId = false))
+      case Some(ts) => Searcher.deletedRuns(ts.filter($"shard".isin(candShards: _*)))
     }
 
   /** Driver-side term metadata cache: df (global, summed over base+deltas)
@@ -1520,6 +1510,21 @@ object Searcher {
           new Array[Int](nBlocks), new Array[Int](nBlocks))
       }
     }
+  }
+
+  /** Tombstone rows `(docId, shard)` as exclusion runs under
+    * [[DeletedTerm]], packed per partition after a LOCAL sort — no
+    * groupByKey exchange. A shard split across partitions yields several
+    * partial runs; [[decodeDeleted]] merges arbitrary partials (distinct +
+    * sort), so correctness is unconditional. Queries and compaction both
+    * exclude tombstoned docs through these runs.
+    */
+  private[graft] def deletedRuns(tombstones: DataFrame): Dataset[PostingSeg] = {
+    import tombstones.sparkSession.implicits._
+    tombstones.select($"docId", $"shard")
+      .sortWithinPartitions($"shard", $"docId")
+      .as[(Long, Int)]
+      .mapPartitions(it => packRuns(DeletedTerm, it, sumTfPerId = false))
   }
 
   /** Merge a shard's [[packRuns]] partials — which may INTERLEAVE across

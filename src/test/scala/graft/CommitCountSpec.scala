@@ -8,10 +8,11 @@ import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConfig, IndexMeta, Tombstones}
 import graft.streaming.IncrementalIndexer
 
-/** Commit counts are observed during the writes that produce the tables
-  * (`indexBatch`'s meta.json, the total `applyDeletes` returns, compaction's
-  * meta.json), not re-counted from the written files. Each must equal the
-  * real count of the table it describes.
+/** Commit counts come from the writes that produce the tables
+  * (`indexBatch`'s meta.json, the total `applyDeletes` returns — the length
+  * of the generation it writes — and compaction's meta.json), not from
+  * re-counting the written files. Each must equal the real count of the
+  * table it describes.
   */
 class CommitCountSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

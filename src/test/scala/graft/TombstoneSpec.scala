@@ -1,9 +1,17 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{IndexBuilder, IndexConfig, Tombstones}
+import graft.index.{IndexBuilder, IndexConfig, IndexFiles, Tombstones}
 import graft.oracle.OracleBm25
 import graft.query.Searcher
 
@@ -84,6 +92,80 @@ class TombstoneSpec extends AnyFunSuite {
     assert(or.toSeq ==
       oracleMinus(OracleBm25.topKOr(files, qOr, 10 + deletedIds.size), 10).toSeq)
     assert((and ++ or).forall(h => !deletedIds(h._1)))
+  }
+
+  private lazy val conf = spark.sessionState.newHadoopConf()
+  private def exists(path: String): Boolean =
+    new Path(path).getFileSystem(conf).exists(new Path(path))
+  private def baseKeys(m: Int): DataFrame = spark.read.parquet(s"$indexDir/docs.parquet")
+    .filter($"docId" % m === 0).select("repo", "path", "commit")
+  private def baseIds(ms: Int*): Set[Long] = spark.read.parquet(s"$indexDir/docs.parquet")
+    .select("docId").as[Long].collect().filter(d => ms.exists(d % _ == 0)).toSet
+  /** The (docId, shard) rows of a tombstone generation, in no order. */
+  private def rowsOf(path: String): Set[(Long, Int)] =
+    spark.read.parquet(path).select("docId", "shard").as[(Long, Int)].collect().toSet
+  private def partsOf(path: String): Seq[File] = new File(path).listFiles()
+    .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).sortBy(_.getName).toSeq
+  private def footerSchema(part: File): MessageType = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(part.getPath), conf))
+    try r.getFooter.getFileMetaData.getSchema finally r.close()
+  }
+  private lazy val dps = IndexBuilder.readMeta(indexDir).docsPerShard
+  private def withShards(ids: Set[Long]): Set[(Long, Int)] = ids.map(d => (d, (d / dps).toInt))
+
+  test("a stale <path>.tmp holding junk parts is replaced") {
+    val clean = s"${TestSpark.workDir}/tombstones_clean.parquet"
+    val n = Tombstones.applyDeletes(spark, baseKeys(7), Seq(indexDir), clean)
+    // a crashed call's leftovers: parts of unrelated rows and a torn part
+    val dirty = s"${TestSpark.workDir}/tombstones_dirty.parquet"
+    spark.range(900000L, 900010L).select($"id".as("docId"), lit(0).as("shard"))
+      .repartition(2).write.parquet(s"$dirty.tmp")
+    Files.write(Paths.get(s"$dirty.tmp/part-99999-torn.snappy.parquet"), "junk".getBytes)
+    assert(Tombstones.applyDeletes(spark, baseKeys(7), Seq(indexDir), dirty) == n)
+    assert(rowsOf(dirty) == rowsOf(clean))
+    assert(rowsOf(dirty) == withShards(baseIds(7)))
+    assert(!exists(s"$dirty.tmp"), "the temp generation was left behind")
+  }
+
+  test("with only <path>.bak present, applyDeletes merges that generation") {
+    val path = s"${TestSpark.workDir}/tombstones_bak_only.parquet"
+    Tombstones.applyDeletes(spark, baseKeys(5), Seq(indexDir), path)
+    val fs = new Path(path).getFileSystem(conf)
+    assert(fs.rename(new Path(path), new Path(s"$path.bak")))
+    val n = Tombstones.applyDeletes(spark, baseKeys(7), Seq(indexDir), path)
+    val want = withShards(baseIds(5, 7))
+    assert(n == want.size && rowsOf(path) == want)
+    assert(!exists(s"$path.bak") && !exists(s"$path.tmp"))
+  }
+
+  test("a generation Spark wrote as several unsorted part files merges to the right set") {
+    val path = s"${TestSpark.workDir}/tombstones_spark_parts.parquet"
+    spark.read.parquet(s"$indexDir/docs.parquet").filter($"docId" % 6 === 0)
+      .select($"docId", ($"docId" / dps).cast("int").as("shard"))
+      .repartition(3).write.parquet(path)
+    val parts = partsOf(path)
+    val fileOrder = parts.flatMap(f => spark.read.parquet(f.getPath).select("docId").as[Long]
+      .collect().toSeq)
+    assert(parts.size == 3 && fileOrder != fileOrder.sorted, "fixture must be 3 unsorted parts")
+    val n = Tombstones.applyDeletes(spark, baseKeys(10), Seq(indexDir), path)
+    val want = withShards(baseIds(6, 10))
+    assert(n == want.size && rowsOf(path) == want)
+  }
+
+  test("a tombstone generation is one docId-sorted part of distinct ids, in Spark's schema") {
+    val path = s"${TestSpark.workDir}/tombstones_format.parquet"
+    Tombstones.applyDeletes(spark, baseKeys(4).union(baseKeys(4)), Seq(indexDir), path)
+    Tombstones.applyDeletes(spark, baseKeys(6), Seq(indexDir), path)
+    val parts = partsOf(path)
+    assert(parts.size == 1, s"${parts.size} part files")
+    val ids = spark.read.parquet(parts.head.getPath).select("docId").as[Long].collect().toSeq
+    val ascending = ids.nonEmpty && ids.zip(ids.tail).forall { case (a, b) => a < b }
+    assert(ascending, "the part is not docId-sorted and distinct")
+    assert(ids.toSet == baseIds(4, 6))
+    val ref = s"${TestSpark.workDir}/tombstones_spark_schema.parquet"
+    spark.createDataFrame(java.util.List.of(Row(1L, 0)), IndexFiles.tombstoneSchema)
+      .coalesce(1).write.mode("overwrite").parquet(ref)
+    assert(footerSchema(parts.head) == footerSchema(partsOf(ref).head))
   }
 
   test("filtered (where) search excludes tombstoned docs") {
